@@ -1073,12 +1073,10 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command == "corpus-stream":
+        from etl_olho_vivo_spark.io import append_store
         from etl_olho_vivo_spark.streaming.corpus_stream import (
-            compact_append_store,
             run_corpus_stream,
         )
-
-        from pyspark.errors import AnalysisException
 
         if args.eval_ngram < 1:
             raise SystemExit(
@@ -1086,17 +1084,12 @@ def main(argv: list[str] | None = None) -> int:
             )
         # a file stream needs an explicit schema; lift it from a static
         # read of the same landing dir (footer-only — no data scan)
-        try:
-            schema = spark.read.parquet(args.in_dir).schema
-        except AnalysisException as e:
-            if e.getCondition() in (
-                "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-            ):
-                # nothing has landed (yet) — a cron'd drain should say
-                # so cleanly, not die in a schema-inference traceback
-                raise SystemExit(f"no input files in {args.in_dir}")
-            raise
-        reader = spark.readStream.schema(schema)
+        landing = append_store.read_store(spark, args.in_dir)
+        if landing is None:
+            # nothing has landed (yet) — a cron'd drain should say so
+            # cleanly, not die in a schema-inference traceback
+            raise SystemExit(f"no input files in {args.in_dir}")
+        reader = spark.readStream.schema(landing.schema)
         if args.max_files_per_trigger:
             reader = reader.option(
                 "maxFilesPerTrigger", str(args.max_files_per_trigger)
@@ -1142,22 +1135,14 @@ def main(argv: list[str] | None = None) -> int:
             stats_dims=stats_dims,
         )
         q.awaitTermination()
-        try:
-            n_docs = spark.read.parquet(args.corpus).count()
-        except AnalysisException as e:
-            # a drain that admitted NOTHING leaves only empty partition
-            # dirs (or no dir at all) — that is a valid outcome, not a
-            # crash; anything else must still fail loudly
-            if e.getCondition() in (
-                "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-            ):
-                n_docs = 0
-            else:
-                raise
+        # a drain that admitted NOTHING leaves only empty partition dirs
+        # (or no dir at all) — that is a valid outcome, not a crash
+        corpus = append_store.read_store(spark, args.corpus)
+        n_docs = 0 if corpus is None else corpus.count()
         out = {"command": "corpus-stream", "corpus_docs": n_docs}
         if args.compact:
             if n_docs:
-                out["store_signatures_compacted"] = compact_append_store(
+                out["store_signatures_compacted"] = append_store.compact(
                     spark, args.store
                 )
             else:
@@ -1169,29 +1154,23 @@ def main(argv: list[str] | None = None) -> int:
                 card_from_stats_store,
             )
 
-            try:
+            # a drain that processed ZERO micro-batches (zero-admit
+            # stream, or a no-op replay over an already-drained input)
+            # leaves the stats store empty or absent — a valid outcome
+            # even when the corpus itself is non-empty (n_docs counts
+            # the WHOLE corpus, not this drain); emit the empty card,
+            # don't die.  The mid-life-enablement case (store exists but
+            # misses batches) is caught inside card_from_stats_store via
+            # the corpus_dir coverage check instead.
+            if append_store.read_store(spark, args.stream_stats_dir) is None:
+                card = {"docs": 0, "tokens": 0, "chars": 0,
+                        "by": {}, "len_log2_histogram": {}}
+                if n_docs:
+                    card["partial"] = True
+            else:
                 card = card_from_stats_store(
                     spark, args.stream_stats_dir, corpus_dir=args.corpus
                 )
-            except AnalysisException as e:
-                # a drain that processed ZERO micro-batches (zero-admit
-                # stream, or a no-op replay over an already-drained
-                # input) leaves the stats store empty or absent — a
-                # valid outcome even when the corpus itself is
-                # non-empty (n_docs counts the WHOLE corpus, not this
-                # drain); emit the empty card, don't die.  The
-                # mid-life-enablement case (store exists but misses
-                # batches) is caught inside card_from_stats_store via
-                # the corpus_dir coverage check instead.
-                if e.getCondition() in (
-                    "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-                ):
-                    card = {"docs": 0, "tokens": 0, "chars": 0,
-                            "by": {}, "len_log2_histogram": {}}
-                    if n_docs:
-                        card["partial"] = True
-                else:
-                    raise
             with open(args.stream_datacard, "w") as f:
                 json.dump(card, f, indent=1, sort_keys=True)
             out["datacard"] = args.stream_datacard
@@ -1819,24 +1798,17 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command == "media-stream":
-        from pyspark.errors import AnalysisException
-
+        from etl_olho_vivo_spark.io import append_store
         from etl_olho_vivo_spark.streaming.media_stream import (
-            compact_media_store,
             run_media_stream,
         )
 
         # a file stream needs an explicit schema; lift it from a static
         # read of the same landing dir (footer-only — no data scan)
-        try:
-            schema = spark.read.parquet(args.in_dir).schema
-        except AnalysisException as e:
-            if e.getCondition() in (
-                "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-            ):
-                raise SystemExit(f"no input files in {args.in_dir}")
-            raise
-        reader = spark.readStream.schema(schema)
+        landing = append_store.read_store(spark, args.in_dir)
+        if landing is None:
+            raise SystemExit(f"no input files in {args.in_dir}")
+        reader = spark.readStream.schema(landing.schema)
         if args.max_files_per_trigger:
             reader = reader.option(
                 "maxFilesPerTrigger", str(args.max_files_per_trigger)
@@ -1863,21 +1835,14 @@ def main(argv: list[str] | None = None) -> int:
         except ValueError as e:  # gate/banding config error: exit 2
             raise SystemExit(str(e))
         q.awaitTermination()
-        try:
-            n_docs = spark.read.parquet(args.corpus).count()
-        except AnalysisException as e:
-            # a drain that admitted NOTHING is a valid outcome
-            if e.getCondition() in (
-                "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-            ):
-                n_docs = 0
-            else:
-                raise
+        # a drain that admitted NOTHING is a valid outcome
+        corpus = append_store.read_store(spark, args.corpus)
+        n_docs = 0 if corpus is None else corpus.count()
         out = {"command": "media-stream", "kind": args.kind,
                "corpus_docs": n_docs}
         if args.compact:
             if n_docs:
-                out["store_fingerprints_compacted"] = compact_media_store(
+                out["store_fingerprints_compacted"] = append_store.compact(
                     spark, args.store
                 )
             else:
@@ -1905,23 +1870,18 @@ def main(argv: list[str] | None = None) -> int:
                 media_card_from_stats_store,
             )
 
-            try:
+            # zero-batch drain: empty/missing stats store is a valid
+            # outcome — emit the empty card (partial when the corpus
+            # itself is non-empty), don't die
+            if append_store.read_store(spark, args.media_stats_dir) is None:
+                card = {"kind": args.kind, "docs": 0, "by": {}}
+                if n_docs:
+                    card["partial"] = True
+            else:
                 card = media_card_from_stats_store(
                     spark, args.media_stats_dir, args.kind,
                     corpus_dir=args.corpus,
                 )
-            except AnalysisException as e:
-                # zero-batch drain: empty/missing stats store is a
-                # valid outcome — emit the empty card (partial when
-                # the corpus itself is non-empty), don't die
-                if e.getCondition() in (
-                    "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-                ):
-                    card = {"kind": args.kind, "docs": 0, "by": {}}
-                    if n_docs:
-                        card["partial"] = True
-                else:
-                    raise
             with open(args.media_datacard, "w") as f:
                 json.dump(card, f, indent=1, sort_keys=True)
             out["datacard"] = args.media_datacard

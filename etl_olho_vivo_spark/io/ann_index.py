@@ -19,14 +19,11 @@ Layout:
                         index built under a different grid would rank
                         garbage silently)
     <path>/cells/ingest_batch_id=<id>/cell_id=<c>/
-                        vec_id, label, qv — the build lands in batch
-                        -1; every append overwrites its OWN batch
-                        partition tree, so an at-least-once replay
-                        (streaming foreachBatch, retried jobs) replaces
-                        its prior attempt instead of duplicating it —
-                        the same idempotency design as the dedup
-                        signature store.  ``compact_ivf_index`` folds
-                        accumulated batch partitions back into -1.
+                        vec_id, label, qv — a batch-partitioned append
+                        store (io/append_store.py: per-batch overwrite,
+                        fold-and-swap compaction); the build lands in
+                        batch -1 and ``compact_ivf_index`` folds
+                        accumulated batch partitions back into it.
 
 The cell partitioning is the serving contract at 100 TB: a query with
 ``n_probe`` cells reads ONLY those cell partition directories (Spark
@@ -51,6 +48,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_olho_vivo_spark.io import append_store
 from etl_olho_vivo_spark.io.fsutil import assert_no_pending_swap
 from etl_olho_vivo_spark.operators.similarity import (
     DEFAULT_CELL_OCCUPANCY,
@@ -276,11 +274,9 @@ def append_to_ivf_index(
     meaning without reassigning its residents.  Rebuild the index when
     the corpus distribution drifts (standard IVF practice).
 
-    Idempotent per ``batch_id``: the write overwrites
-    ``cells/ingest_batch_id=<id>`` wholesale, so a replay (streaming
-    at-least-once, retried orchestrator job) replaces its earlier
-    attempt instead of appending duplicates.  ``-1`` is reserved for
-    the build/compacted base.  A batch id at or below the compaction
+    Idempotent per ``batch_id`` (``append_store.write_batch``: a
+    replay replaces its earlier attempt); ``-1`` is reserved for the
+    build/compacted base.  A batch id at or below the compaction
     watermark is a NO-OP: parquet batch writes are job-transactional,
     so a folded batch was COMPLETE when compaction read it — its rows
     already live in the base in full, and skipping the replay keeps
@@ -320,9 +316,9 @@ def append_to_ivf_index(
         return False
     cents = _centroid_frame(spark, path)
     n_cells = cents.count()
-    assigned = ivf_assign(emb_batch, n_cells, cents)
-    assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
-        f"{path}/cells/ingest_batch_id={batch_id}"
+    append_store.write_batch(
+        ivf_assign(emb_batch, n_cells, cents), f"{path}/cells", batch_id,
+        partition_by=("cell_id",),
     )
     return True
 
@@ -360,51 +356,31 @@ def compact_ivf_index(
     rebuilt base.  Callers needing the fold's watermark semantics in
     isolation pass ``auto_rebuild=False``.
 
-    Durability: the merged rows are first written to a SIDE directory
-    (``cells_compacting``), then swapped in under a persistent marker
-    (io/fsutil.py: marker → delete → rename → clear) — at every
-    instant a complete durable copy of the index exists on storage,
-    unlike an in-place overwrite backed only by executor-local
-    checkpoint blocks (one lost executor mid-write would otherwise
-    destroy the index).  A crash in the destructive window is repaired
-    here on the next call; writers refuse while the marker exists, so
-    an intervening append can never recreate the directory and trick
-    recovery into overwriting the only complete copy.  The compaction
-    WATERMARK (highest folded batch id) is recorded before the swap,
-    so a batch replayed after its rows were folded is skipped by
+    Durability: the fold is ``append_store.compact`` (side directory
+    + marker-protected swap; a crash is repaired by the next call,
+    writers refuse while the marker exists).  The compaction WATERMARK
+    (highest folded batch id) is recorded before the swap, so a batch
+    replayed after its rows were folded is skipped by
     ``append_to_ivf_index`` instead of duplicating vectors —
     conservatively: a crash after the watermark but before the swap
     only SKIPS those replays (their data is still in the pre-swap
-    directory), never duplicates.
+    directory), never duplicates.  The fold keeps every column, so an
+    IVF-PQ index's ``codes`` column survives compaction, and the
+    two-level ``ingest_batch_id``/``cell_id`` layout stays uniform (a
+    flat cell_id-only rewrite would leave mixed directory depths once
+    the next append lands, breaking partition discovery).
 
     Returns the compacted vector count.
     """
-    from etl_olho_vivo_spark.io.fsutil import recover_pending_swap, swap_dir
-
     cells_dir = f"{path}/cells"
-    tmp_dir = f"{path}/cells_compacting"
-    if recover_pending_swap(spark, tmp_dir, cells_dir):
-        # the crashed compaction's result is now live — done
-        return spark.read.parquet(cells_dir).count()
-    cells = spark.read.parquet(cells_dir)
-    max_id = cells.agg(F.max("ingest_batch_id")).first()[0]
-    # constant batch -1 keeps the two-level ingest_batch_id/cell_id
-    # layout UNIFORM — a flat cell_id-only rewrite would leave mixed
-    # directory depths once the next append lands, breaking partition
-    # discovery for the whole table.  Column-preserving (drop/re-add the
-    # batch column instead of naming data columns) so an IVF-PQ index's
-    # ``codes`` column survives compaction.
-    (
-        cells.drop("ingest_batch_id")
-        .withColumn("ingest_batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch_id", "cell_id")
-        .parquet(tmp_dir)
-    )
-    if max_id is not None and max_id > _read_watermark(spark, path):
-        _write_watermark(spark, path, int(max_id))
-    swap_dir(spark, tmp_dir, cells_dir)
-    n = spark.read.parquet(cells_dir).count()
+    # None while a crashed swap has the cells moved aside: that
+    # compaction recorded its watermark before swapping
+    cells = append_store.read_store(spark, cells_dir)
+    if cells is not None:
+        max_id = cells.agg(F.max("ingest_batch_id")).first()[0]
+        if max_id is not None and max_id > _read_watermark(spark, path):
+            _write_watermark(spark, path, int(max_id))
+    n = append_store.compact(spark, cells_dir, partition_by=("cell_id",))
     if auto_rebuild:
         if max_occupancy is None:
             max_occupancy = DEFAULT_CELL_OCCUPANCY
@@ -899,9 +875,9 @@ def append_to_ivfpq_index(
     cents = _centroid_frame(spark, path)
     n_cells = cents.count()
     books = _load_pq_codebooks(spark, path)
-    encoded = ivfpq_encode(emb_batch, cents, books, n_cells=n_cells)
-    encoded.write.mode("overwrite").partitionBy("cell_id").parquet(
-        f"{path}/cells/ingest_batch_id={batch_id}"
+    append_store.write_batch(
+        ivfpq_encode(emb_batch, cents, books, n_cells=n_cells),
+        f"{path}/cells", batch_id, partition_by=("cell_id",),
     )
     return True
 

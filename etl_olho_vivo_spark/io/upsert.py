@@ -56,24 +56,15 @@ def upsert_partitioned(
     ]
     if not touched:
         return
-    from pyspark.errors import AnalysisException
+    from etl_olho_vivo_spark.io.append_store import read_store
 
     cols = updates.columns
-    try:
-        existing_raw = spark.read.parquet(path)
-    except AnalysisException as e:
-        # ONLY "no table yet" means first write: a missing path, or an
-        # empty directory left by a died-before-commit first attempt
-        # (Spark creates the dir before committing files — the rerun
-        # must self-heal, not fail until someone deletes it).  Any other
-        # analysis error must surface — swallowing it would overwrite
-        # touched partitions with the bare updates.
-        cond = getattr(e, "getCondition", lambda: None)() or str(e)
-        if not any(
-            c in cond for c in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-        ):
-            raise
-        existing_raw = None
+    # ONLY "no table yet" means first write: a missing path, or an empty
+    # directory left by a died-before-commit first attempt (the rerun
+    # must self-heal, not fail until someone deletes it).  Any other
+    # analysis error surfaces — swallowing it would overwrite touched
+    # partitions with the bare updates.
+    existing_raw = read_store(spark, path)
     if existing_raw is not None:
         # schema drift must fail LOUDLY in both directions: extra update
         # columns break the select below, and a column the table has but

@@ -215,23 +215,6 @@ def datacard(
     return card
 
 
-def _batch_id_partitions(spark: SparkSession, path: str) -> set[str] | None:
-    """The ``ingest_batch_id=`` partition-value set under ``path`` from
-    ONE directory listing (Hadoop FS — works on any scheme the session
-    reaches), or None when the directory does not exist."""
-    from etl_olho_vivo_spark.io.fsutil import hadoop_fs
-
-    fs, p = hadoop_fs(spark, path)
-    if not fs.exists(p):
-        return None
-    ids = set()
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if name.startswith("ingest_batch_id="):
-            ids.add(name.split("=", 1)[1])
-    return ids
-
-
 def card_from_stats_store(
     spark: SparkSession, stats_dir: str, corpus_dir: str | None = None
 ) -> dict:
@@ -276,14 +259,12 @@ def _stamp_if_partial(
     stats store misses ``ingest_batch_id=`` partitions the corpus has
     (stats_dir enabled mid-life) — shared by the text and media card
     store paths."""
-    corpus_ids = _batch_id_partitions(spark, corpus_dir) or set()
-    stats_ids = _batch_id_partitions(spark, stats_dir) or set()
-    missing = corpus_ids - stats_ids
+    from etl_olho_vivo_spark.io.append_store import missing_batches
+
+    missing = missing_batches(spark, stats_dir, corpus_dir)
     if missing:
         card["partial"] = True
-        card["missing_batch_ids"] = sorted(
-            missing, key=lambda s: (len(s), s)
-        )
+        card["missing_batch_ids"] = missing
         card["note"] = (
             "stats store misses corpus batches (stats_dir enabled "
             f"mid-life?); totals undercount — backfill with {backfill} "

@@ -20,18 +20,16 @@ Scale + semantics notes:
   it is ~1% of corpus bytes; each batch touches it through a banded
   equi-join on slim (band, band_sig) keys — the corpus text itself is
   never re-read;
-- both sinks write each batch's Hive partition directory
-  (``ingest_batch_id=<id>``) directly with overwrite: a replayed
-  micro-batch (foreachBatch is at-least-once after failures) replaces
-  exactly its own partition even if the replay admits zero docs —
-  idempotent, no dedup-of-the-dedup needed;
-- the store accumulates one parquet partition per batch; run
-  ``compact_append_store`` (below) on schedule to fold the partitions
-  into one base partition IN PLACE — one signature-sized job that never
+- every store here is a batch-partitioned append store
+  (``io/append_store.py`` carries the layout, the replay idempotence
+  and the compaction swap): each batch overwrites its own partition,
+  a replay excludes its own prior write, and
+  ``append_store.compact`` folds the partitions into one base
+  partition IN PLACE on schedule — one signature-sized job that never
   touches corpus text, after which the stream keeps consuming the same
-  ``store_dir`` (the append-then-compact lifecycle every log-structured
-  store uses).  ``dedup.compact_signature_store`` additionally exports
-  into the doc_id-BUCKETED table layout for the batch incremental path
+  ``store_dir``.  ``dedup.compact_signature_store`` additionally
+  exports into the doc_id-BUCKETED table layout for the batch
+  incremental path
   (``incremental_near_duplicates(store=read_signature_store(...))``);
 - documents with fewer than 3 tokens cannot be shingled and are dropped
   by the signature pass itself (same rule as the batch pipeline).
@@ -43,51 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_olho_vivo_spark.caching import CacheBag
+from etl_olho_vivo_spark.io import append_store
 from etl_olho_vivo_spark.operators import dedup
-
-
-def _store_frame(
-    spark: SparkSession, store_dir: str, exclude_batch_id: int | None = None
-) -> DataFrame | None:
-    """The accumulated signature store, or None before the first batch.
-
-    Existence is probed through Spark's reader, NOT a driver-local
-    filesystem listing: ``store_dir`` is typically on shared/object
-    storage (s3a://, hdfs://) that the driver's local glob cannot see —
-    a local-only check would return "no store" forever and silently
-    admit every cross-batch duplicate.  A missing or still-empty path
-    surfaces as ``AnalysisException`` and means "no store yet".
-
-    ``exclude_batch_id`` drops that batch's OWN partition from the
-    comparison frame: on an at-least-once replay the store already holds
-    the batch's prior signatures under the same doc_ids, and comparing a
-    batch against its own previous write would drop every row — leaving
-    a partially-written batch permanently unrepaired.  Partition-pruned
-    (one directory skipped), so the exclusion is free.  The compacted
-    base partition (``ingest_batch_id = -1``, see
-    ``compact_append_store``) can never collide with a real batch id.
-    """
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = spark.read.parquet(store_dir)
-    except AnalysisException as e:
-        # ONLY the two "store does not exist yet" classes mean no store;
-        # anything else (ACL list-denial that lets writes through,
-        # schema conflict, corruption) must fail LOUDLY — treating it
-        # as "no store" would silently admit every cross-batch dup
-        if e.getCondition() in (
-            "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-        ):
-            return None
-        raise
-    if exclude_batch_id is not None and "ingest_batch_id" in df.columns:
-        # partition-level prune only — the correctness guard against a
-        # batch matching its own earlier write is the doc_new != doc_old
-        # identity filter inside incremental_near_duplicates, which also
-        # covers signatures already folded into the compacted base
-        df = df.filter(F.col("ingest_batch_id") != exclude_batch_id)
-    return df.select("doc_id", "sh", "minhash")
 
 
 def admit_batch(
@@ -121,10 +76,8 @@ def admit_batch(
     at any time without rescanning corpus text — cost ∝ batches.
     ``stats_dims`` names the categorical columns to track (default
     none: totals + length histogram — landing schemas often carry only
-    doc_id + text).  The stats write is the same per-partition
-    overwrite as the corpus/store writes, so at-least-once replays
-    stay idempotent: a replayed batch replaces exactly its own stats
-    partition.
+    doc_id + text).  The stats store is one more batch-partitioned
+    append store, so replays stay idempotent.
 
     ``snapshot_filter`` = ``(bitmap, num_bits, num_hashes)`` from
     ``bloom.read_bloom_filter`` — inter-SNAPSHOT dedup: batch docs
@@ -202,11 +155,7 @@ def admit_batch(
     """
     from etl_olho_vivo_spark.io.fsutil import assert_no_pending_swap
 
-    # a batch landing while a crashed compaction swap is pending would
-    # recreate the store directory and disable the recovery branch —
-    # the ONLY complete copy of the store would then be overwritten by
-    # the next compaction.  Fail loudly instead; the replay succeeds
-    # after compact_append_store recovers.
+    # the replay succeeds after append_store.compact recovers the swap
     assert_no_pending_swap(spark, store_dir)
     if dedup_resolution not in ("greedy", "components"):
         detail = (
@@ -276,10 +225,14 @@ def admit_batch(
             drops = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
         surv_sig = sig.join(drops, "doc_id", "left_anti")
 
-        store = _store_frame(spark, store_dir, exclude_batch_id=batch_id)
+        store = append_store.read_store(
+            spark, store_dir, exclude_batch_id=batch_id
+        )
         if store is not None:
             ipairs = dedup.incremental_near_duplicates(
-                new_sig=surv_sig, store=store, threshold=threshold,
+                new_sig=surv_sig,
+                store=store.select("doc_id", "sh", "minhash"),
+                threshold=threshold,
             )
             sdrops = ipairs.select(
                 F.col("doc_new").alias("doc_id")
@@ -314,79 +267,15 @@ def admit_batch(
         survivors = batch.join(
             surv_sig.select("doc_id"), "doc_id", "left_semi"
         )
-        # write each batch's PARTITION DIRECTORY directly (Hive layout,
-        # column inferred from the path on read) instead of dynamic
-        # partition overwrite: dynamic overwrite only rewrites
-        # partitions PRESENT in the new output, so a replay that admits
-        # zero docs (config changed across a restart, or the in/store
-        # dedup now drops everything) would write nothing and leave the
-        # prior attempt's rows in place.  An explicit per-partition
-        # overwrite replaces the directory even when the frame is empty
-        # — idempotent under at-least-once replay unconditionally.
-        survivors.write.mode("overwrite").parquet(
-            f"{corpus_dir}/ingest_batch_id={batch_id}"
-        )
-        surv_sig.write.mode("overwrite").parquet(
-            f"{store_dir}/ingest_batch_id={batch_id}"
-        )
+        append_store.write_batch(survivors, corpus_dir, batch_id)
+        append_store.write_batch(surv_sig, store_dir, batch_id)
         if stats_dir is not None:
             from etl_olho_vivo_spark.operators.datacard import corpus_stats
 
-            corpus_stats(
-                survivors, text=text, dims=stats_dims
-            ).write.mode("overwrite").parquet(
-                f"{stats_dir}/ingest_batch_id={batch_id}"
+            append_store.write_batch(
+                corpus_stats(survivors, text=text, dims=stats_dims),
+                stats_dir, batch_id,
             )
-
-
-def compact_append_store(spark: SparkSession, store_dir: str) -> int:
-    """Fold the per-batch append partitions into ONE base partition
-    (``ingest_batch_id = -1``), in place.
-
-    Thousands of micro-batches leave thousands of tiny partitions; the
-    banded store join then pays per-file open cost every batch.  This
-    rewrite is one signature-sized job — corpus text is never read.
-    The store is the same ``store_dir`` before and after, so the
-    running stream needs no coordination beyond "don't compact while a
-    batch is mid-write".  A CRASHED batch awaiting replay is safe to
-    compact over: its folded signatures can no longer be excluded by
-    partition, but the ``doc_new != doc_old`` identity guard inside
-    ``incremental_near_duplicates`` keeps the replay from matching its
-    own docs (ids are globally unique), so the rewritten batch
-    partition is complete, not a subset.
-
-    Durability: the merged rows are first written to a SIDE directory
-    (``<store>_compacting``), then swapped in under a persistent marker
-    (io/fsutil.py: marker → delete → rename → clear) — a complete
-    durable copy of the store exists on storage at every instant.  The
-    previous in-place design (overwrite backed only by
-    ``localCheckpoint``) had a loss window: executor-local checkpoint
-    blocks are not fault-tolerant, so one lost executor after the
-    overwrite had cleared the directory would destroy the store.  A
-    crash in the destructive window is repaired here on the next call;
-    ``admit_batch`` refuses to write while the marker exists (a batch
-    landing in the window would otherwise recreate the store directory
-    and trick recovery into discarding the only complete copy).
-
-    Returns the number of signatures in the compacted store.
-    """
-    from etl_olho_vivo_spark.io.fsutil import (
-        recover_pending_swap,
-        swap_dir,
-    )
-
-    tmp_dir = store_dir.rstrip("/") + "_compacting"
-    if recover_pending_swap(spark, tmp_dir, store_dir):
-        return spark.read.parquet(store_dir).count()
-    sig = spark.read.parquet(store_dir).select("doc_id", "sh", "minhash")
-    (
-        sig.withColumn("ingest_batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch_id")
-        .parquet(tmp_dir)
-    )
-    swap_dir(spark, tmp_dir, store_dir)
-    return spark.read.parquet(store_dir).count()
 
 
 def run_corpus_stream(

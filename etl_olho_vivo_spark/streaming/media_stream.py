@@ -43,14 +43,12 @@ Contracts carried over from the corpus stream, same rationale:
   MIRRORS the admitted corpus exactly — opaque/undecodable media (NULL
   fingerprint) are admitted but contribute no store row because they
   can never pair;
-- at-least-once replay is idempotent: the batch's own store partition
-  is excluded from the comparison frame, the ``doc_new != doc_old``
-  identity guard covers rows already folded into the compacted base,
-  and both writes are per-partition overwrites;
-- ``compact_media_store`` folds the per-batch partitions into the
-  ``ingest_batch_id = -1`` base through the same marker-protected
-  side-directory swap (io/fsutil) the signature store uses, and
-  ``admit_media_batch`` refuses to write while a swap is pending.
+- every store here (corpus, fingerprint store, frame index, stats) is
+  a batch-partitioned append store — ``io/append_store.py`` carries
+  the per-batch overwrite, the replay exclusion, the ``doc_new !=
+  doc_old`` identity-guard reasoning and the fold-and-swap
+  ``append_store.compact``; ``admit_media_batch`` refuses to write
+  while a swap is pending.
 """
 
 from __future__ import annotations
@@ -58,6 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_olho_vivo_spark.io import append_store
 from etl_olho_vivo_spark.operators.dedup import (
     _hamming_validate,
     hamming_near_dups,
@@ -168,35 +167,6 @@ def apply_media_gates(
     return fps
 
 
-def _fp_store_frame(
-    spark: SparkSession,
-    store_dir: str,
-    exclude_batch_id: int | None = None,
-    raw: bool = False,
-) -> DataFrame | None:
-    """The accumulated fingerprint store, or None before the first
-    batch.  Same existence/exclusion discipline as the signature
-    store's ``_store_frame`` (probed through Spark's reader so object
-    storage works; ONLY the two "not there yet" error classes mean "no
-    store"; the batch's own partition is pruned for replay safety).
-    ``raw=True`` returns the frame with the partition column intact
-    (``media_store_stats`` groups by it) so a stats call costs ONE
-    directory listing, not two."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = spark.read.parquet(store_dir)
-    except AnalysisException as e:
-        if e.getCondition() in (
-            "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-        ):
-            return None
-        raise
-    if exclude_batch_id is not None and "ingest_batch_id" in df.columns:
-        df = df.filter(F.col("ingest_batch_id") != exclude_batch_id)
-    return df if raw else df.select("doc_id", "fp")
-
-
 def admit_media_batch(
     spark: SparkSession,
     batch: DataFrame,
@@ -287,10 +257,13 @@ def admit_media_batch(
         surv_fps = printable.select("doc_id", "fp").join(
             losers.dropDuplicates(["doc_id"]), "doc_id", "left_anti"
         )  # the store stays slim: metadata never leaves the batch
-        store = _fp_store_frame(spark, store_dir, exclude_batch_id=batch_id)
+        store = append_store.read_store(
+            spark, store_dir, exclude_batch_id=batch_id
+        )
         if store is not None:
             cross = hamming_near_dups_incremental(
-                surv_fps, store, hash_col="fp", bits=FP_BITS,
+                surv_fps, store.select("doc_id", "fp"),
+                hash_col="fp", bits=FP_BITS,
                 max_hamming=max_hamming, n_bands=n_bands,
             )
             cross_losers = cross.select(F.col("doc_new").alias("doc_id"))
@@ -315,23 +288,18 @@ def admit_media_batch(
             "doc_id", "left_anti",
         )
 
-        # per-partition overwrites: idempotent under at-least-once
-        # replay even when this attempt admits zero rows
-        survivors.write.mode("overwrite").parquet(
-            f"{corpus_dir}/ingest_batch_id={batch_id}"
-        )
-        surv_fps.write.mode("overwrite").parquet(
-            f"{store_dir}/ingest_batch_id={batch_id}"
-        )
+        append_store.write_batch(survivors, corpus_dir, batch_id)
+        append_store.write_batch(surv_fps, store_dir, batch_id)
         if frame_index_dir is not None:
             from etl_olho_vivo_spark.operators.multimodal import (
                 video_frame_fingerprints,
             )
 
-            video_frame_fingerprints(
-                survivors.select("doc_id", "media"), stride=frame_stride
-            ).write.mode("overwrite").parquet(
-                f"{frame_index_dir}/ingest_batch_id={batch_id}"
+            append_store.write_batch(
+                video_frame_fingerprints(
+                    survivors.select("doc_id", "media"), stride=frame_stride
+                ),
+                frame_index_dir, batch_id,
             )
         if stats_dir is not None:
             from etl_olho_vivo_spark.operators.datacard import media_stats
@@ -343,9 +311,9 @@ def admit_media_batch(
             admitted_fps = admitted.join(
                 losers.dropDuplicates(["doc_id"]), "doc_id", "left_anti"
             )
-            media_stats(admitted_fps, kind).write.mode(
-                "overwrite"
-            ).parquet(f"{stats_dir}/ingest_batch_id={batch_id}")
+            append_store.write_batch(
+                media_stats(admitted_fps, kind), stats_dir, batch_id
+            )
     finally:
         fps.unpersist()
         bag.release()
@@ -360,13 +328,13 @@ def media_store_stats(spark: SparkSession, store_dir: str) -> dict:
     per-file open cost long before data volume matters.  One bounded
     aggregation (one result row per batch partition); the skew summary
     reuses ``io.ann_index.occupancy_stats`` so the formula can never
-    drift between the two artifacts.  Run ``compact_media_store`` when
+    drift between the two artifacts.  Run ``append_store.compact`` when
     ``n_partitions`` grows past a few dozen — the ``media-stream`` CLI
     emits this dict after every drain so the drift is visible in job
     artifacts."""
     from etl_olho_vivo_spark.io.ann_index import occupancy_stats
 
-    raw = _fp_store_frame(spark, store_dir, raw=True)
+    raw = append_store.read_store(spark, store_dir)
     if raw is None:
         return {"n_partitions": 0, "fingerprints": 0,
                 "max_partition": 0, "mean_partition": 0.0,
@@ -389,32 +357,6 @@ def media_store_stats(spark: SparkSession, store_dir: str) -> dict:
     }
 
 
-def compact_media_store(spark: SparkSession, store_dir: str) -> int:
-    """Fold the per-batch fingerprint partitions into ONE base
-    partition (``ingest_batch_id = -1``), in place, through the
-    marker-protected side-directory swap — same durability story as
-    ``compact_append_store`` (a complete copy of the store exists on
-    storage at every instant; a crash in the window is repaired on the
-    next call).  Returns the compacted row count."""
-    from etl_olho_vivo_spark.io.fsutil import (
-        recover_pending_swap,
-        swap_dir,
-    )
-
-    tmp_dir = store_dir.rstrip("/") + "_compacting"
-    if recover_pending_swap(spark, tmp_dir, store_dir):
-        return spark.read.parquet(store_dir).count()
-    fp = spark.read.parquet(store_dir).select("doc_id", "fp")
-    (
-        fp.withColumn("ingest_batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch_id")
-        .parquet(tmp_dir)
-    )
-    swap_dir(spark, tmp_dir, store_dir)
-    return spark.read.parquet(store_dir).count()
-
-
 def frame_index_coverage(
     spark: SparkSession, frame_index_dir: str, corpus_dir: str
 ) -> dict:
@@ -428,18 +370,10 @@ def frame_index_coverage(
     when the index misses corpus ``ingest_batch_id=`` partitions, with
     the backfill pointer (``video-index`` over the corpus).  Costs two
     directory listings — safe to emit after every drain."""
-    from etl_olho_vivo_spark.operators.datacard import (
-        _batch_id_partitions,
-    )
-
-    corpus_ids = _batch_id_partitions(spark, corpus_dir) or set()
-    index_ids = _batch_id_partitions(spark, frame_index_dir) or set()
-    missing = corpus_ids - index_ids
+    missing = append_store.missing_batches(spark, frame_index_dir, corpus_dir)
     cov = {"partial": bool(missing)}
     if missing:
-        cov["missing_batch_ids"] = sorted(
-            missing, key=lambda s: (len(s), s)
-        )
+        cov["missing_batch_ids"] = missing
         cov["note"] = (
             "frame index misses corpus batches (frame-index-dir "
             "enabled mid-life?); video-contain would miss containments "

@@ -7,6 +7,8 @@ import os
 
 import pytest
 
+from tests.store_kinds import KINDS
+
 BASE = (
     "the quick brown fox jumps over the lazy dog and runs far away "
     "to find some interesting things in the forest near the river"
@@ -218,20 +220,18 @@ def test_store_compaction_roundtrip(spark, dirs, tmp_path):
 
 @pytest.mark.sweep
 def test_append_store_compaction_in_place(spark, dirs):
-    """compact_append_store folds per-batch partitions into the -1 base
+    """append_store.compact folds per-batch partitions into the -1 base
     partition IN PLACE; the stream keeps deduping against the same
     store_dir afterwards, and a replay of a post-compaction batch still
     excludes only its own partition (never the base)."""
-    from etl_olho_vivo_spark.streaming.corpus_stream import (
-        admit_batch,
-        compact_append_store,
-    )
+    from etl_olho_vivo_spark.io import append_store
+    from etl_olho_vivo_spark.streaming.corpus_stream import admit_batch
 
     admit_batch(spark, spark.createDataFrame([(1, BASE)], SCHEMA), 0,
                 dirs["corpus"], dirs["store"])
     admit_batch(spark, spark.createDataFrame([(2, OTHER)], SCHEMA), 1,
                 dirs["corpus"], dirs["store"])
-    assert compact_append_store(spark, dirs["store"]) == 2
+    assert append_store.compact(spark, dirs["store"]) == 2
     store = spark.read.parquet(dirs["store"])
     assert [r["ingest_batch_id"] for r in
             store.select("ingest_batch_id").distinct().collect()] == [-1]
@@ -289,25 +289,24 @@ def test_replay_that_admits_nothing_clears_prior_partition(spark, dirs):
 
 
 @pytest.mark.sweep
-def test_compaction_ignores_session_dynamic_overwrite_mode(spark, dirs):
-    """compact_append_store must fully replace the store even when the
+@pytest.mark.parametrize("kind", KINDS)
+def test_compaction_ignores_session_dynamic_overwrite_mode(spark, dirs, kind):
+    """append_store.compact must fully replace the store even when the
     SESSION default partitionOverwriteMode is dynamic — otherwise only
     the -1 partition is rewritten and every per-batch partition
-    survives, duplicating all signatures on each compaction."""
-    from etl_olho_vivo_spark.streaming.corpus_stream import (
-        admit_batch,
-        compact_append_store,
-    )
+    survives, duplicating all signatures on each compaction.  Run over
+    both admit loops' stores (signature and fingerprint)."""
+    from etl_olho_vivo_spark.io import append_store
+    from tests.store_kinds import admit, payloads
 
-    admit_batch(spark, spark.createDataFrame([(1, BASE)], SCHEMA), 0,
-                dirs["corpus"], dirs["store"])
-    admit_batch(spark, spark.createDataFrame([(2, OTHER)], SCHEMA), 1,
-                dirs["corpus"], dirs["store"])
+    base, other = payloads(kind)[:2]
+    admit(spark, kind, [(1, base)], 0, dirs["corpus"], dirs["store"])
+    admit(spark, kind, [(2, other)], 1, dirs["corpus"], dirs["store"])
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "dynamic")
     try:
-        assert compact_append_store(spark, dirs["store"]) == 2
+        assert append_store.compact(spark, dirs["store"]) == 2
     finally:
         if prev is None:
             spark.conf.unset(key)
@@ -327,14 +326,12 @@ def test_replay_of_compacted_batch_keeps_it_complete(spark, dirs):
     — the doc_new != doc_old identity guard must keep every doc, or the
     replay would self-match at jaccard 1.0 and rewrite the corpus
     partition as a subset (permanent loss)."""
-    from etl_olho_vivo_spark.streaming.corpus_stream import (
-        admit_batch,
-        compact_append_store,
-    )
+    from etl_olho_vivo_spark.io import append_store
+    from etl_olho_vivo_spark.streaming.corpus_stream import admit_batch
 
     batch = spark.createDataFrame([(1, BASE), (2, OTHER)], SCHEMA)
     admit_batch(spark, batch, 0, dirs["corpus"], dirs["store"])
-    assert compact_append_store(spark, dirs["store"]) == 2
+    assert append_store.compact(spark, dirs["store"]) == 2
     admit_batch(spark, batch, 0, dirs["corpus"], dirs["store"])
     ids = sorted(
         r["doc_id"] for r in spark.read.parquet(dirs["corpus"]).collect()

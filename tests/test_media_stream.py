@@ -156,13 +156,13 @@ def test_admit_media_batches_cross_batch_and_replay(spark, dirs):
 
 @pytest.mark.sweep
 def test_media_store_compaction_then_dedup_vs_base(spark, dirs):
-    """compact_media_store folds the per-batch partitions into the -1
+    """append_store.compact folds the per-batch partitions into the -1
     base; a later batch still dedups against the folded fingerprints
     (and a replayed batch relies on the identity guard, not partition
     exclusion, once its rows are in the base)."""
+    from etl_olho_vivo_spark.io import append_store
     from etl_olho_vivo_spark.streaming.media_stream import (
         admit_media_batch,
-        compact_media_store,
     )
 
     admit_media_batch(
@@ -173,7 +173,7 @@ def test_media_store_compaction_then_dedup_vs_base(spark, dirs):
         spark, spark.createDataFrame([(2, _img(40))], SCHEMA),
         1, dirs["corpus"], dirs["store"],
     )
-    assert compact_media_store(spark, dirs["store"]) == 2
+    assert append_store.compact(spark, dirs["store"]) == 2
     store = spark.read.parquet(dirs["store"])
     assert [r["ingest_batch_id"] for r in
             store.select("ingest_batch_id").distinct().collect()] == [-1]
@@ -190,7 +190,7 @@ def test_media_store_compaction_then_dedup_vs_base(spark, dirs):
     # replay batch 2 AFTER its rows were folded by a second compaction:
     # partition exclusion can no longer see them — the doc_new !=
     # doc_old identity guard must keep the batch from dropping itself
-    assert compact_media_store(spark, dirs["store"]) == 3
+    assert append_store.compact(spark, dirs["store"]) == 3
     admit_media_batch(
         spark, spark.createDataFrame(
             [(5, _img(5, tweak=9)), (6, _img(90))], SCHEMA

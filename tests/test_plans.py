@@ -360,19 +360,43 @@ def test_trigram_counts_share_one_cached_windows_aggregate(spark):
     from etl_olho_vivo_spark.operators import lm
     from etl_olho_vivo_spark.sources.tables import read_table
 
+    from tests.plan_walk import (
+        cache_id,
+        cache_scans,
+        count_nodes,
+        executed_plan,
+    )
+
     # an earlier registry run may have left ctx/ng cached in the session
     # bag; Spark's cache manager would then substitute those relations
-    # wholesale and nest their reprints, skewing the textual counts
+    # wholesale, hiding the windows aggregate under another cache layer
     release_session_caches()
     d = read_table(spark, SF, "documents")
     bag = CacheBag()
     try:
         ctx, ng, _ = lm.ngram_counts(d, order=3, caches=bag)
+        windows, tokens = set(), set()
         for df in (ctx, ng):
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            # exactly one cache read and no scan OUTSIDE it (the single
-            # FileScan string is the cached relation's textual reprint)
-            assert plan.count("InMemoryTableScan") == 1, plan[:2000]
-            assert plan.count("FileScan") == 1, plan[:2000]
+            plan = executed_plan(df)
+            # one cache read (the windows aggregate) and no scan outside it
+            outer = count_nodes(plan)
+            assert outer["InMemoryTableScanExec"] == 1, outer
+            assert outer["FileSourceScanExec"] == 0, outer
+            (agg_scan,) = cache_scans(plan)
+            windows.add(cache_id(agg_scan))
+            # the aggregate's build reads the cached token frame, and
+            # nothing else scans the corpus
+            agg_build = agg_scan.relation().cachedPlan()
+            inner = count_nodes(agg_build)
+            assert inner["InMemoryTableScanExec"] == 1, inner
+            assert inner["FileSourceScanExec"] == 0, inner
+            (tok_scan,) = cache_scans(agg_build)
+            tokens.add(cache_id(tok_scan))
+            # exactly one corpus scan beneath the whole tree
+            assert count_nodes(plan, into_cache=True)[
+                "FileSourceScanExec"
+            ] == 1
+        # ctx and ng share ONE windows aggregate over ONE token frame
+        assert len(windows) == 1 and len(tokens) == 1
     finally:
         bag.release()
