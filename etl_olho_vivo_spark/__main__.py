@@ -1266,14 +1266,13 @@ def main(argv: list[str] | None = None) -> int:
         if args.append:
             bid = args.batch_id
             if bid is None:
-                # next id after whatever has landed — the compaction
-                # watermark participates: after a compact, the live max
-                # is -1 but ids <= watermark are replay-skipped, so
-                # max()+1 over the cells tree alone would silently
-                # drop the append
-                from etl_olho_vivo_spark.io.ann_index import next_batch_id
+                # next id past whatever has landed AND been folded:
+                # ids <= the compaction watermark are replay-skipped
+                from etl_olho_vivo_spark.io import append_store
 
-                bid = next_batch_id(spark, args.index)
+                bid = append_store.next_batch_id(
+                    spark, f"{args.index}/cells"
+                )
             # route by the tree's own type marker: an IVF-PQ index
             # must ingest residual-encoded rows (append_to_ivf_index
             # refuses PQ trees so codes-less rows can't poison ADC)

@@ -21,9 +21,11 @@ Layout:
     <path>/cells/ingest_batch_id=<id>/cell_id=<c>/
                         vec_id, label, qv — a batch-partitioned append
                         store (io/append_store.py: per-batch overwrite,
-                        fold-and-swap compaction); the build lands in
-                        batch -1 and ``compact_ivf_index`` folds
-                        accumulated batch partitions back into it.
+                        fold-and-swap compaction, and the watermark
+                        that skips replays of folded batches); the
+                        build replaces the tree with batch -1 and
+                        ``compact_ivf_index`` folds accumulated batch
+                        partitions back into it.
 
 The cell partitioning is the serving contract at 100 TB: a query with
 ``n_probe`` cells reads ONLY those cell partition directories (Spark
@@ -110,121 +112,16 @@ def build_ivf_index(
         .write.mode("overwrite")
         .parquet(f"{path}/centroids")
     )
-    assigned = ivf_assign(emb, n_cells, _centroid_frame(spark, path))
-    # static overwrite of the WHOLE cells tree: a rebuild over a
-    # previously-appended index must also clear the old batch
-    # partitions — they were assigned under the OLD centroids, and
-    # surviving the rebuild they would route queries to wrong cells
-    # (and duplicate any re-indexed vec_ids)
-    (
-        assigned.withColumn("ingest_batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("ingest_batch_id", "cell_id")
-        .parquet(f"{path}/cells")
+    # replace the WHOLE cells tree: a rebuild over a previously-appended
+    # index must also clear the old batch partitions — they were
+    # assigned under the OLD centroids, and surviving the rebuild they
+    # would route queries to wrong cells (and duplicate any re-indexed
+    # vec_ids) — and the old generation's watermark with them
+    append_store.write_base(
+        ivf_assign(emb, n_cells, _centroid_frame(spark, path)),
+        f"{path}/cells", partition_by=("cell_id",),
     )
-    # a rebuild starts the batch lifecycle over — clear any compaction
-    # watermark left by the previous index generation
-    _write_watermark(spark, path, -1)
     return spark.read.parquet(f"{path}/cells").count()
-
-
-_WATERMARK = "compacted_through"
-
-
-def _write_watermark(spark: SparkSession, path: str, batch_id: int) -> None:
-    """Single small text file.  A value must survive a crash at ANY
-    instant: a lost watermark reads as -1 and a replayed already-folded
-    batch would duplicate its vectors.  A bare delete-then-rename has a
-    window where no file exists, so the old value is parked as ``.bak``
-    until the new one is in place (the rename-only protocol):
-
-        write tmp → (rename live → .bak) → rename tmp → live → drop .bak
-
-    ``_read_watermark`` falls back to ``.bak`` when the live file is
-    missing — at every instant one durable copy is readable, and the
-    stalest it can be is the previous watermark, which is conservative
-    in the same direction as compaction's own crash ordering (an old
-    value only makes appends SKIP less, and the batch partitions those
-    appends rewrite still exist until the compaction swap completes)."""
-    from etl_olho_vivo_spark.io.fsutil import checked_rename, hadoop_fs
-
-    final = f"{path}/{_WATERMARK}"
-    fs, final_p = hadoop_fs(spark, final)
-    _, tmp_p = hadoop_fs(spark, final + "._tmp")
-    _, bak_p = hadoop_fs(spark, final + ".bak")
-    out = fs.create(tmp_p, True)
-    out.write(str(int(batch_id)).encode("ascii"))
-    out.close()
-    if fs.exists(final_p):
-        # a stale .bak may only be discarded while the LIVE file exists
-        # — in the crash-recovery path (live missing, .bak the only
-        # durable copy) deleting it first would leave just the
-        # unreadable tmp, and a second crash there reads as -1 and
-        # replays folded batches as duplicates
-        if fs.exists(bak_p):
-            fs.delete(bak_p, False)
-        checked_rename(fs, final_p, bak_p)
-    checked_rename(fs, tmp_p, final_p)
-    fs.delete(bak_p, False)
-
-
-def _read_watermark(spark: SparkSession, path: str) -> int:
-    """Highest batch id folded into the base by compaction (-1 = none).
-    Indexes created before watermarking existed read as -1; a crash
-    inside ``_write_watermark``'s rename window is covered by the
-    ``.bak`` fallback; an unreadable value is a LOUD error (guessing
-    low would duplicate folded batches, guessing high would drop new
-    ones)."""
-    from etl_olho_vivo_spark.io.fsutil import hadoop_fs
-
-    final = f"{path}/{_WATERMARK}"
-    fs, final_p = hadoop_fs(spark, final)
-    read_p = final_p
-    if not fs.exists(final_p):
-        _, bak_p = hadoop_fs(spark, final + ".bak")
-        if not fs.exists(bak_p):
-            return -1
-        read_p = bak_p
-    stream = fs.open(read_p)
-    try:
-        data = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    try:
-        return int(data.strip())
-    except ValueError:
-        raise IOError(
-            f"unreadable compaction watermark at {read_p} "
-            f"({data!r}); restore it to the highest folded batch id "
-            f"before appending"
-        )
-
-
-def next_batch_id(spark: SparkSession, path: str) -> int:
-    """The smallest batch id a fresh append can actually land under.
-
-    ``max(ingest_batch_id) + 1`` alone is WRONG right after a
-    compaction: the fold collapses every batch into -1, so the max
-    reads -1 and the "next" id becomes 0 — at or below the compaction
-    watermark, which ``append_to_ivf_index`` must skip (its rows would
-    otherwise duplicate the folded base on a genuine replay).  The
-    watermark therefore participates: next = max(live max, watermark)
-    + 1.  Streaming ingestion never needs this — its ids come from the
-    checkpoint's monotonic batch counter — but ad-hoc CLI appends do.
-    """
-    cells_max = (
-        spark.read.parquet(f"{path}/cells")
-        .agg(F.max("ingest_batch_id"))
-        .first()[0]
-    )
-    base = max(
-        cells_max if cells_max is not None else -1,
-        _read_watermark(spark, path),
-    )
-    return base + 1
 
 
 def _centroid_frame(spark: SparkSession, path: str) -> DataFrame:
@@ -274,22 +171,15 @@ def append_to_ivf_index(
     meaning without reassigning its residents.  Rebuild the index when
     the corpus distribution drifts (standard IVF practice).
 
-    Idempotent per ``batch_id`` (``append_store.write_batch``: a
-    replay replaces its earlier attempt); ``-1`` is reserved for the
-    build/compacted base.  A batch id at or below the compaction
-    watermark is a NO-OP: parquet batch writes are job-transactional,
-    so a folded batch was COMPLETE when compaction read it — its rows
-    already live in the base in full, and skipping the replay keeps
-    at-least-once restarts safe even across a compaction (rewriting
-    the partition would duplicate every vector instead).  Caveat, as
-    for the corpus stream: a replay must carry the same content as the
-    original attempt — don't change assignment-relevant config across
-    a restart with uncommitted batches.
+    Idempotent per ``batch_id`` by ``append_store.write_batch``: a
+    replay replaces its earlier attempt, and a batch already folded by
+    compaction is skipped (the replay rule in ``io/append_store.py``);
+    ``-1`` is reserved for the build/compacted base.
 
     Returns True when the batch was written, False when it was skipped
     as already-folded — callers issuing NEW (non-replay) data must
-    treat False as a loud signal to re-derive the id (``next_batch_id``
-    exists for exactly that), never as success.
+    treat False as a loud signal to re-derive the id
+    (``append_store.next_batch_id``), never as success.
     """
     if batch_id < 0:
         raise ValueError(
@@ -311,16 +201,12 @@ def append_to_ivf_index(
             f"append with append_to_ivfpq_index so batch rows carry "
             f"codes; plain-IVF appends would serve NULL adc_dist"
         )
-    wm = _read_watermark(spark, path)
-    if batch_id <= wm:
-        return False
     cents = _centroid_frame(spark, path)
     n_cells = cents.count()
-    append_store.write_batch(
+    return append_store.write_batch(
         ivf_assign(emb_batch, n_cells, cents), f"{path}/cells", batch_id,
         partition_by=("cell_id",),
     )
-    return True
 
 
 def compact_ivf_index(
@@ -348,39 +234,29 @@ def compact_ivf_index(
     explicitly; the fixed-grid degradation the 10× scale tier measured
     is then the caller's documented responsibility.
 
-    Generation interaction: a triggered rebuild resets the watermark
-    to -1 (fresh index generation — ``maybe_rebuild_ivf_index``'s
-    long-standing contract, same as the explicit CLI
-    ``--compact --rebuild-if-skewed`` sequence), so pre-rebuild batch
-    ids must not be replayed afterward; their rows already live in the
-    rebuilt base.  Callers needing the fold's watermark semantics in
-    isolation pass ``auto_rebuild=False``.
+    Generation interaction: a triggered rebuild replaces the cells
+    tree and its watermark (fresh index generation —
+    ``maybe_rebuild_ivf_index``'s long-standing contract, same as the
+    explicit CLI ``--compact --rebuild-if-skewed`` sequence), so
+    pre-rebuild batch ids must not be replayed afterward; their rows
+    already live in the rebuilt base.  Callers needing the fold's
+    watermark semantics in isolation pass ``auto_rebuild=False``.
 
-    Durability: the fold is ``append_store.compact`` (side directory
-    + marker-protected swap; a crash is repaired by the next call,
-    writers refuse while the marker exists).  The compaction WATERMARK
-    (highest folded batch id) is recorded before the swap, so a batch
-    replayed after its rows were folded is skipped by
-    ``append_to_ivf_index`` instead of duplicating vectors —
-    conservatively: a crash after the watermark but before the swap
-    only SKIPS those replays (their data is still in the pre-swap
-    directory), never duplicates.  The fold keeps every column, so an
-    IVF-PQ index's ``codes`` column survives compaction, and the
-    two-level ``ingest_batch_id``/``cell_id`` layout stays uniform (a
-    flat cell_id-only rewrite would leave mixed directory depths once
-    the next append lands, breaking partition discovery).
+    Durability and replay: the fold is ``append_store.compact`` (side
+    directory + marker-protected swap that publishes the rows and the
+    watermark together; a crash is repaired by the next call, writers
+    refuse while the marker exists, and a replay of a folded batch is
+    skipped — see ``io/append_store.py``).  The fold keeps every
+    column, so an IVF-PQ index's ``codes`` column survives compaction,
+    and the two-level batch/``cell_id`` layout stays uniform (a flat
+    cell_id-only rewrite would leave mixed directory depths once the
+    next append lands, breaking partition discovery).
 
     Returns the compacted vector count.
     """
-    cells_dir = f"{path}/cells"
-    # None while a crashed swap has the cells moved aside: that
-    # compaction recorded its watermark before swapping
-    cells = append_store.read_store(spark, cells_dir)
-    if cells is not None:
-        max_id = cells.agg(F.max("ingest_batch_id")).first()[0]
-        if max_id is not None and max_id > _read_watermark(spark, path):
-            _write_watermark(spark, path, int(max_id))
-    n = append_store.compact(spark, cells_dir, partition_by=("cell_id",))
+    n = append_store.compact(
+        spark, f"{path}/cells", partition_by=("cell_id",)
+    )
     if auto_rebuild:
         if max_occupancy is None:
             max_occupancy = DEFAULT_CELL_OCCUPANCY
@@ -516,8 +392,9 @@ def maybe_rebuild_ivf_index(
     from the snapshot REGARDLESS of current skew — the cells tree may be
     half-overwritten at that point, so the snapshot is the authoritative
     corpus and re-running the build from it is idempotent.  The snapshot
-    is deleted only after the rebuild (centroids + cells + watermark
-    reset) completes.  Single-writer assumption, as for compaction.
+    is deleted only after the rebuild (centroids + cells, which
+    replaces the watermark) completes.  Single-writer assumption, as
+    for compaction.
 
     Returns ``{"rebuilt": False, "stats": ...}`` when under threshold,
     else ``{"rebuilt": True, "stats_before": ... | None (crash resume),
@@ -621,7 +498,8 @@ def run_embedding_stream(
     batch partition — idempotent under at-least-once replay by the
     ``append_to_ivf_index`` contract (replay overwrites its own
     partition; a replay of a batch already folded by compaction is a
-    no-op, since its rows live in the base in full).  The index must
+    no-op — the replay rule in ``io/append_store.py``, whose increasing
+    ids the checkpoint's batch counter supplies).  The index must
     exist (``build_ivf_index`` / ``build_ivfpq_index``) before the
     stream starts; centroid load is validated once per batch through
     the stamped grid.  The appender is chosen per batch from the tree's
@@ -803,8 +681,9 @@ def build_ivfpq_index(
     per-vector (cell_id, codes) — the cells tree carries BOTH the
     quantized vector (for exact re-rank / rebuilds) and the slim code
     array (what the ADC stage scans; parquet columnar layout means an
-    ADC scan never reads the qv bytes).  Same partition layout,
-    watermark, and overwrite discipline as ``build_ivf_index``."""
+    ADC scan never reads the qv bytes).  Same whole-tree replacement
+    as ``build_ivf_index`` (``append_store.write_base``: batch
+    partitions and watermark go with it)."""
     if n_cells < 1:
         raise ValueError(f"n_cells must be >= 1, got {n_cells}")
     cents = (
@@ -824,15 +703,10 @@ def build_ivfpq_index(
         emb, cent_frame, n_cells=n_cells, m_sub=m_sub, k_codes=k_codes
     )
     _write_pq_codebooks(spark, path, books)
-    encoded = ivfpq_encode(emb, cent_frame, books, n_cells=n_cells)
-    (
-        encoded.withColumn("ingest_batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("ingest_batch_id", "cell_id")
-        .parquet(f"{path}/cells")
+    append_store.write_base(
+        ivfpq_encode(emb, cent_frame, books, n_cells=n_cells),
+        f"{path}/cells", partition_by=("cell_id",),
     )
-    _write_watermark(spark, path, -1)
     return spark.read.parquet(f"{path}/cells").count()
 
 
@@ -861,8 +735,8 @@ def append_to_ivfpq_index(
     """Assign + residual-encode a batch against the PERSISTED centroids
     and codebooks and land it under its own partition tree — the same
     frozen-quantizer, idempotent-per-batch contract as
-    ``append_to_ivf_index`` (whose docstring carries the full replay /
-    watermark reasoning)."""
+    ``append_to_ivf_index`` (replays of folded batches are skipped by
+    the replay rule in ``io/append_store.py``)."""
     if batch_id < 0:
         raise ValueError(
             f"batch_id must be >= 0 (-1 is the build partition), "
@@ -870,16 +744,13 @@ def append_to_ivfpq_index(
         )
     spark = emb_batch.sparkSession
     assert_no_pending_swap(spark, f"{path}/cells")
-    if batch_id <= _read_watermark(spark, path):
-        return False
     cents = _centroid_frame(spark, path)
     n_cells = cents.count()
     books = _load_pq_codebooks(spark, path)
-    append_store.write_batch(
+    return append_store.write_batch(
         ivfpq_encode(emb_batch, cents, books, n_cells=n_cells),
         f"{path}/cells", batch_id, partition_by=("cell_id",),
     )
-    return True
 
 
 def query_ivfpq_index(

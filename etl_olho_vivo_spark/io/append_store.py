@@ -1,5 +1,6 @@
-"""Batch-partitioned append stores: write a batch, read the store
-(excluding a batch), fold-and-swap compaction, coverage.
+"""Batch-partitioned append stores: write a batch or the base, read the
+store (excluding a batch), fold-and-swap compaction with its replay
+watermark, coverage.
 
 The reference keeps reruns idempotent by rewriting a whole day file;
 every incremental store the engine keeps generalizes that into an
@@ -7,10 +8,11 @@ append-per-batch, compact-on-schedule lifecycle — the admit loops'
 corpus, signature / fingerprint, stats and frame-index stores
 (``streaming/corpus_stream.py``, ``streaming/media_stream.py``) and
 the IVF index's cell tree (``io/ann_index.py``).  This is the only
-module that knows their layout and the swap protocol:
+module that knows their layout, the swap protocol and the watermark:
 
     <dir>/ingest_batch_id=<id>/...   one Hive partition per batch
-    <dir>/ingest_batch_id=-1/...     the compacted base
+    <dir>/ingest_batch_id=-1/...     the compacted (or built) base
+    <dir>/_compacted_through         highest batch id folded into it
 
 Durability and replay, once for every store:
 
@@ -51,15 +53,33 @@ Durability and replay, once for every store:
   marker exists (``fsutil.assert_no_pending_swap``): a batch landing in
   that window would recreate the directory and trick recovery into
   discarding the only complete copy.  A CRASHED batch awaiting replay
-  is safe to compact over: batch writes are job-transactional, so its
-  folded rows are complete, and the identity guard keeps the replay
-  from matching them.
+  is safe to compact over: batch writes are job-transactional, so
+  either all its rows are folded (and the watermark below skips the
+  replay) or none are (and the replay lands).
+- The replay rule: a batch already folded into the base must not land
+  again.  ``compact`` writes the highest folded batch id (the
+  WATERMARK, taken from the batch ids of the data files the fold
+  reads, so a crashed batch's directory holding no committed files
+  stays replayable) as ``<dir>_compacting/_compacted_through`` before
+  the swap, so the rows and their watermark are published by the same
+  rename — a crash cannot leave one without the other.  ``write_batch``
+  skips (returns False) any ``batch_id <= watermark``: the folded rows
+  were complete when compaction read them, so rewriting the partition
+  would only duplicate them beside the base.  ``write_base`` replaces
+  the whole tree, watermark included, so a rebuild starts a fresh
+  generation.  Batch ids must therefore INCREASE per store (a
+  streaming checkpoint's batch counter does; ad-hoc writers derive
+  theirs with ``next_batch_id``), and a replay must carry the same
+  content as its original attempt.  The parquet reader ignores the
+  ``_``-prefixed file.
 - ``missing_batches`` is the coverage check between two stores fed by
   the same loop (a stats store or frame index vs its corpus): a store
   enabled after the first drain silently lacks the earlier batches.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -73,15 +93,60 @@ from etl_olho_vivo_spark.io.fsutil import (
 
 BATCH_COL = "ingest_batch_id"
 BASE_BATCH_ID = -1
+_WATERMARK = "_compacted_through"
+_BATCH_DIR = re.compile(rf"/{BATCH_COL}=(-?\d+)/")
+
+
+def watermark(spark: SparkSession, dir: str) -> int:
+    """Highest batch id folded into the base (-1 = none).  An
+    unparsable value is a LOUD error: guessing low would duplicate
+    folded batches, guessing high would drop new ones."""
+    fs, p = hadoop_fs(spark, f"{dir}/{_WATERMARK}")
+    if not fs.exists(p):
+        return BASE_BATCH_ID
+    stream = fs.open(p)
+    try:
+        data = spark._jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8"
+        )
+    finally:
+        stream.close()
+    try:
+        return int(data.strip())
+    except ValueError:
+        raise IOError(
+            f"unreadable compaction watermark at {dir}/{_WATERMARK} "
+            f"({data!r}); restore it to the highest folded batch id "
+            f"before appending"
+        )
 
 
 def write_batch(
     df: DataFrame, dir: str, batch_id: int, partition_by: tuple = ()
-) -> None:
+) -> bool:
     """Overwrite ``dir/ingest_batch_id=<batch_id>`` with ``df`` (split
-    further by ``partition_by``), even when ``df`` is empty."""
+    further by ``partition_by``), even when ``df`` is empty.  Returns
+    False without writing when the batch is already folded into the
+    base (``batch_id <= watermark``)."""
+    if batch_id <= watermark(df.sparkSession, dir):
+        return False
     df.write.mode("overwrite").partitionBy(*partition_by).parquet(
         f"{dir}/{BATCH_COL}={batch_id}"
+    )
+    return True
+
+
+def write_base(df: DataFrame, dir: str, partition_by: tuple = ()) -> None:
+    """Replace the whole tree — every batch partition and the watermark
+    — with ``df`` as the base partition.  Static overwrite whatever the
+    session default: under dynamic overwrite partitions ``df`` does not
+    write would survive."""
+    (
+        df.withColumn(BATCH_COL, F.lit(BASE_BATCH_ID))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .partitionBy(BATCH_COL, *partition_by)
+        .parquet(dir)
     )
 
 
@@ -105,38 +170,47 @@ def compact(
     spark: SparkSession, dir: str, partition_by: tuple = ()
 ) -> int:
     """Fold every batch partition into the base partition, in place,
-    keeping every data column; returns the compacted row count.  After
-    a crashed swap this first restores the crashed call's result."""
+    keeping every data column, and advance the watermark; returns the
+    compacted row count.  After a crashed swap this first restores the
+    crashed call's result."""
     tmp_dir = dir.rstrip("/") + "_compacting"
     if recover_pending_swap(spark, tmp_dir, dir):
         # the crashed compaction's result is now live — done
         return spark.read.parquet(dir).count()
-    # static overwrite whatever the session default: under dynamic
-    # overwrite a leftover side directory would keep partitions this
-    # fold does not write, and the swap would publish them
-    (
-        spark.read.parquet(dir)
-        .drop(BATCH_COL)
-        .withColumn(BATCH_COL, F.lit(BASE_BATCH_ID))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy(BATCH_COL, *partition_by)
-        .parquet(tmp_dir)
-    )
+    src = spark.read.parquet(dir)
+    # the watermark comes from the files the fold reads (one listing,
+    # no job), not from directory names: a crashed batch's directory
+    # with no committed files was not folded and must stay replayable
+    ids = (_BATCH_DIR.search(f) for f in src.inputFiles())
+    folded = max([watermark(spark, dir)] + [int(m[1]) for m in ids if m])
+    write_base(src.drop(BATCH_COL), tmp_dir, partition_by)
+    fs, p = hadoop_fs(spark, f"{tmp_dir}/{_WATERMARK}")
+    out = fs.create(p, True)
+    try:
+        out.write(str(folded).encode("ascii"))
+    finally:
+        out.close()
     swap_dir(spark, tmp_dir, dir)
     return spark.read.parquet(dir).count()
 
 
-def _batch_ids(spark: SparkSession, dir: str) -> set[str]:
+def _batch_ids(spark: SparkSession, dir: str) -> set[int]:
     fs, p = hadoop_fs(spark, dir)
     if not fs.exists(p):
         return set()
     prefix = f"{BATCH_COL}="
     return {
-        name[len(prefix):]
+        int(name[len(prefix):])
         for name in (st.getPath().getName() for st in fs.listStatus(p))
         if name.startswith(prefix)
     }
+
+
+def next_batch_id(spark: SparkSession, dir: str) -> int:
+    """The smallest batch id a fresh write can land under — past every
+    listed batch AND the watermark (after a compaction the listing
+    shows only the base), from one directory listing."""
+    return max(_batch_ids(spark, dir) | {watermark(spark, dir)}) + 1
 
 
 def missing_batches(
@@ -145,4 +219,4 @@ def missing_batches(
     """Batch ids ``corpus_dir`` has and ``dir`` lacks, in numeric
     order — one directory listing each (Hadoop FS, any scheme)."""
     missing = _batch_ids(spark, corpus_dir) - _batch_ids(spark, dir)
-    return sorted(missing, key=lambda s: (len(s), s))
+    return [str(i) for i in sorted(missing)]

@@ -508,8 +508,8 @@ def near_duplicates(
     signature cache's release — the caller unpersists after materializing
     the pairs.  Without a bag the cache has session lifetime (LRU-bounded).
     Alternatively pass a precomputed ``sig`` frame — (doc_id, sh, minhash),
-    e.g. a slice of one shared ``minhash_signature`` pass or a
-    ``read_signature_store`` frame — and no cache is created here at all
+    e.g. a slice of one shared ``minhash_signature`` pass or an
+    ``append_store.read_store`` frame — and no cache is created here at all
     (the caller owns the signature relation's lifetime).
     """
     if sig is None:
@@ -741,78 +741,6 @@ def keep_best_per_component(
         quality_col,
         (F.col(id_col) == F.col("kept_id")).alias("kept"),
     )
-
-
-def write_signature_store(
-    df: DataFrame | None = None,
-    path: str = "",
-    text: str = "text",
-    n_buckets: int = 32,
-    sig: DataFrame | None = None,
-) -> None:
-    """Persist the MinHash signature store as parquet, bucketed by doc_id.
-
-    The 100 TB dedup story is incremental: a new crawl batch must dedup
-    against the existing corpus WITHOUT rescanning or re-hashing it.
-    Signatures are ~1% of corpus size; materializing them once turns
-    every later batch's dedup into (batch-signature compute) + (band join
-    against the store).  ``doc_id``-bucketing keeps the verify join's
-    store side pre-shuffled on disk.
-
-    Pass ``sig`` (doc_id, sh, minhash) to write precomputed signatures —
-    the compaction path (``compact_signature_store``) uses this so the
-    corpus text is never re-hashed.
-    """
-    if not path:
-        raise ValueError(
-            "write_signature_store requires an explicit path (an empty "
-            "path would land the table silently in the warehouse dir)"
-        )
-    if sig is None:
-        if df is None:
-            raise ValueError("write_signature_store needs df or sig")
-        sig = minhash_signature(df, text).select("doc_id", "sh", "minhash")
-    else:
-        sig = sig.select("doc_id", "sh", "minhash")
-    (
-        sig.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, "doc_id")
-        .sortBy("doc_id")
-        .option("path", path)
-        .saveAsTable(_store_table(path))
-    )
-
-
-def compact_signature_store(
-    spark, append_dir: str, path: str, n_buckets: int = 32
-) -> int:
-    """Compact a batch-partitioned append store (the streaming ingestion
-    loop's ``store_dir``) into the doc_id-bucketed layout.
-
-    The append store accumulates one small parquet partition per
-    micro-batch — correct, but the verify join must shuffle it every
-    batch.  Compaction is ONE signature-sized job (never touches corpus
-    text): read the accumulated signatures, write them back bucketed and
-    sorted so the store side of every later join is pre-shuffled on
-    disk.  Returns the number of signatures compacted.  The
-    log-structured lifecycle: append per batch, compact on schedule.
-    """
-    sig = spark.read.parquet(append_dir).select("doc_id", "sh", "minhash")
-    write_signature_store(sig=sig, path=path, n_buckets=n_buckets)
-    return read_signature_store(spark, path).count()
-
-
-def _store_table(path: str) -> str:
-    # content-derived, session-stable name (Python's hash() is seed-random)
-    import hashlib
-
-    return "sigstore_" + hashlib.md5(path.encode()).hexdigest()[:12]
-
-
-def read_signature_store(spark, path: str) -> DataFrame:
-    """Read a signature store written by ``write_signature_store``."""
-    return spark.table(_store_table(path))
 
 
 def incremental_near_duplicates(

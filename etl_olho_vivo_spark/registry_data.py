@@ -335,9 +335,10 @@ SELECT doc_a, doc_b, jaccard, kind FROM scored_inc WHERE jaccard >= 0.5
     "parity) into an existing 'store' corpus and a new 'batch' crawl; "
     "self-dedup within each half plus incremental_near_duplicates "
     "batch-vs-store, all three from ONE shared signature pass.  The "
-    "parquet/bucketed round-trip of the store relation "
-    "(write_signature_store) is value-preserving by construction and "
-    "pinned in tests/test_operators.py.",
+    "parquet round-trip of the store relation through the append store "
+    "(io/append_store.py, what the streaming admit loop reads) is "
+    "value-preserving by construction and pinned in "
+    "tests/test_operators.py.",
 )
 def q_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_olho_vivo_spark.caching import SESSION_BAG
@@ -345,7 +346,7 @@ def q_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
     # ONE signature pass over the corpus, sliced into the store/batch
     # halves — exactly what a production loop does (store signatures come
-    # back from write_signature_store's parquet, never recomputed)
+    # back from the append store's parquet, never recomputed)
     sig = SESSION_BAG.add(
         dedup.minhash_signature(d).select("doc_id", "sh", "minhash")
     )

@@ -27,10 +27,7 @@ Scale + semantics notes:
   ``append_store.compact`` folds the partitions into one base
   partition IN PLACE on schedule — one signature-sized job that never
   touches corpus text, after which the stream keeps consuming the same
-  ``store_dir``.  ``dedup.compact_signature_store`` additionally
-  exports into the doc_id-BUCKETED table layout for the batch
-  incremental path
-  (``incremental_near_duplicates(store=read_signature_store(...))``);
+  ``store_dir``; a replay of a batch it folded is skipped;
 - documents with fewer than 3 tokens cannot be shingled and are dropped
   by the signature pass itself (same rule as the batch pipeline).
 """

@@ -339,8 +339,8 @@ def media_store_stats(spark: SparkSession, store_dir: str) -> dict:
         return {"n_partitions": 0, "fingerprints": 0,
                 "max_partition": 0, "mean_partition": 0.0,
                 "skew_ratio": None}
-    key = "ingest_batch_id" if "ingest_batch_id" in raw.columns \
-        else F.lit(-1)
+    batch_col = append_store.BATCH_COL
+    key = batch_col if batch_col in raw.columns else F.lit(-1)
     counts = [
         int(r["n"])
         for r in raw.groupBy(key).agg(

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from etl_olho_vivo_spark.io import ann_index
+from etl_olho_vivo_spark.io import ann_index, append_store
 from etl_olho_vivo_spark.operators import similarity
 from etl_olho_vivo_spark.sources.tables import read_table
 
@@ -298,18 +298,19 @@ def test_next_batch_id_and_loud_watermark_skip(spark, emb, tmp_path):
     append_to_ivf_index skips.  next_batch_id must account for the
     watermark, and the skip must be observable (returns False)."""
     path = str(tmp_path / "index")
+    cells = f"{path}/cells"
     ann_index.build_ivf_index(
         emb.filter(F.col("vec_id") < 100), path, n_cells=4,
         use_kmeans=False,
     )
-    assert ann_index.next_batch_id(spark, path) == 0
+    assert append_store.next_batch_id(spark, cells) == 0
     assert ann_index.append_to_ivf_index(
         emb.filter(F.col("vec_id").between(100, 199)), path, batch_id=0
     )
-    assert ann_index.next_batch_id(spark, path) == 1
+    assert append_store.next_batch_id(spark, cells) == 1
     ann_index.compact_ivf_index(spark, path)
     # live max is now -1; the watermark (0) must still advance the id
-    assert ann_index.next_batch_id(spark, path) == 1
+    assert append_store.next_batch_id(spark, cells) == 1
     # a replay of the folded batch is a SKIP, visibly
     assert not ann_index.append_to_ivf_index(
         emb.filter(F.col("vec_id").between(100, 199)), path, batch_id=0
@@ -318,36 +319,39 @@ def test_next_batch_id_and_loud_watermark_skip(spark, emb, tmp_path):
     # the derived id lands new data
     assert ann_index.append_to_ivf_index(
         emb.filter(F.col("vec_id").between(200, 249)), path,
-        batch_id=ann_index.next_batch_id(spark, path),
+        batch_id=append_store.next_batch_id(spark, cells),
     )
     assert ann_index.load_ivf_index(spark, path).cells.count() == 250
 
 
 def test_watermark_survives_mid_rename_crash(spark, emb, tmp_path):
-    """_write_watermark parks the live value as .bak before renaming the
-    new one into place; a crash inside that window must read the OLD
-    value (conservative), never -1 (which would replay folded batches
-    as new and duplicate their vectors)."""
+    """The watermark lives inside the cells tree, so the compaction swap
+    publishes it with the rows.  A crash inside the swap's rename window
+    (cells moved aside, marker present) must keep it: writers refuse,
+    the next compaction restores the tree with its watermark, and a
+    replay of the folded batch is skipped, never duplicated."""
     import os
+    import shutil
 
     path = str(tmp_path / "index")
+    cells = f"{path}/cells"
     ann_index.build_ivf_index(
         emb.filter(F.col("vec_id") < 100), path, n_cells=4,
         use_kmeans=False,
     )
-    ann_index.append_to_ivf_index(
-        emb.filter(F.col("vec_id").between(100, 199)), path, batch_id=0
-    )
-    ann_index.compact_ivf_index(spark, path)
-    assert ann_index._read_watermark(spark, path) == 0
-    # simulate the crash window: live renamed to .bak, tmp not yet in
-    wm = f"{path}/{ann_index._WATERMARK}"
-    os.rename(wm, wm + ".bak")
-    assert ann_index._read_watermark(spark, path) == 0
-    # and a subsequent write repairs the state cleanly
-    ann_index._write_watermark(spark, path, 3)
-    assert ann_index._read_watermark(spark, path) == 3
-    assert not os.path.exists(wm + ".bak")
+    batch0 = emb.filter(F.col("vec_id").between(100, 199))
+    assert ann_index.append_to_ivf_index(batch0, path, batch_id=0)
+    assert ann_index.compact_ivf_index(spark, path) == 200
+    # simulate: marker created, cells deleted, rename not yet done
+    shutil.move(cells, f"{path}/cells_compacting")
+    open(f"{path}/cells_swap_pending", "w").close()
+    with pytest.raises(RuntimeError, match="crashed mid-swap"):
+        ann_index.append_to_ivf_index(batch0, path, batch_id=1)
+    assert ann_index.compact_ivf_index(spark, path) == 200
+    assert not os.path.exists(f"{path}/cells_swap_pending")
+    assert append_store.watermark(spark, cells) == 0
+    assert not ann_index.append_to_ivf_index(batch0, path, batch_id=0)
+    assert ann_index.load_ivf_index(spark, path).cells.count() == 200
 
 
 @pytest.mark.sweep
@@ -519,8 +523,8 @@ def test_occupancy_rebuild_trigger_end_to_end(spark, emb, tmp_path):
     }
     assert brute <= served
     # (d) lifecycle: the rebuild starts a fresh index generation
-    assert ann_index._read_watermark(spark, path) == -1
-    assert ann_index.next_batch_id(spark, path) == 0
+    assert append_store.watermark(spark, f"{path}/cells") == -1
+    assert append_store.next_batch_id(spark, f"{path}/cells") == 0
     extra = emb.filter(F.col("vec_id").between(200, 249))
     assert ann_index.append_to_ivf_index(extra, path, batch_id=0)
     # auto_rebuild off: this assertion checks the FOLD's watermark
@@ -530,7 +534,7 @@ def test_occupancy_rebuild_trigger_end_to_end(spark, emb, tmp_path):
     assert ann_index.compact_ivf_index(
         spark, path, auto_rebuild=False
     ) == 550
-    assert ann_index._read_watermark(spark, path) == 0
+    assert append_store.watermark(spark, f"{path}/cells") == 0
 
 
 @pytest.mark.sweep
@@ -563,7 +567,7 @@ def test_rebuild_crash_resume_from_snapshot(spark, emb, tmp_path):
     assert not os.path.exists(f"{path}/{ann_index._REBUILD_SRC}")
     idx = ann_index.load_ivf_index(spark, path)
     assert idx.cells.count() == 100
-    assert ann_index._read_watermark(spark, path) == -1
+    assert append_store.watermark(spark, f"{path}/cells") == -1
 
 
 def test_dequantized_cells_roundtrip_is_lossless(spark, emb, tmp_path):

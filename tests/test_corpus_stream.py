@@ -181,10 +181,11 @@ def test_zero_caches_after_each_batch(spark, dirs):
 
 
 @pytest.mark.sweep
-def test_store_compaction_roundtrip(spark, dirs, tmp_path):
-    """append-per-batch store → compact_signature_store → bucketed store
+def test_store_compaction_roundtrip(spark, dirs):
+    """append-per-batch store → append_store.compact → compacted store
     with identical signatures, usable as the incremental join's store
     side (and never re-reading corpus text)."""
+    from etl_olho_vivo_spark.io import append_store
     from etl_olho_vivo_spark.operators import dedup
     from etl_olho_vivo_spark.streaming.corpus_stream import admit_batch
 
@@ -192,30 +193,26 @@ def test_store_compaction_roundtrip(spark, dirs, tmp_path):
                 dirs["corpus"], dirs["store"])
     admit_batch(spark, spark.createDataFrame([(2, OTHER)], SCHEMA), 1,
                 dirs["corpus"], dirs["store"])
-    compacted = str(tmp_path / "store_bucketed")
-    try:
-        n = dedup.compact_signature_store(spark, dirs["store"], compacted)
-        assert n == 2
-        store = dedup.read_signature_store(spark, compacted)
-        appended = spark.read.parquet(dirs["store"]).select(
+
+    def sigs():
+        return append_store.read_store(spark, dirs["store"]).select(
             "doc_id", "sh", "minhash"
         )
-        assert sorted(map(tuple, store.collect())) == sorted(
-            map(tuple, appended.collect())
-        )
-        # the compacted store drives the incremental join
-        pairs = dedup.incremental_near_duplicates(
-            new_docs=spark.createDataFrame([(9, BASE)], SCHEMA),
-            store=store,
-            threshold=0.5,
-        )
-        assert [
-            (r["doc_new"], r["doc_old"]) for r in pairs.collect()
-        ] == [(9, 1)]
-    finally:
-        spark.sql(
-            f"DROP TABLE IF EXISTS {dedup._store_table(compacted)}"
-        )
+
+    appended = sorted(map(tuple, sigs().collect()))
+    n = append_store.compact(spark, dirs["store"])
+    assert n == 2
+    store = sigs()
+    assert sorted(map(tuple, store.collect())) == appended
+    # the compacted store drives the incremental join
+    pairs = dedup.incremental_near_duplicates(
+        new_docs=spark.createDataFrame([(9, BASE)], SCHEMA),
+        store=store,
+        threshold=0.5,
+    )
+    assert [
+        (r["doc_new"], r["doc_old"]) for r in pairs.collect()
+    ] == [(9, 1)]
 
 
 @pytest.mark.sweep

@@ -576,15 +576,20 @@ def test_simhash_near_dups_banded(spark, docs):
 def test_incremental_near_dup_against_store(spark, docs, tmp_path):
     """New-batch dedup against a persisted signature store: only the new
     batch is hashed; known near-dup must surface, disjoint docs must not."""
+    from etl_olho_vivo_spark.io import append_store
     from etl_olho_vivo_spark.operators.dedup import (
         incremental_near_duplicates,
-        read_signature_store,
-        write_signature_store,
+        minhash_signature,
     )
 
     store_path = str(tmp_path / "sigstore")
-    write_signature_store(docs, store_path)
-    store = read_signature_store(spark, store_path)
+    append_store.write_batch(
+        minhash_signature(docs).select("doc_id", "sh", "minhash"),
+        store_path, 0,
+    )
+    store = append_store.read_store(spark, store_path).select(
+        "doc_id", "sh", "minhash"
+    )
     # store skips un-shingleable docs (< 3 tokens), keeps the rest
     assert sorted(r["doc_id"] for r in store.select("doc_id").collect()) == [
         1, 2, 3, 4,
@@ -597,15 +602,10 @@ def test_incremental_near_dup_against_store(spark, docs, tmp_path):
         ],
         ["doc_id", "text"],
     )
-    try:
-        hits = incremental_near_duplicates(new, store, threshold=0.5)
-        got = {(r["doc_new"], r["doc_old"]) for r in hits.collect()}
-        assert (100, 1) in got and (100, 4) in got
-        assert all(dn != 101 for dn, _ in got)
-    finally:
-        from etl_olho_vivo_spark.operators.dedup import _store_table
-
-        spark.sql(f"DROP TABLE IF EXISTS {_store_table(store_path)}")
+    hits = incremental_near_duplicates(new, store, threshold=0.5)
+    got = {(r["doc_new"], r["doc_old"]) for r in hits.collect()}
+    assert (100, 1) in got and (100, 4) in got
+    assert all(dn != 101 for dn, _ in got)
 
 
 def test_resample_grid_ffill_and_gaps(spark):
@@ -908,14 +908,13 @@ def test_session_bag_releases_registry_query_caches(spark):
 def test_incremental_matches_parquet_store_roundtrip(spark, tmp_path):
     """The driver-checked minhash_near_dups row feeds an IN-MEMORY store
     slice to incremental_near_duplicates; the production loop reads the
-    store back from bucketed parquet.  Both must yield identical pairs —
-    this pins the equivalence the registry docstring claims."""
+    store back from its append store's parquet.  Both must yield
+    identical pairs — this pins the equivalence the registry docstring
+    claims."""
+    from etl_olho_vivo_spark.io import append_store
     from etl_olho_vivo_spark.operators.dedup import (
         incremental_near_duplicates,
         minhash_signature,
-        read_signature_store,
-        write_signature_store,
-        _store_table,
     )
     from etl_olho_vivo_spark.sources.tables import read_table
 
@@ -930,17 +929,16 @@ def test_incremental_matches_parquet_store_roundtrip(spark, tmp_path):
     mem_pairs = {(r["doc_new"], r["doc_old"], r["jaccard"]) for r in mem.collect()}
 
     path = str(tmp_path / "sigstore")
-    write_signature_store(store_docs, path)
-    try:
-        pq = incremental_near_duplicates(
-            new_docs=batch_docs,
-            store=read_signature_store(spark, path),
-            threshold=0.5,
-            persist=False,
-        )
-        pq_pairs = {(r["doc_new"], r["doc_old"], r["jaccard"]) for r in pq.collect()}
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {_store_table(path)}")
+    append_store.write_batch(mem_store, path, 0)
+    pq = incremental_near_duplicates(
+        new_docs=batch_docs,
+        store=append_store.read_store(spark, path).select(
+            "doc_id", "sh", "minhash"
+        ),
+        threshold=0.5,
+        persist=False,
+    )
+    pq_pairs = {(r["doc_new"], r["doc_old"], r["jaccard"]) for r in pq.collect()}
     assert mem_pairs == pq_pairs and len(mem_pairs) > 0
 
 
