@@ -24,6 +24,23 @@ Registry queries — which must return a LAZY frame through a fixed
 materialization — register caches in the module-level ``SESSION_BAG``;
 harnesses that materialize each query (bench.py does) call
 ``release_session_caches()`` between queries.
+
+Persist or cut.  ``bag.add`` persists: the frame keeps its whole plan,
+and the CacheManager serves the cache to any canonically equal plan.
+Operator-internal caches need exactly that (``lm._ref_token_frame``
+and every ``SESSION_BAG`` entry rely on a later, independently built
+plan finding the existing cache), so they persist.  ``bag.cut``
+materializes the frame once and replaces its plan with one leaf
+reading the stored blocks.  Cut a frame that later stages consume and
+whose lineage holds other caches: a persisted frame's plan prints the
+whole build plan of every cache under it at each reference, and Spark
+renders that text again in every SQL start and AQE update event, so
+plans over nested caches grow with each stage built on them (the
+corpus pipeline's survivor chain reached 164k plan lines per write).
+The trade-off: a cut frame cannot be recomputed, so losing an
+executor's blocks fails the read instead of re-deriving them.  In this
+engine's ``local[n]`` sessions an executor loss is a driver loss, which
+ends the job either way.
 """
 
 from __future__ import annotations
@@ -33,15 +50,18 @@ from pyspark.storagelevel import StorageLevel
 
 
 class CacheBag:
-    """A set of persisted DataFrames released together.
+    """A set of persisted or cut DataFrames released together.
 
     ``add`` persists the frame (MEMORY_AND_DISK — spill, don't recompute)
-    and tracks it; ``release`` unpersists everything tracked.  Safe to
-    release frames that were never materialized, and safe to call twice.
+    and tracks it; ``cut`` materializes it behind a lineage cut and
+    tracks the backing RDD; ``release`` unpersists everything tracked.
+    Safe to release frames that were never materialized, and safe to
+    call twice.
     """
 
     def __init__(self) -> None:
         self._frames: list[DataFrame] = []
+        self._rdds: list = []
 
     def add(
         self,
@@ -52,13 +72,33 @@ class CacheBag:
         self._frames.append(out)
         return out
 
+    def cut(self, df: DataFrame) -> DataFrame:
+        """``df`` stored at its first action, behind a plan of one leaf.
+
+        A lazy local checkpoint: the returned frame's plan is a single
+        ``LogicalRDD`` over MEMORY_AND_DISK blocks, so nothing built on it
+        re-prints ``df``'s lineage.  Under AQE the call itself already
+        runs ``df``'s shuffle stages (executing an adaptive plan
+        materializes them); the first action runs the last stage and
+        stores its rows.  ``release`` unpersists that RDD; a read after
+        release fails (the lineage is gone) instead of recomputing."""
+        out = df.localCheckpoint(
+            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
+        )
+        leaf = out._jdf.queryExecution().logical()
+        self._rdds.append(leaf.rdd())
+        return out
+
     def release(self) -> None:
         frames, self._frames = self._frames, []
+        rdds, self._rdds = self._rdds, []
         for df in frames:
             df.unpersist()
+        for rdd in rdds:
+            rdd.unpersist(False)
 
     def __len__(self) -> int:
-        return len(self._frames)
+        return len(self._frames) + len(self._rdds)
 
     def __enter__(self) -> "CacheBag":
         return self

@@ -588,13 +588,10 @@ def connected_components(
     round's persisted frame is handed to ``caches`` (or the session
     bag) directly — it is already materialized by that round's own
     action, so no copy is made — and the caller unpersists
-    deterministically after consuming.  An earlier version returned a
-    ``localCheckpoint`` instead; its backing RDD cannot be unpersisted
-    safely (truncated lineage → data loss on release) and lingers until
-    the async ContextCleaner collects the reference, i.e. an unbounded
-    soft leak under repeated pipeline runs.  A bag-tracked persist is
-    both releasable and recomputable (the full label-propagation plan
-    stays attached, so an evicted block re-derives instead of failing).
+    deterministically after consuming.  It stays a persist, not a
+    ``CacheBag.cut``: a cut would store a second copy of a frame that
+    is already resident, and the attached label-propagation plan lets
+    an evicted block re-derive instead of failing.
 
     Per-round cost (round 16): ONE job.  The fixpoint check rides the
     propagation aggregate itself — the old label is one tagged branch

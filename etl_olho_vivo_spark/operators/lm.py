@@ -906,18 +906,22 @@ def kneser_ney_counts(
     ).select(F.col("h_2").alias("h_1"), "cc1")
     if caches is not None:
         cc1_full = caches.add(cc1_full)
-    scal = cc1_full.agg(
-        F.sum("cc1").cast("long").alias("nbb"),
-        F.count(F.lit(1)).alias("t1"),
-    ).collect()[0]
-    v = (
-        toks
-        .select(F.explode_outer("wh").alias("h"))
-        .filter(F.col("h").isNotNull())
-        .agg(F.count_distinct("h").alias("v"))
-        .collect()[0]["v"]
+    # the three leaf scalars in ONE action: the two one-row aggregates
+    # cross-joined, so training pays one planning and event round for
+    # them instead of two
+    scal = (
+        cc1_full.agg(
+            F.sum("cc1").cast("long").alias("nbb"),
+            F.count(F.lit(1)).alias("t1"),
+        )
+        .crossJoin(
+            toks.select(F.explode_outer("wh").alias("h"))
+            .filter(F.col("h").isNotNull())
+            .agg(F.count_distinct("h").alias("v"))
+        )
+        .collect()[0]
     )
-    nbb, t1 = scal["nbb"] or 0, scal["t1"]
+    nbb, t1, v = scal["nbb"] or 0, scal["t1"], scal["v"]
     if nbb == 0 or v == 0:
         raise ValueError(
             "Kneser-Ney reference corpus has no bigrams/vocabulary — "

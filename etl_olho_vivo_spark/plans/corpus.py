@@ -17,6 +17,10 @@ Scale notes (the 100 TB story):
 - the profile frame is persisted once and feeds every stage count plus
   the survivor joins (MEMORY_AND_DISK: at scale it spills, never
   recomputes the text scan);
+- the survivor frame is cut (``CacheBag.cut``) after near-dup removal
+  and after the LM gate: each later plan starts from one stored leaf,
+  so neither the profile/dedup/LSH lineage nor the nested caches under
+  it are re-planned or re-printed per stage;
 - exact dedup is one uniform hash shuffle on the md5 fingerprint; the
   survivor set comes back as a ``left_semi`` join on (fingerprint,
   doc_id) — no full-row shuffle of the corpus;
@@ -285,7 +289,6 @@ def run_corpus(
             d, mode=span_dedup, k=span_k, min_count=span_min_count
         )
     prof = document_profile(d).persist(StorageLevel.MEMORY_AND_DISK)
-    survived = None
     sig_caches = CacheBag()
     drop_caches = CacheBag()
     stage_caches = CacheBag()
@@ -371,17 +374,18 @@ def run_corpus(
             )
         # eagerly materialize the (small) drop list so the LSH band +
         # verify joins never re-execute, then release the signature
-        # store near_duplicates cached for them.  drop_caches (not a
-        # localCheckpoint: its backing RDD is un-releasable and soft-
-        # leaks until the ContextCleaner runs) lives until the finally —
-        # the anti-join below must still see the materialized list.
+        # store near_duplicates cached for them.  drop_caches lives
+        # until the finally: the survivor cut below materializes at its
+        # first count, and its build plan still reads the list.
         drops = drop_caches.add(drops)
         drops.count()
         sig_caches.release()
-        kept = kept.join(drops, "doc_id", "left_anti").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        survived = kept  # handle for the finally-unpersist
+        # cut, not persist: every later stage (the LM gate's training
+        # and scoring plans, each gate, the write) starts from this one
+        # leaf instead of re-printing the profile, exact-dedup and LSH
+        # lineage under each nested cache in every plan event
+        # (caching.py); stage_caches releases it in the finally
+        kept = stage_caches.cut(kept.join(drops, "doc_id", "left_anti"))
         stats["near_dedup"] = kept.count()
 
         kept = kept.filter(F.col("quality_score") >= min_quality)
@@ -445,7 +449,9 @@ def run_corpus(
                 ).filter(F.col("cross_entropy") > lm_max_entropy).select(
                     "doc_id"
                 )
-            kept = stage_caches.add(
+            # cut: the scoring plan nests the LM's count caches, which
+            # every later plan (and the write) would re-print otherwise
+            kept = stage_caches.cut(
                 kept.join(failing, "doc_id", "left_anti")
             )
             stats["lm_filter"] = kept.count()
@@ -714,8 +720,6 @@ def run_corpus(
         return stats
     finally:
         prof.unpersist()
-        if survived is not None:
-            survived.unpersist()
         # idempotent: sig_caches is normally already empty here, but an
         # exception between near_duplicates and the explicit release
         # (e.g. the dedup_resolution ValueError) must not leak it

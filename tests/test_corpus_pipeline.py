@@ -6,6 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+SF = "/root/testdata/sf0.001"
+
 
 @pytest.fixture(scope="module")
 def corpus_out(spark, tmp_path_factory):
@@ -190,27 +192,129 @@ def test_cachebag_owns_signature_lifecycle(spark):
     assert jmap().size() == before
 
 
+def test_cachebag_cut_materializes_behind_one_leaf(spark):
+    """CacheBag.cut: the cut frame holds the source's rows, its plan is
+    one stored leaf even when the source is built over bag-cached frames
+    (no cache scan and no file scan anywhere beneath it), and release()
+    returns the Spark RDD registry to its prior size; a second release
+    changes nothing."""
+    from etl_olho_vivo_spark.caching import CacheBag
+
+    from tests.plan_walk import count_nodes, executed_plan
+
+    jmap = spark.sparkContext._jsc.getPersistentRDDs
+    before = jmap().size()
+    d = spark.read.parquet(f"{SF}/documents.parquet")
+    bag = CacheBag()
+    try:
+        docs = bag.add(d.select("doc_id", "text"))
+        even = bag.add(docs.filter(F.col("doc_id") % 2 == 0))
+        src = even.join(
+            docs.select("doc_id", F.length("text").alias("n")), "doc_id"
+        )
+        cut = bag.cut(src)
+        rows = sorted(cut.collect())
+        assert rows and rows == sorted(src.collect())
+        assert len(bag) == 3
+        assert jmap().size() == before + 3
+        nodes = count_nodes(executed_plan(src), into_cache=True)
+        assert nodes["InMemoryTableScanExec"] >= 2, nodes
+        assert nodes["FileSourceScanExec"] >= 1, nodes
+        nodes = count_nodes(executed_plan(cut), into_cache=True)
+        assert nodes["InMemoryTableScanExec"] == 0, nodes
+        assert nodes["FileSourceScanExec"] == 0, nodes
+    finally:
+        bag.release()
+    assert jmap().size() == before
+    assert len(bag) == 0
+    bag.release()
+    assert jmap().size() == before
+
+
+#: the order-3 Kneser-Ney gate at a threshold that drops 65 of the 446
+#: quality survivors of sf0.001 under the pipeline defaults (their
+#: scores span 2.52..3.33 nats)
+KN_GATE = {"lm_scheme": "kn", "lm_order": 3, "lm_max_entropy": 3.1}
+
+
 @pytest.mark.sweep
-@pytest.mark.parametrize("resolution", ["greedy", "components"])
-def test_run_corpus_leaves_no_caches(spark, tmp_path, resolution):
-    """The composed pipeline persists several intermediates (profile,
-    signature store, drop list, component labels, survivor set) and must
-    deterministically release every one — a leaked cache per run is a
-    leak per day at production cadence.  (The pre-fix localCheckpoint
-    drop list soft-leaked its RDD until the async ContextCleaner ran.)"""
+@pytest.mark.parametrize("case", ["greedy", "components", "kn"])
+def test_run_corpus_leaves_no_caches(spark, tmp_path, case):
+    """The composed pipeline persists or cuts several intermediates
+    (profile, signature store, drop list, component labels, the survivor
+    cut, the KN gate's token frame, window aggregates and its own cut)
+    and must deterministically release every one — a leaked cache per
+    run is a leak per day at production cadence.  A cut's backing RDD
+    is released by its bag too, not left to the async ContextCleaner."""
     from etl_olho_vivo_spark.plans.corpus import run_corpus
 
+    kwargs = KN_GATE if case == "kn" else {"dedup_resolution": case}
     jmap = spark.sparkContext._jsc.getPersistentRDDs
     before = jmap().size()
     run_corpus(
         spark,
         "/root/testdata/sf0.001",
-        str(tmp_path / f"clean_{resolution}"),
+        str(tmp_path / f"clean_{case}"),
         min_tokens=3,
         jaccard_threshold=0.5,
-        dedup_resolution=resolution,
+        **kwargs,
     )
     assert jmap().size() == before
+
+
+@pytest.mark.sweep
+def test_run_corpus_releases_caches_when_a_gate_raises(spark, tmp_path):
+    """A gate that raises after the survivor cut has materialized (a KN
+    reference corpus with no bigrams) still leaves the RDD registry at
+    its prior size."""
+    from etl_olho_vivo_spark.plans.corpus import run_corpus
+
+    ref = str(tmp_path / "ref")
+    spark.createDataFrame([("solo",)], "text string").write.parquet(ref)
+    jmap = spark.sparkContext._jsc.getPersistentRDDs
+    before = jmap().size()
+    with pytest.raises(ValueError, match="no bigrams"):
+        run_corpus(
+            spark, SF, str(tmp_path / "clean"), lm_ref_dir=ref, **KN_GATE
+        )
+    assert jmap().size() == before
+
+
+@pytest.mark.sweep
+def test_kn_gate_drops_exactly_the_high_entropy_survivors(spark, tmp_path):
+    """The order-3 KN gate end to end: the survivors are the quality
+    survivors minus the documents whose ``kneser_ney_scores`` score is
+    above the threshold, under a model trained on those same survivors
+    (documents too short to score pass).  The stage counts are pinned:
+    cutting the survivor frame must not change any of them."""
+    from etl_olho_vivo_spark.operators import lm
+    from etl_olho_vivo_spark.plans.corpus import run_corpus
+
+    base = run_corpus(spark, SF, str(tmp_path / "quality"))
+    stats = run_corpus(spark, SF, str(tmp_path / "kn"), **KN_GATE)
+    assert base == {
+        "input": 500, "lang_and_length": 466, "exact_dedup": 466,
+        "near_dedup": 446, "quality": 446,
+    }
+    assert stats == {**base, "lm_filter": 381}
+
+    quality = spark.read.parquet(str(tmp_path / "quality"))
+    counts = lm.kneser_ney_counts(quality.select("text"), order=3)
+    failing = {
+        r["doc_id"]
+        for r in lm.kneser_ney_scores(
+            quality.select("doc_id", "text"), counts
+        )
+        .filter(F.col("kn_score") > KN_GATE["lm_max_entropy"])
+        .collect()
+    }
+    expected = {r["doc_id"] for r in quality.collect()} - failing
+    kept = [
+        r["doc_id"]
+        for r in spark.read.parquet(str(tmp_path / "kn")).collect()
+    ]
+    assert len(kept) == len(set(kept)) == stats["lm_filter"]
+    assert set(kept) == expected
 
 
 @pytest.mark.sweep

@@ -88,15 +88,19 @@ def test_plan_is_aggregate_and_join_shaped(spark):
     aggregates + joins, no Python, no cartesian product, no window."""
     from etl_olho_vivo_spark.sources.tables import read_table
 
+    from tests.plan_walk import count_nodes, executed_plan
+
     d = read_table(spark, "/root/testdata/sf0.001", "documents")
     uni, big = lm.bigram_counts(d)
     out = lm.cross_entropy_scores(d, uni, big)
     out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    for bad in ("PythonUDF", "BatchEvalPython", "CartesianProduct", "Window"):
-        assert bad not in final, final[:2000]
-    assert "HashAggregate" in final or "SortAggregate" in final
+    # the final adaptive plan, cached build plans included
+    nodes = count_nodes(executed_plan(out), into_cache=True)
+    for bad in (
+        "ArrowEvalPython", "BatchEvalPython", "CartesianProduct", "Window"
+    ):
+        assert not [n for n in nodes if bad in n], nodes
+    assert nodes["HashAggregateExec"] or nodes["SortAggregateExec"], nodes
 
 
 @pytest.mark.sweep
