@@ -1273,21 +1273,7 @@ def main(argv: list[str] | None = None) -> int:
                 bid = append_store.next_batch_id(
                     spark, f"{args.index}/cells"
                 )
-            # route by the tree's own type marker: an IVF-PQ index
-            # must ingest residual-encoded rows (append_to_ivf_index
-            # refuses PQ trees so codes-less rows can't poison ADC)
-            from etl_olho_vivo_spark.io.ann_index import _PQ_DIR
-            from etl_olho_vivo_spark.io.fsutil import hadoop_fs
-
-            fs, pq_p = hadoop_fs(spark, f"{args.index}/{_PQ_DIR}")
-            if fs.exists(pq_p):
-                from etl_olho_vivo_spark.io.ann_index import (
-                    append_to_ivfpq_index,
-                )
-
-                written = append_to_ivfpq_index(emb, args.index, bid)
-            else:
-                written = append_to_ivf_index(emb, args.index, bid)
+            written = append_to_ivf_index(emb, args.index, bid)
             if not written:
                 # an explicit --batch-id at/below the watermark: correct
                 # for a replay of a folded batch, data-loss for new data

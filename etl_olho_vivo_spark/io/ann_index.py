@@ -57,12 +57,7 @@ from etl_olho_vivo_spark.operators.similarity import (
     QUANT,
     _default_centroids,
     _dot_int,
-    _ivfpq_adc_case,
-    _l2sq_int,
-    _sql_bigint_array,
     ivf_assign,
-    ivfpq_codebooks,
-    ivfpq_encode,
     kmeans_centroids,
 )
 
@@ -91,16 +86,6 @@ def build_ivf_index(
     if n_cells < 1:
         raise ValueError(f"n_cells must be >= 1, got {n_cells}")
     spark = emb.sparkSession
-    # index type must be unambiguous from the tree: the rebuild trigger
-    # and the load/append guards all key off pq_codebooks' existence, so
-    # rebuilding a former IVF-PQ path as plain IVF must remove the stale
-    # codebook table (else the next skew rebuild silently converts the
-    # index back to IVF-PQ against cells that carry no codes)
-    from etl_olho_vivo_spark.io.fsutil import hadoop_fs
-
-    fs, pq_p = hadoop_fs(spark, f"{path}/{_PQ_DIR}")
-    if fs.exists(pq_p):
-        fs.delete(pq_p, True)
     cents = (
         kmeans_centroids(emb, n_cells, **kmeans_kwargs)
         if use_kmeans
@@ -188,19 +173,6 @@ def append_to_ivf_index(
         )
     spark = emb_batch.sparkSession
     assert_no_pending_swap(spark, f"{path}/cells")
-    # refuse to append codes-less rows into an IVF-PQ tree: ADC would
-    # compute NULL adc_dist for them and ascending orderBy sorts NULLs
-    # first, silently crowding real candidates out of the bounded
-    # rerank pool — the same loud-error discipline as the load paths
-    from etl_olho_vivo_spark.io.fsutil import hadoop_fs
-
-    fs, pq_p = hadoop_fs(spark, f"{path}/{_PQ_DIR}")
-    if fs.exists(pq_p):
-        raise ValueError(
-            f"{path} is an IVF-PQ index (codebook table present) — "
-            f"append with append_to_ivfpq_index so batch rows carry "
-            f"codes; plain-IVF appends would serve NULL adc_dist"
-        )
     cents = _centroid_frame(spark, path)
     n_cells = cents.count()
     return append_store.write_batch(
@@ -247,10 +219,9 @@ def compact_ivf_index(
     watermark together; a crash is repaired by the next call, writers
     refuse while the marker exists, and a replay of a folded batch is
     skipped — see ``io/append_store.py``).  The fold keeps every
-    column, so an IVF-PQ index's ``codes`` column survives compaction,
-    and the two-level batch/``cell_id`` layout stays uniform (a flat
-    cell_id-only rewrite would leave mixed directory depths once the
-    next append lands, breaking partition discovery).
+    column, and the two-level batch/``cell_id`` layout stays uniform
+    (a flat cell_id-only rewrite would leave mixed directory depths
+    once the next append lands, breaking partition discovery).
 
     Returns the compacted vector count.
     """
@@ -423,9 +394,6 @@ def maybe_rebuild_ivf_index(
             return {"rebuilt": False, "stats": before}
         # stamp the cell count INTO the snapshot so a crash-resume does
         # not depend on the (possibly half-overwritten) centroid table.
-        # An IVF-PQ index stamps its codebook shape too — the rebuild
-        # must go through build_ivfpq_index or the codes column (and
-        # the ADC serving path with it) would silently vanish.
         stamped = n_cells if n_cells is not None else int(
             spark.read.parquet(f"{path}/centroids")
             .select("n_cells").first()["n_cells"]
@@ -438,44 +406,19 @@ def maybe_rebuild_ivf_index(
             stamped = max(stamped, math.ceil(
                 before["total_vectors"] / (max_occupancy / 2)
             ))
-        m_sub, k_codes = -1, -1
-        _, pq_p = hadoop_fs(spark, f"{path}/{_PQ_DIR}")
-        if fs.exists(pq_p):
-            meta = (
-                spark.read.parquet(f"{path}/{_PQ_DIR}")
-                .select("m_sub", "k_codes").first()
-            )
-            m_sub, k_codes = int(meta["m_sub"]), int(meta["k_codes"])
         (
             dequantized_cells(spark, path)
             .withColumn("__n_cells__", F.lit(stamped))
-            .withColumn("__m_sub__", F.lit(m_sub))
-            .withColumn("__k_codes__", F.lit(k_codes))
             .write.mode("overwrite")
             .parquet(snap)
         )
     emb = spark.read.parquet(snap)
     if n_cells is None:
         n_cells = int(emb.select("__n_cells__").first()["__n_cells__"])
-    if "__m_sub__" not in emb.columns:
-        # snapshot written before the IVF-PQ stamp existed — plain IVF
-        emb = emb.withColumn("__m_sub__", F.lit(-1)).withColumn(
-            "__k_codes__", F.lit(-1)
-        )
-    shape = emb.select("__m_sub__", "__k_codes__").first()
-    src = emb.drop("__n_cells__", "__m_sub__", "__k_codes__")
-    if int(shape["__m_sub__"]) > 0:
-        build_ivfpq_index(
-            src, path, n_cells=n_cells,
-            m_sub=int(shape["__m_sub__"]),
-            k_codes=int(shape["__k_codes__"]),
-            use_kmeans=use_kmeans, **kmeans_kwargs,
-        )
-    else:
-        build_ivf_index(
-            src, path, n_cells=n_cells,
-            use_kmeans=use_kmeans, **kmeans_kwargs,
-        )
+    build_ivf_index(
+        emb.drop("__n_cells__"), path, n_cells=n_cells,
+        use_kmeans=use_kmeans, **kmeans_kwargs,
+    )
     _, snap_p = hadoop_fs(spark, snap)
     fs.delete(snap_p, True)
     after = cell_stats(spark, path)
@@ -487,51 +430,13 @@ def maybe_rebuild_ivf_index(
     }
 
 
-def run_embedding_stream(
-    emb_stream: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Continuous index ingestion: each micro-batch of new embedding
-    rows is assigned against the frozen centroids and lands in its own
-    batch partition — idempotent under at-least-once replay by the
-    ``append_to_ivf_index`` contract (replay overwrites its own
-    partition; a replay of a batch already folded by compaction is a
-    no-op — the replay rule in ``io/append_store.py``, whose increasing
-    ids the checkpoint's batch counter supplies).  The index must
-    exist (``build_ivf_index`` / ``build_ivfpq_index``) before the
-    stream starts; centroid load is validated once per batch through
-    the stamped grid.  The appender is chosen per batch from the tree's
-    own type marker (the codebook table), so an IVF-PQ index ingests
-    residual-encoded rows — never codes-less ones that would serve
-    NULL adc_dist."""
-
-    def _append(batch: DataFrame, batch_id: int) -> None:
-        from etl_olho_vivo_spark.io.fsutil import hadoop_fs
-
-        fs, pq_p = hadoop_fs(batch.sparkSession, f"{path}/{_PQ_DIR}")
-        if fs.exists(pq_p):
-            append_to_ivfpq_index(batch, path, int(batch_id))
-        else:
-            append_to_ivf_index(batch, path, int(batch_id))
-
-    writer = emb_stream.writeStream.foreachBatch(_append).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def _quantize_py(vector: list[float]) -> list[int]:
     """Driver-side quantization of an EXTERNAL query vector.  Spark's
     round() is HALF_UP (away from zero); Python's round() is banker's —
     a component landing exactly on the grid midpoint (e.g. 2.5e-06)
     would quantize differently on the two sides and can flip the probe
     cell / break ranking parity with the stored assignment.  Replicate
-    HALF_UP explicitly — shared by the IVF and IVF-PQ query paths so
-    the two grids can never drift."""
+    HALF_UP explicitly."""
     import math
 
     def _q(x: float) -> int:
@@ -584,255 +489,5 @@ def query_ivf_index(
             F.expr(_dot_int("qv", "q_qv")).alias("dot_q"),
         )
         .orderBy(F.col("dot_q").desc(), "vec_id")
-        .limit(k)
-    )
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ: the composed index (coarse cells + residual PQ codes) — the
-# standard two-level serving architecture (Jégou et al. 2011 §IVFADC)
-# ---------------------------------------------------------------------------
-
-_PQ_DIR = "pq_codebooks"
-
-
-@dataclass
-class IvfPqIndex:
-    """A loaded IVF-PQ index: bounded driver-side centroids + residual
-    codebooks, plus the lazy cell-partitioned code frame."""
-
-    centroids: list[tuple[int, list[int]]]  # (cell_id, quantized centroid)
-    codebooks: list[list[list[int]]]  # [sub][code] -> residual subvector
-    cells: DataFrame  # vec_id, label, qv, codes (+ partition columns)
-    path: str
-
-
-def _write_pq_codebooks(
-    spark: SparkSession, path: str, codebooks: list[list[list[int]]]
-) -> None:
-    """Persist the bounded codebook structure as one small parquet
-    relation (``m_sub · k_codes`` rows), stamped with its shape and the
-    quantization grid — same validate-at-load contract as the centroid
-    table."""
-    rows = [
-        (s, j, list(map(int, cb)))
-        for s, subs in enumerate(codebooks)
-        for j, cb in enumerate(subs)
-    ]
-    (
-        spark.createDataFrame(
-            rows, "sub_id int, code_id int, qc array<bigint>"
-        )
-        .withColumn("m_sub", F.lit(len(codebooks)))
-        .withColumn("k_codes", F.lit(len(codebooks[0])))
-        .withColumn("quant", F.lit(QUANT))
-        .write.mode("overwrite")
-        .parquet(f"{path}/{_PQ_DIR}")
-    )
-
-
-def _load_pq_codebooks(
-    spark: SparkSession, path: str
-) -> list[list[list[int]]]:
-    """Load + validate the persisted residual codebooks (bounded
-    collect).  A grid or shape mismatch is a loud error — ADC over
-    incommensurate integers would rank garbage silently."""
-    from etl_olho_vivo_spark.io.fsutil import hadoop_fs
-
-    fs, pq_p = hadoop_fs(spark, f"{path}/{_PQ_DIR}")
-    if not fs.exists(pq_p):
-        raise ValueError(
-            f"{path} has no codebook table — a plain IVF index; build "
-            f"with build_ivfpq_index (or query via query_ivf_index)"
-        )
-    df = spark.read.parquet(f"{path}/{_PQ_DIR}")
-    meta = df.select("m_sub", "k_codes", "quant").first()
-    if meta is None:
-        raise ValueError(f"IVF-PQ index at {path} has an empty codebook table")
-    if meta["quant"] != QUANT:
-        raise ValueError(
-            f"IVF-PQ index at {path} was built on quantization grid "
-            f"{meta['quant']}, engine uses {QUANT}; rebuild the index"
-        )
-    m_sub, k_codes = int(meta["m_sub"]), int(meta["k_codes"])
-    books: list[list[list[int] | None]] = [
-        [None] * k_codes for _ in range(m_sub)
-    ]
-    for r in df.select("sub_id", "code_id", "qc").collect():
-        books[int(r["sub_id"])][int(r["code_id"])] = list(r["qc"])
-    if any(c is None for sub in books for c in sub):
-        raise ValueError(
-            f"IVF-PQ codebook table at {path} is incomplete "
-            f"(expected {m_sub}x{k_codes} entries)"
-        )
-    return books  # type: ignore[return-value]
-
-
-def build_ivfpq_index(
-    emb: DataFrame,
-    path: str,
-    n_cells: int = 8,
-    m_sub: int = 8,
-    k_codes: int = 16,
-    use_kmeans: bool = True,
-    **kmeans_kwargs,
-) -> int:
-    """Build the composed index: coarse quantizer → residual codebooks →
-    per-vector (cell_id, codes) — the cells tree carries BOTH the
-    quantized vector (for exact re-rank / rebuilds) and the slim code
-    array (what the ADC stage scans; parquet columnar layout means an
-    ADC scan never reads the qv bytes).  Same whole-tree replacement
-    as ``build_ivf_index`` (``append_store.write_base``: batch
-    partitions and watermark go with it)."""
-    if n_cells < 1:
-        raise ValueError(f"n_cells must be >= 1, got {n_cells}")
-    cents = (
-        kmeans_centroids(emb, n_cells, **kmeans_kwargs)
-        if use_kmeans
-        else _default_centroids(emb, n_cells)
-    )
-    spark = emb.sparkSession
-    (
-        cents.withColumn("n_cells", F.lit(n_cells))
-        .withColumn("quant", F.lit(QUANT))
-        .write.mode("overwrite")
-        .parquet(f"{path}/centroids")
-    )
-    cent_frame = _centroid_frame(spark, path)
-    books = ivfpq_codebooks(
-        emb, cent_frame, n_cells=n_cells, m_sub=m_sub, k_codes=k_codes
-    )
-    _write_pq_codebooks(spark, path, books)
-    append_store.write_base(
-        ivfpq_encode(emb, cent_frame, books, n_cells=n_cells),
-        f"{path}/cells", partition_by=("cell_id",),
-    )
-    return spark.read.parquet(f"{path}/cells").count()
-
-
-def load_ivfpq_index(spark: SparkSession, path: str) -> IvfPqIndex:
-    """Load centroids + codebooks (collected — both bounded) and the
-    lazy cell frame; refuses plain-IVF trees and pending swaps."""
-    assert_no_pending_swap(spark, f"{path}/cells")
-    cents = [
-        (r["cell_id"], list(r["qc"]))
-        for r in _centroid_frame(spark, path).collect()
-    ]
-    books = _load_pq_codebooks(spark, path)
-    cells = spark.read.parquet(f"{path}/cells")
-    if "codes" not in cells.columns:
-        raise ValueError(
-            f"{path} has no codes column — a plain IVF index; build "
-            f"with build_ivfpq_index (or query via query_ivf_index)"
-        )
-    return IvfPqIndex(centroids=cents, codebooks=books, cells=cells,
-                      path=path)
-
-
-def append_to_ivfpq_index(
-    emb_batch: DataFrame, path: str, batch_id: int
-) -> bool:
-    """Assign + residual-encode a batch against the PERSISTED centroids
-    and codebooks and land it under its own partition tree — the same
-    frozen-quantizer, idempotent-per-batch contract as
-    ``append_to_ivf_index`` (replays of folded batches are skipped by
-    the replay rule in ``io/append_store.py``)."""
-    if batch_id < 0:
-        raise ValueError(
-            f"batch_id must be >= 0 (-1 is the build partition), "
-            f"got {batch_id}"
-        )
-    spark = emb_batch.sparkSession
-    assert_no_pending_swap(spark, f"{path}/cells")
-    cents = _centroid_frame(spark, path)
-    n_cells = cents.count()
-    books = _load_pq_codebooks(spark, path)
-    return append_store.write_batch(
-        ivfpq_encode(emb_batch, cents, books, n_cells=n_cells),
-        f"{path}/cells", batch_id, partition_by=("cell_id",),
-    )
-
-
-def query_ivfpq_index(
-    index: IvfPqIndex,
-    vector: list[float],
-    k: int = 10,
-    n_probe: int = 2,
-    rerank: int = 50,
-) -> DataFrame:
-    """Serve an EXTERNAL query vector through the composed stack: probe
-    the ``n_probe`` nearest cells (pure Python over the collected
-    centroids), ADC-score ONLY those cells' codes with per-cell residual
-    LUTs (the scan prunes to the probed cell partitions and reads the
-    slim codes column), exact-integer re-rank the ``rerank``-best pool
-    (its qv fetch reads the same pruned partitions).
-
-    Returns ``(vec_id, label, cell_id, adc_dist, l2_exact)`` ordered by
-    ascending exact distance with vec_id tiebreak — distance semantics
-    (for the unit-norm corpora real retrieval uses, the ranking matches
-    ``query_ivf_index``'s descending dot)."""
-    if rerank < k:
-        raise ValueError(f"rerank pool {rerank} smaller than k {k}")
-    if not index.centroids:
-        raise ValueError("empty centroid table")
-    dim = len(index.centroids[0][1])
-    if len(vector) != dim:
-        raise ValueError(
-            f"query vector has dim {len(vector)}, index has dim {dim}"
-        )
-    m_sub = len(index.codebooks)
-    sub_len = len(index.codebooks[0][0])
-    if dim != m_sub * sub_len:
-        raise ValueError(
-            f"index dim {dim} != codebook dim {m_sub * sub_len}"
-        )
-    q = _quantize_py(vector)
-    ranked = sorted(
-        (sum((a - b) * (a - b) for a, b in zip(qc, q)), cid)
-        for cid, qc in index.centroids
-    )
-    probes = [cid for _, cid in ranked[: max(1, n_probe)]]
-    cents = dict(index.centroids)
-    luts = {}
-    for cid in probes:
-        rq = [a - b for a, b in zip(q, cents[cid])]
-        luts[cid] = [
-            [
-                sum(
-                    (a - b) * (a - b)
-                    for a, b in zip(rq[s * sub_len:(s + 1) * sub_len], cb_j)
-                )
-                for cb_j in index.codebooks[s]
-            ]
-            for s in range(m_sub)
-        ]
-    pool = (
-        index.cells.filter(F.col("cell_id").isin(probes))
-        .select(
-            "vec_id",
-            "label",
-            "cell_id",
-            F.expr(_ivfpq_adc_case(probes, luts)).alias("adc_dist"),
-        )
-        .orderBy("adc_dist", "vec_id")
-        .limit(rerank)
-    )
-    # qv fetch for the bounded pool — same pruned partitions, and the
-    # pool side broadcasts into the scan (rerank rows)
-    qv_rel = index.cells.filter(F.col("cell_id").isin(probes)).select(
-        "vec_id", "qv"
-    )
-    return (
-        pool.join(qv_rel, "vec_id")
-        .select(
-            "vec_id",
-            "label",
-            "cell_id",
-            "adc_dist",
-            F.expr(
-                _l2sq_int("qv", _sql_bigint_array(q))
-            ).alias("l2_exact"),
-        )
-        .orderBy("l2_exact", "vec_id")
         .limit(k)
     )

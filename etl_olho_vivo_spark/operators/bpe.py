@@ -16,10 +16,7 @@ corpus-sized.  This module follows that two-phase shape:
    collected histogram.  Deterministic: pair ties break lexicographically
    (published implementations vary here; fixing the tiebreak makes
    vocabularies reproducible across runs).
-3. ``bpe_segment_expr`` — applying a trained merge list back to the
-   corpus as a JVM-side Column expression for SMALL merge lists (each
-   merge is one ``replace`` over a boundary-marked word string).
-4. ``bpe_apply`` — the PRODUCTION application path: an Arrow-batched
+3. ``bpe_apply`` — the application path: an Arrow-batched
    ``mapInPandas`` tokenizer driven by a merge-rank dict (the GPT-2
    greedy-lowest-rank algorithm, equivalent to applying the merge list
    in training order), handling arbitrary vocabulary sizes with a
@@ -31,7 +28,7 @@ beyond-reference training-data surface (SURVEY §2.11 text analysis).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: end-of-word marker (Sennrich et al.); chosen outside the corpus
@@ -62,11 +59,10 @@ def word_histogram(
     """
     if top_k < 1:
         raise ValueError(f"top_k must be >= 1, got {top_k}")
-    # Strip the \x1f/\x1e marker chars EXACTLY like both application
-    # paths (bpe_segment_expr, bpe_apply) do — training and application
-    # must see identical word shapes, or a corpus containing these
-    # control chars trains on words ('a\x1fb') the tokenizer never
-    # produces ('ab').
+    # Strip the \x1f/\x1e marker chars EXACTLY like ``bpe_apply`` does
+    # — training and application must see identical word shapes, or a
+    # corpus containing these control chars trains on words ('a\x1fb')
+    # the tokenizer never produces ('ab').
     clean = F.regexp_replace(F.col(text), F.lit("[\\x1f\\x1e]"), F.lit(""))
     words = docs.select(
         F.explode(
@@ -93,38 +89,6 @@ def _merge_word(syms: list, a: str, b: str) -> list:
             res.append(syms[i])
             i += 1
     return res
-
-
-def _bpe_merges_reference(
-    histogram: list[tuple[str, int]], n_merges: int
-) -> list[tuple[str, str]]:
-    """The textbook O(n_merges × total_symbols) loop — recomputes every
-    pair count per round.  Kept as the executable SPEC the fast
-    implementation is fuzz-tested against (tests/test_bpe.py)."""
-    vocab: dict[tuple[str, ...], int] = {}
-    for word, count in histogram:
-        symbols = tuple(word) + (EOW,)
-        vocab[symbols] = vocab.get(symbols, 0) + count
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        pairs: dict[tuple[str, str], int] = {}
-        for symbols, count in vocab.items():
-            for a, b in zip(symbols, symbols[1:]):
-                pairs[(a, b)] = pairs.get((a, b), 0) + count
-        if not pairs:
-            break
-        (a, b), best_n = min(
-            pairs.items(), key=lambda kv: (-kv[1], kv[0])
-        )
-        if best_n < 2:
-            break  # nothing repeats — further merges are noise
-        out: dict[tuple[str, ...], int] = {}
-        for symbols, count in vocab.items():
-            key = tuple(_merge_word(list(symbols), a, b))
-            out[key] = out.get(key, 0) + count
-        vocab = out
-        merges.append((a, b))
-    return merges
 
 
 def bpe_merges(
@@ -155,7 +119,7 @@ def bpe_merges(
     exactly: the heap orders by (-count, pair), the same key the spec
     minimizes, and lazy (stale-count) entries are skipped on pop — the
     first entry whose count is CURRENT is the true maximum.  Output is
-    fuzz-pinned identical to ``_bpe_merges_reference``.
+    fuzz-pinned identical to the textbook loop in tests/references.py.
     """
     import heapq
     from collections import Counter
@@ -237,56 +201,6 @@ def bpe_vocabulary(
     return chars + [EOW] + [a + b for a, b in merges]
 
 
-def bpe_segment_expr(
-    merges: list[tuple[str, str]], text: str = "text", sep: str = " "
-) -> Column:
-    """Apply a SMALL trained merge list corpus-side, as a pure Column
-    expression: words become space-joined token sequences.
-
-    Each merge compiles to one ``replace`` over a marker-delimited
-    symbol string, so the expression depth grows with ``len(merges)``
-    — fine for the few-hundred-merge vocabularies used in tests and
-    feature pipelines; use a real tokenizer under ``mapInPandas`` for
-    30k-merge production vocabularies (expression trees that deep
-    stress codegen for no benefit).
-    """
-    if len(merges) > 512:
-        raise ValueError(
-            f"bpe_segment_expr is for small merge lists (<= 512); got "
-            f"{len(merges)} — use bpe_apply (mapInPandas) instead"
-        )
-    # Every symbol is ENCLOSED in \x1f markers (m+sym+m), so the merge
-    # pattern m+a+m+m+b+m can only match whole symbols — a bare
-    # a+DELIM+b pattern would also match when a multi-char symbol
-    # merely ENDS with `a` (e.g. symbol "aa" before "b" contains
-    # "a⟂b"), silently producing out-of-vocabulary tokens.  Words are
-    # joined with \x1e.  Both control chars are stripped from the
-    # input first: corpus text containing them would otherwise inject
-    # fake symbol boundaries.
-    m, g = "\x1f", "\x1e"
-    clean = F.regexp_replace(F.col(text), F.lit("[\\x1f\\x1e]"), F.lit(""))
-    enclose = lambda c: F.concat(F.lit(m), c, F.lit(m))  # noqa: E731
-    word_syms = F.transform(
-        F.filter(F.split(clean, r"\s+"), lambda w: w != F.lit("")),
-        lambda w: F.concat(
-            F.array_join(F.transform(F.split(w, ""), enclose), ""),
-            F.lit(m + EOW + m),
-        ),
-    )
-    joined = F.array_join(word_syms, g)
-    for a, b in merges:
-        joined = F.replace(
-            joined,
-            F.lit(m + a + m + m + b + m),
-            F.lit(m + a + b + m),
-        )
-    # decode: token gap (m+m) and word gap (g) → separator, then strip
-    # the enclosing markers
-    out = F.replace(joined, F.lit(m + m), F.lit(sep))
-    out = F.replace(out, F.lit(g), F.lit(sep))
-    return F.replace(out, F.lit(m), F.lit(""))
-
-
 def bpe_apply(
     docs: DataFrame,
     merges: list[tuple[str, str]],
@@ -300,12 +214,10 @@ def bpe_apply(
     cache_cap: int = _CACHE_CAP,
 ) -> DataFrame:
     """Tokenize a corpus with a trained merge list of ARBITRARY size —
-    the production hand-off from ``bpe_merges`` (30k+ merges) that
-    ``bpe_segment_expr`` caps out of (its expression tree grows per
-    merge).  Appends column ``out``: with ``emit="tokens"`` (default)
-    the ``sep``-joined token stream of the whitespace-split words
-    (same output convention as ``bpe_segment_expr`` — parity-tested in
-    tests/test_bpe.py); with ``emit="ids"`` an ``array<int>`` of token
+    the production hand-off from ``bpe_merges`` (30k+ merges).  Appends
+    column ``out``: with ``emit="tokens"`` (default) the ``sep``-joined
+    token stream of the whitespace-split words (parity-tested in
+    tests/test_bpe.py against a Column-expression reference); with ``emit="ids"`` an ``array<int>`` of token
     ids under the supplied ``vocab`` (pass ``bpe_vocabulary(...)`` —
     the id space is the model's input contract and must be pinned
     explicitly, never re-derived per run); with ``emit="both"`` BOTH
@@ -377,11 +289,11 @@ def bpe_apply(
         ]
     )
     schema = StructType(list(docs.schema.fields) + extra)
-    # Java regex \s (used by word_histogram and bpe_segment_expr) is the
+    # Java regex \s (used by word_histogram) is the
     # ASCII class [ \t\n\x0B\f\r]; Python's \s is Unicode-aware and
     # would ALSO split on U+00A0/U+2028/\x1c-\x1f, silently tokenizing
     # different word shapes than the histogram ever counted and breaking
-    # parity with the expression path on real web text (&nbsp; is
+    # parity with the expression reference on real web text (&nbsp; is
     # everywhere).  Spell out the Java class exactly.
     ws = re.compile("[ \t\n\x0b\f\r]+")
     strip = re.compile("[\x1f\x1e]")

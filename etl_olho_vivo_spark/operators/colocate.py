@@ -68,13 +68,8 @@ def grid_project(
     lon: str = "px",
     ts: str = "timestamp",
     bucket_s: int = 1800,
-    extra: tuple[str, ...] = (),
 ) -> DataFrame:
-    """The shared grid assignment both the batch and the streaming
-    co-location paths build on — ONE definition of the cell sizes and
-    the bucket, so batch/stream parity is by construction (the
-    streaming twin passes ``extra=("event_time",)`` to carry its
-    watermarked column through)."""
+    """The grid assignment: home cell and tumbling bucket per ping."""
     if radius_m <= 0:
         raise ValueError(f"radius_m must be positive, got {radius_m}")
     if bucket_s <= 0:
@@ -88,13 +83,12 @@ def grid_project(
         F.expr(f"(`{ts}` div {bucket_s}) * {bucket_s}").alias("bucket"),
         F.floor(F.col(lat) / F.lit(d_lat)).alias("cy"),
         F.floor(F.col(lon) / F.lit(d_lon)).alias("cx"),
-        *[F.col(c) for c in extra],
     )
 
 
 def neighbor_offsets():
     """The probe-side explode payload — one literal array of (dy, dx)
-    structs, shared by batch and stream.
+    structs.
 
     HALF-PLANE set (round 15): {(0,0), (0,1), (1,-1), (1,0), (1,1)} —
     self plus the lexicographically-forward half of the 3×3
@@ -126,7 +120,7 @@ def pair_orientation_filter():
 
 def pair_distance():
     """round(haversine, 2) over the (la_a, lo_a, la_b, lo_b) pair
-    columns — the residual-filter spec, shared by batch and stream."""
+    columns — the residual-filter spec."""
     return F.round(
         haversine_m(
             F.col("la_a"), F.col("lo_a"), F.col("la_b"), F.col("lo_b")

@@ -193,32 +193,3 @@ def contamination_report(
         id_col=id_col,
         broadcast_eval=broadcast_eval,
     )
-
-
-def decontaminate(
-    train: DataFrame,
-    eval_df: DataFrame,
-    *,
-    n: int = DEFAULT_N,
-    text: str = "text",
-    id_col: str = "doc_id",
-    min_hits: int = 1,
-    broadcast_eval: bool = True,
-) -> DataFrame:
-    """Drop every training document with ≥ ``min_hits`` contaminated
-    n-grams; returns the surviving rows of ``train`` unchanged.
-
-    The anti-join's right side is the hit-sized report (never the
-    corpus), so at scale it is broadcast by Catalyst/AQE on its own.
-    """
-    if min_hits < 1:
-        raise ValueError(f"min_hits must be >= 1, got {min_hits}")
-    flagged = contamination_report(
-        train,
-        eval_df,
-        n=n,
-        text=text,
-        id_col=id_col,
-        broadcast_eval=broadcast_eval,
-    ).filter(F.col("n_contaminated") >= min_hits)
-    return train.join(flagged.select(id_col), id_col, "left_anti")

@@ -36,12 +36,12 @@ the same for the audio leg: real RIFF/WAVE PCM chunk parsing (channels
 amplitude) AND a full FLAC decoder (round 11 — every subframe type,
 Rice/Rice2 residuals, stereo decorrelation, verified against all
 three stream checksums incl. the STREAMINFO MD5 of the reconstructed
-samples), opaque-with-NULLs otherwise.  ``sample_frames`` REALLY
+samples), opaque-with-NULLs otherwise.  ``video_fingerprint`` REALLY
 demuxes MJPEG-in-AVI (RIFF chunk walk → every stride-th ``00dc``
 frame, each a complete JPEG the decoder consumes) AND uncompressed
 YUV4MPEG2 (round 11: stream-header geometry → every stride-th raw
 picture's luma plane re-wrapped as P5 PGM) — video → frames →
-decode → dHash dedup end to end for both — byte-slicing stub
+decode → dHash dedup end to end for both — NULL fingerprint
 otherwise.
 
 DECISION RECORD (round 12) — why MPEG audio (Layer I/II/III) stays
@@ -1492,110 +1492,6 @@ def decode_audio(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.select(id_col, "media").mapInPandas(batches, AUDIO_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("media", T.BinaryType()),
-        T.StructField(
-            "media_meta",
-            T.StructType(
-                [
-                    T.StructField("media_type", T.StringType()),
-                    T.StructField("n_bytes", T.IntegerType()),
-                    T.StructField("target_w", T.IntegerType()),
-                    T.StructField("target_h", T.IntegerType()),
-                ]
-            ),
-        ),
-    ]
-)
-
-
-def resize_media(
-    df: DataFrame, width: int, height: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """Binary→binary image resize with metadata update.
-
-    Round 10, REAL for decodable rasters: BMP-24/PNM/PNG/JPEG media
-    decode through the shared pixel parsers, area-mean resample
-    (deterministic integer block boundaries, ``rint`` to uint8) to
-    ``width × height``, and re-encode as binary P5 (PGM) — a decodable
-    artifact the same parsers round-trip, so downstream stages (dHash,
-    decode_media) consume resized output unchanged.  Non-raster /
-    corrupt media keep the original deterministic truncate-or-pad
-    fallback with ``media_type='image/raw'`` (a resize job over a
-    100 TB mixed corpus must not crash on the opaque tail).  Binary in,
-    binary out, metadata struct updated, schema explicit, Arrow-batched,
-    partition-parallel; closures self-contained (workers lack this
-    package).
-    """
-
-    if width <= 0 or height <= 0:
-        raise ValueError(f"width/height must be positive, got {width}x{height}")
-    parse = _media_parser(pixels=True)
-
-    block_mean = _block_mean_fn()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        target = width * height
-
-        def resample(gray):
-            return np.clip(
-                np.rint(block_mean(gray, height, width)), 0, 255
-            ).astype(np.uint8)
-
-        def do_resize(media):
-            if media is None:  # NULL media → NULL output, no crash
-                return None, None
-            gray = parse(media)[6]
-            if gray is not None and getattr(gray, "size", 0):
-                px = resample(gray)
-                payload = (
-                    f"P5 {width} {height} 255\n".encode() + px.tobytes()
-                )
-                return payload, "image/x-portable-graymap"
-            if len(media) >= target:
-                return bytes(media[:target]), "image/raw"
-            return (
-                bytes(media) + b"\x00" * (target - len(media)),
-                "image/raw",
-            )
-
-        for pdf in it:
-            resized = [do_resize(m) for m in pdf["media"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "media": [m for m, _ in resized],
-                    "media_meta": [
-                        None
-                        if m is None
-                        else {
-                            "media_type": kind,
-                            "n_bytes": len(m),
-                            "target_w": width,
-                            "target_h": height,
-                        }
-                        for m, kind in resized
-                    ],
-                }
-            )
-
-    return df.select(id_col, "media").mapInPandas(batches, RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-        T.StructField("n_frames_total", T.IntegerType()),
-    ]
-)
-
-
 def _avi_demuxer():
     """Factory for the MJPEG-in-AVI frame extractor — the one VIDEO
     container walkable with zero dependencies (RIFF chunk grammar, the
@@ -1712,75 +1608,6 @@ def _y4m_demuxer():
     return demux
 
 
-def sample_frames(
-    df: DataFrame,
-    frame_size: int = 16,
-    stride: int = 4,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """One row per sampled frame — the video frame-sampling fan-out.
-
-    REAL for two containers: MJPEG-in-AVI (round 10 — RIFF chunk walk
-    through ``_avi_demuxer``, each sampled chunk a complete JPEG) and
-    uncompressed YUV4MPEG2 (round 11 — ``_y4m_demuxer``, each sampled
-    picture's luma plane re-wrapped as a P5 PGM).  Either way every
-    ``stride``-th frame is emitted as its own binary row that flows
-    straight into ``decode_media`` / ``image_dhash`` (video → frames →
-    decode → perceptual dedup, end to end with zero dependencies).
-    Everything else keeps the byte-slicing stub (``frame_size``-byte
-    windows, every ``stride``-th one): a mixed-corpus sampling job must
-    not crash on the opaque tail, and inter-frame codecs (H.26x/VPx/
-    AV1) still need libav.  At 100 TB the output row count dominates —
-    sampled frames, never all frames; the fan-out stays Arrow-batched
-    and partition-parallel.
-    """
-
-    if frame_size <= 0 or stride <= 0:
-        # driver-side, not a ZeroDivisionError deep inside an executor
-        raise ValueError(
-            f"frame_size and stride must be positive, got "
-            f"{frame_size}/{stride}"
-        )
-    demux_avi = _avi_demuxer()
-    demux_y4m = _y4m_demuxer()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames, totals = [], [], [], []
-            for doc_id, media in zip(
-                pdf[id_col].astype("int64"), pdf["media"]
-            ):
-                if media is None:  # NULL media emits no frames
-                    continue
-                m = bytes(media)
-                vid = demux_avi(m)
-                if vid is None:
-                    vid = demux_y4m(m)
-                if vid is not None:
-                    for i in range(0, len(vid), stride):
-                        ids.append(doc_id)
-                        idxs.append(i)
-                        frames.append(vid[i])
-                        totals.append(len(vid))
-                    continue
-                n_total = len(m) // frame_size
-                for i in range(0, n_total, stride):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    frames.append(m[i * frame_size:(i + 1) * frame_size])
-                    totals.append(n_total)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame": pd.Series(frames, dtype="object"),
-                    "n_frames_total": pd.Series(totals, dtype="int32"),
-                }
-            )
-
-    return df.select(id_col, "media").mapInPandas(batches, FRAME_SCHEMA)
-
-
 DHASH_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -1793,12 +1620,12 @@ DHASH_SCHEMA = T.StructType(
 
 
 def _block_mean_fn():
-    """Factory for the shared area-mean block resampler: integer-repeat
+    """Factory for the area-mean block resampler: integer-repeat
     tiny inputs up to the target grid, then compute EVERY block mean in
     two vectorized ``np.add.reduceat`` passes (row sums, then column
     sums) divided by the exact block areas — no per-cell Python loop in
-    the decode hot path.  Used by both the dHash cell grid and
-    ``resize_media``; shipped by value inside the closures."""
+    the decode hot path.  Used by the dHash cell grid; shipped by value
+    inside its closure."""
 
     def block_mean(gray, rows, cols):
         import numpy as np
@@ -1879,48 +1706,6 @@ def image_dhash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             )
 
     return df.select(id_col, "media").mapInPandas(batches, DHASH_SCHEMA)
-
-
-def image_near_dups(
-    df: DataFrame,
-    *,
-    max_hamming: int = 6,
-    n_bands: int = 8,
-    id_col: str = "doc_id",
-    caches=None,
-) -> DataFrame:
-    """Image near-duplicate pairs: dHash fingerprints + the generic
-    pigeonhole Hamming pairing (``dedup.hamming_near_dups``, the same
-    construction SimHash uses for text).  Returns (doc_a, doc_b,
-    hamming).  100 TB shape: ONE Arrow decode pass emits 64-bit
-    fingerprints (the images themselves never shuffle); banding
-    equi-joins slim (band, segment) keys — never a cross product; the
-    exact ``bit_count`` verify touches only banded candidates.  The
-    decode is the costly stage and is embarrassingly parallel —
-    partition count is the dial, and a persisted fingerprint table
-    (like the MinHash signature store) turns re-runs incremental.
-
-    The fingerprint frame is persisted (``dedup._persist`` — pass
-    ``caches`` to own the release): the pairing's lineage consumes it
-    FOUR times (band keys both sides + both verify sides), and without
-    the cache each consumer would re-run the Arrow decode — 4× the
-    dominant cost at any scale."""
-    from etl_olho_vivo_spark.operators.dedup import (
-        _persist,
-        hamming_near_dups,
-    )
-
-    hashes = _persist(
-        image_dhash(df, id_col).filter(F.col("dhash").isNotNull()), caches
-    )
-    return hamming_near_dups(
-        hashes,
-        hash_col="dhash",
-        bits=64,
-        max_hamming=max_hamming,
-        n_bands=n_bands,
-        id_col="doc_id",
-    )
 
 
 AFP_SCHEMA = T.StructType(
@@ -2009,75 +1794,6 @@ def audio_fingerprint(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.select(id_col, "media").mapInPandas(batches, AFP_SCHEMA)
 
 
-def audio_window_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    window_s: float = 1.0,
-    hop_s: float | None = None,
-) -> DataFrame:
-    """(doc_id, frame_idx, fp) — one spectral fingerprint per fixed-
-    DURATION window of the decoded mono samples: the audio sibling of
-    ``video_frame_fingerprints``, enabling excerpt-in-longer-track
-    containment through the same ``media_containment_pairs`` query
-    (the whole-clip ``audio_fingerprint`` time-segments the ENTIRE
-    signal into 9 equal parts, so an excerpt's segments cover
-    different audio and its fingerprint legitimately diverges — same
-    boundary as the video majority fold, same retrieval-side answer).
-
-    Windows are absolute-time anchored (``window_s`` seconds at the
-    clip's own sample rate, hop default window_s/2 = 50% overlap) so
-    an excerpt cut NEAR a hop boundary still shares most interior
-    windows with its source sample-exactly; ``frame_idx`` is the
-    window ordinal on the hop grid.  Containment recall degrades with
-    cut-point misalignment beyond ~hop/2 — the hop is the dial
-    (halving it doubles rows and decode-side FFT work).  Trailing
-    partial windows are dropped (a partial window's spectrum matches
-    nothing).  Opaque/undecodable/too-short media emit no rows.
-
-    100 TB shape: identical to the video frame relation — decode +
-    per-window FFT is the embarrassingly-parallel Arrow stage, only
-    slim 20-byte rows shuffle, and the relation persists as the
-    containment index the probes never re-decode."""
-    if window_s <= 0:
-        raise ValueError(f"window_s must be positive, got {window_s}")
-    hop_s = window_s / 2 if hop_s is None else hop_s
-    if hop_s <= 0:
-        raise ValueError(f"hop_s must be positive, got {hop_s}")
-    parse = _audio_parser(samples=True)
-    afp = _afp_fn()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, fps = [], [], []
-            for doc_id, media in zip(
-                pdf[id_col].astype("int64"), pdf["media"]
-            ):
-                r = parse(media)
-                mono, sr = r[8], r[3]
-                if mono is None or not sr:
-                    continue
-                win = int(round(window_s * sr))
-                hop = max(int(round(hop_s * sr)), 1)
-                for k, start in enumerate(
-                    range(0, len(mono) - win + 1, hop)
-                ):
-                    h = afp(mono[start:start + win])
-                    if h is None:
-                        continue
-                    ids.append(doc_id)
-                    idxs.append(k)
-                    fps.append(h)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "fp": pd.Series(fps, dtype="int64"),
-                }
-            )
-
-    return df.select(id_col, "media").mapInPandas(batches, FRAME_FP_SCHEMA)
-
-
 VFP_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -2154,8 +1870,8 @@ def video_fingerprint(
 ) -> DataFrame:
     """Arrow-batched per-VIDEO perceptual fingerprinting over the
     binary column — the third fingerprint family beside ``image_dhash``
-    and ``audio_fingerprint``: demux (the same MJPEG-in-AVI / Y4M
-    walkers ``sample_frames`` uses), decode every ``stride``-th frame
+    and ``audio_fingerprint``: demux (the MJPEG-in-AVI / Y4M walkers
+    ``_avi_demuxer`` / ``_y4m_demuxer``), decode every ``stride``-th frame
     through the image parser, dHash each, fold with the bitwise
     majority (``_vfp_votes_fn``).  Non-demuxable / zero-decodable-frame
     media yield a NULL ``vfp`` (the opaque contract) and never pair.
@@ -2170,9 +1886,8 @@ def video_fingerprint(
     the costly, embarrassingly-parallel Arrow stage (one demux + one
     JPEG/PGM decode per sampled frame, all executor-side); only
     (doc_id, 8-byte fingerprint) rows ever shuffle.  ``stride`` is the
-    decode-cost dial: 1 folds every frame (most noise immunity), the
-    ``sample_frames`` default 4 quarters the decode at a measured
-    few-bit fingerprint cost."""
+    decode-cost dial: 1 folds every frame (most noise immunity), 4
+    quarters the decode at a measured few-bit fingerprint cost."""
     if stride <= 0:
         raise ValueError(f"stride must be positive, got {stride}")
     demux_avi = _avi_demuxer()
@@ -2309,8 +2024,9 @@ def media_containment_pairs(
 ) -> DataFrame:
     """Sub-clip containment over per-frame fingerprint relations —
     MEDIA-AGNOSTIC: any (doc_id, frame_idx, fp) relation qualifies,
-    video frames (``video_frame_fingerprints``) and audio windows
-    (``audio_window_fingerprints``) alike, typically with the index
+    video frames (``video_frame_fingerprints``) and overlapping
+    hop-grid windows (the ``audio_containment`` registry row) alike,
+    typically with the index
     side read back from its persisted parquet.  Reports (doc_probe,
     doc_index, matched_frames, probe_frames, frac) for every probe
     clip whose frames are ≥ ``min_frac`` covered by near frames
@@ -2483,82 +2199,4 @@ def media_containment_pairs(
                 F.col("matched_frames") / F.col("probe_frames"), 6
             ).alias("frac"),
         )
-    )
-
-
-def video_near_dups(
-    df: DataFrame,
-    *,
-    max_hamming: int = 6,
-    n_bands: int = 8,
-    id_col: str = "doc_id",
-    stride: int = 1,
-    caches=None,
-) -> DataFrame:
-    """Video near-duplicate pairs: per-video majority fingerprints +
-    the generic pigeonhole Hamming pairing — two re-encodes of the
-    same clip (different container, re-quantized frames) resolve to
-    one survivor exactly like images and audio now do.  Returns
-    (doc_a, doc_b, hamming).  Same 100 TB shape as ``image_near_dups``
-    including the persisted fingerprint frame (the pairing lineage
-    would otherwise re-run the demux+decode four times).
-
-    A frame-count agreement guard was considered (pair only when
-    clip lengths are within a ratio) and rejected: it would need
-    ``n_frames`` in the streaming fingerprint store, forking the
-    store schema per kind, and frame-rate-resampled re-encodes — real
-    near-dups — legitimately change the count.  The majority
-    fingerprint alone is the identity, uniform across batch, CLI and
-    stream."""
-    from etl_olho_vivo_spark.operators.dedup import (
-        _persist,
-        hamming_near_dups,
-    )
-
-    prints = _persist(
-        video_fingerprint(df, id_col, stride=stride).filter(
-            F.col("vfp").isNotNull()
-        ),
-        caches,
-    )
-    return hamming_near_dups(
-        prints,
-        hash_col="vfp",
-        bits=64,
-        max_hamming=max_hamming,
-        n_bands=n_bands,
-        id_col="doc_id",
-    )
-
-
-def audio_near_dups(
-    df: DataFrame,
-    *,
-    max_hamming: int = 6,
-    n_bands: int = 8,
-    id_col: str = "doc_id",
-    caches=None,
-) -> DataFrame:
-    """Audio near-duplicate pairs: spectral fingerprints + the generic
-    pigeonhole Hamming pairing (``dedup.hamming_near_dups`` — the same
-    construction SimHash and the image dHash use).  Returns (doc_a,
-    doc_b, hamming).  Same 100 TB shape as ``image_near_dups``,
-    including the persisted fingerprint frame (the pairing lineage
-    would otherwise re-run the decode four times)."""
-    from etl_olho_vivo_spark.operators.dedup import (
-        _persist,
-        hamming_near_dups,
-    )
-
-    prints = _persist(
-        audio_fingerprint(df, id_col).filter(F.col("afp").isNotNull()),
-        caches,
-    )
-    return hamming_near_dups(
-        prints,
-        hash_col="afp",
-        bits=64,
-        max_hamming=max_hamming,
-        n_bands=n_bands,
-        id_col="doc_id",
     )

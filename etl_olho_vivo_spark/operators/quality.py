@@ -50,7 +50,6 @@ the beyond-reference training-data tier (SURVEY §2.11).
 from __future__ import annotations
 
 import json
-import math
 import os
 from typing import TYPE_CHECKING
 
@@ -446,105 +445,3 @@ def score_quality(
             F.round(sig, round_dp).alias("q_score"),
         )
     )
-
-
-def brute_force_reference(
-    texts_pos: list[str],
-    texts_neg: list[str],
-    *,
-    n_buckets: int,
-    iters: int,
-    lr: float,
-    l2: float,
-    round_dp: int = 6,
-    bucket_fn=None,
-    sample_frac: float | None = None,
-    balance_classes: bool = False,
-    seed: int = 0,
-    ids_pos: list | None = None,
-    ids_neg: list | None = None,
-) -> tuple[float, list[float]]:
-    """Pure-Python rederivation of the SAME training loop (for tests):
-    given the per-text bucket lists from ``bucket_fn``, runs the
-    identical rounded GD — full-batch, or sampled-gradient when
-    ``sample_frac`` is set (the same md5 qgrad-<seed>-<iter> Bernoulli
-    keys, which then need the docs' ids via ``ids_pos``/``ids_neg``;
-    ``balance_classes`` mirrors the per-class-rate Horvitz-Thompson
-    variant) — and returns (bias, weights)."""
-    import hashlib
-
-    docs = []
-    for y, texts, ids in (
-        (1.0, texts_pos, ids_pos), (0.0, texts_neg, ids_neg)
-    ):
-        for j, t in enumerate(texts):
-            buckets = bucket_fn(t)
-            if buckets:
-                hist: dict[int, float] = {}
-                for b in buckets:
-                    hist[b] = hist.get(b, 0.0) + 1.0
-                tot = sum(hist.values())
-                docs.append((
-                    y,
-                    {b: c / tot for b, c in hist.items()},
-                    None if ids is None else ids[j],
-                ))
-    n = float(len(docs))
-    sampling = sample_frac is not None and sample_frac < 1.0
-    if sampling and balance_classes:
-        n_pos = sum(1 for y, _, _ in docs if y == 1.0)
-        n_neg = len(docs) - n_pos
-        rates = {
-            1.0: min(1.0, sample_frac * n / (2 * n_pos)),
-            0.0: min(1.0, sample_frac * n / (2 * n_neg)),
-        }
-    else:
-        rates = {1.0: sample_frac or 1.0, 0.0: sample_frac or 1.0}
-    thresholds = {y: int(r * (1 << 32)) for y, r in rates.items()}
-    iws = (
-        {y: 1.0 / r for y, r in rates.items()}
-        if sampling and balance_classes
-        else {1.0: 1.0, 0.0: 1.0}
-    )
-    weights = [0.0] * n_buckets
-    bias = 0.0
-    for it in range(iters):
-        if sampling:
-            batch = []
-            for y, x, did in docs:
-                key = int(hashlib.md5(
-                    f"{y}:{did}:qgrad-{seed}-{it}".encode()
-                ).hexdigest()[:8], 16)
-                if key < thresholds[y]:
-                    batch.append((y, x, did))
-            if not batch:
-                continue
-            n_it = round(sum(iws[y] for y, _, _ in batch), round_dp)
-        else:
-            batch, n_it = docs, n
-        grad: dict[int, float] = {}
-        g_bias = 0.0
-        for y, x, _ in batch:
-            m = bias + sum(weights[b] * v for b, v in x.items())
-            resid = 1.0 / (1.0 + math.exp(-m)) - y
-            g_bias += resid * iws[y]
-            for b, v in x.items():
-                grad[b] = grad.get(b, 0.0) + resid * v * iws[y]
-        if sampling:
-            # mirror the Spark numerics: sums rounded in the job,
-            # normalized driver-side against the batch size, re-rounded
-            for b, g in grad.items():
-                weights[b] -= lr * (
-                    round(round(g, round_dp) / n_it, round_dp)
-                    + l2 * weights[b]
-                )
-            bias -= lr * round(round(g_bias, round_dp) / n_it, round_dp)
-        else:
-            for b, g in grad.items():
-                weights[b] -= lr * (
-                    round(g / n_it, round_dp) + l2 * weights[b]
-                )
-            bias -= lr * round(g_bias / n_it, round_dp)
-        weights = [round(w, round_dp + 3) for w in weights]
-        bias = round(bias, round_dp + 3)
-    return bias, weights

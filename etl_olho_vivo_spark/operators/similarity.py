@@ -714,13 +714,11 @@ def ivfpq_topk(
     arithmetic, so the DuckDB oracle matches hash-exactly.
 
     Scale shape: candidate work is confined to the probed fraction of
-    the corpus (against a persisted index the scan PRUNES to the probed
-    cell partitions — see ``io.ann_index.query_ivfpq_index``); the
-    per-cell LUTs (``n_probe · m_sub · k_codes`` ints) and probe
-    selection are bounded driver arithmetic over the collected centroid
-    table, exactly like ``query_ivf_index``; the ADC stage reads the
-    slim ``codes`` column only; the exact re-rank touches ``rerank``
-    rows.  Zero corpus-side shuffle.
+    the corpus; the per-cell LUTs (``n_probe · m_sub · k_codes`` ints)
+    and probe selection are bounded driver arithmetic over the collected
+    centroid table, exactly like ``query_ivf_index``; the ADC stage
+    reads the slim ``codes`` column only; the exact re-rank touches
+    ``rerank`` rows.  Zero corpus-side shuffle.
 
     ``coded`` accepts a persisted ``ivfpq_encode`` result (the serving
     path — pass the SAME ``centroids`` and ``codebooks`` that produced

@@ -20,7 +20,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import AtomicType
 
 
 def salted_join(
@@ -105,56 +104,3 @@ def salted_agg(
             for name, (fn, _) in aggs.items()
         ]
     )
-
-
-def hot_keys(
-    df: DataFrame, col: str, support: float = 0.01
-) -> list:
-    """Detect heavy-hitter values of ``col`` in ONE pass — the decision
-    input for salting.
-
-    Wraps ``df.stat.freqItems`` (Karp/Shenker/Papadimitriou misra-gries
-    style streaming sketch; built into Spark): returns a SUPERSET of
-    every value whose frequency exceeds ``support`` of the rows, with no
-    shuffle and driver state bounded by ``1/support`` candidates.  False
-    positives are possible and harmless here — salting a non-hot key
-    costs one extra tiny exchange row; MISSING a hot key is what strands
-    a reducer, and the sketch guarantees that cannot happen above the
-    support threshold.
-
-    The production workflow this enables at 100 TB:
-
-        hot = hot_keys(fact, "user_id", support=0.001)   # one scan
-        if hot: out = salted_agg(fact, ["user_id"], ...)  # or salted_join
-        else:   out = fact.groupBy("user_id").agg(...)
-
-    i.e. pay the salting rewrite only when the data actually needs it,
-    decided by a sketch pass instead of a full groupBy count.
-    """
-    if not 1e-4 <= support < 1.0:
-        # Spark's freqItems itself requires support >= 1e-4; validating
-        # here keeps the error at THIS contract instead of a mid-job one
-        raise ValueError(
-            f"support must be in [1e-4, 1), got {support} "
-            "(Spark's freqItems floor is 1e-4)"
-        )
-    # resolve case-insensitively (the analyzer's default) — a miss falls
-    # through to freqItems' own missing-column error
-    matches = [f for f in df.schema.fields if f.name.lower() == col.lower()]
-    if matches and not isinstance(matches[0].dataType, AtomicType):
-        # freqItems on array/map/struct columns is unsupported, and the
-        # collected Python values would not be mutually orderable for
-        # the sorted() below — fail at this contract, not mid-sort
-        raise TypeError(
-            f"hot_keys requires an atomic (orderable) column; "
-            f"{col!r} is {matches[0].dataType.simpleString()}"
-        )
-    (row,) = df.stat.freqItems([col], support).collect()
-    vals = row[f"{col}_freqItems"]
-    # NULL can itself be a hot key (anonymous ids are a classic skew
-    # source) and freqItems reports it as None — return it LAST so the
-    # non-null portion stays sorted and comparable
-    out = sorted(v for v in vals if v is not None)
-    if any(v is None for v in vals):
-        out.append(None)
-    return out

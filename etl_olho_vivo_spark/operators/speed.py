@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_olho_vivo_spark.functions.geo import haversine_m
@@ -161,23 +161,3 @@ def velocidades_agregadas(cleaned: DataFrame) -> DataFrame:
 def acessiveis(cleaned: DataFrame) -> DataFrame:
     """Mean position per interval with accessibility flag (ref ``:166``)."""
     return _aggregate(cleaned).select(*ACESSIVEIS_COLUMNS)
-
-
-def run_all(
-    df: DataFrame,
-    tiebreakers: Sequence[str] = (),
-) -> dict[str, DataFrame]:
-    """The three derived datasets off one shared cleaned frame.
-
-    The caller should ``.persist()`` the cleaned frame when materializing
-    all three (SURVEY §3.3: one DAG, three sinks); at 100 TB the agg output
-    is small but the cleaned frame is scan-sized, so persistence level is
-    the caller's policy decision.
-    """
-    cleaned = cleaned_speeds(df, tiebreakers)
-    agg = _aggregate(cleaned)
-    return {
-        "lentidao": lentidao(cleaned),
-        "velocidades_agregadas": agg.select(*VELOCIDADES_COLUMNS),
-        "acessiveis": agg.select(*ACESSIVEIS_COLUMNS),
-    }

@@ -10,13 +10,13 @@ Two published failure modes motivate this operator:
    on any cluster, any partitioning, any retry.
 2. **Near-duplicate leakage** — splitting i.i.d. by document lets a
    near-duplicate of a validation document sit in train, inflating eval
-   numbers exactly like benchmark contamination.  ``leakage_safe_splits``
-   splits by the near-dup *cluster* label (connected components over
-   MinHash/SimHash pairs, operators/dedup.py), so every member of a
-   cluster co-travels into one split.
+   numbers exactly like benchmark contamination.  ``assign_splits``
+   keyed on the near-dup *cluster* label (``by="component"`` after
+   joining ``dedup.connected_components`` over MinHash/SimHash pairs)
+   makes every member of a cluster co-travel into one split.
 
 Scale shape: assignment itself is a map-side projection (one md5 per
-row, no shuffle).  The leakage-safe variant adds one join of the corpus
+row, no shuffle).  Keying on clusters adds one join of the corpus
 against the component map, which is pairs-sized — orders of magnitude
 smaller than the corpus — so Catalyst/AQE broadcasts it when it fits
 and falls back to a hash-partitioned join when it does not.
@@ -32,7 +32,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_olho_vivo_spark.functions.hashing import seeded_key_expr
-from etl_olho_vivo_spark.operators.dedup import connected_components
 
 _BUCKETS = 10_000
 
@@ -126,8 +125,9 @@ def cap_per_group(
     One hash shuffle on ``group``; rank is ``row_number`` over the
     group window.  Skew note: a pathologically hot group (half the
     corpus one domain) serializes its window sort into one task —
-    pre-filter such groups with ``operators/skew.hot_keys`` or raise
-    their cap separately if that's a real shape in your data.
+    pre-filter such groups (``df.stat.freqItems`` finds them in one
+    pass) or raise their cap separately if that's a real shape in your
+    data.
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
@@ -146,37 +146,4 @@ def cap_per_group(
         df.withColumn("__rank__", rank)
         .filter(F.col("__rank__") <= n)
         .drop("__rank__")
-    )
-
-
-def leakage_safe_splits(
-    docs: DataFrame,
-    pairs: DataFrame,
-    weights: dict[str, float],
-    *,
-    seed: int = 0,
-    id_col: str = "doc_id",
-    a: str = "doc_a",
-    b: str = "doc_b",
-    out: str = "split",
-) -> DataFrame:
-    """Split so every near-dup cluster lands wholly inside one split.
-
-    ``pairs`` is any near-dup pair relation (MinHash-LSH, SimHash,
-    n-gram Jaccard — operators/dedup.py); its connected components
-    become the split keys.  Documents in no pair split by their own id.
-    The component map is pairs-sized, so the join broadcasts at
-    benchmark-like densities and hash-partitions otherwise — never a
-    corpus-sized build side.
-    """
-    comp = connected_components(pairs, a=a, b=b).withColumnRenamed(
-        "doc_id", id_col
-    )
-    joined = docs.join(comp, id_col, "left")
-    keyed = joined.withColumn(
-        "__split_key__", F.coalesce(F.col("component"), F.col(id_col))
-    )
-    return (
-        keyed.withColumn(out, split_column("__split_key__", weights, seed))
-        .drop("__split_key__", "component")
     )

@@ -422,39 +422,6 @@ def pack_chunks(
     )
 
 
-def stratified_sample(
-    df: DataFrame,
-    fractions: dict[str, float],
-    strata_col: str,
-    id_col: str,
-    default_fraction: float = 0.0,
-) -> DataFrame:
-    """Deterministic per-stratum sampling — corpus mixture control.
-
-    Training mixes are quotas per source/language; ``sample()``/``rand()``
-    draws differ across retries and partitionings, so the engine samples
-    by md5-threshold on the row identity instead: row kept iff
-    ``first 8 hex digits of md5(id) < fraction · 16^8``.  The same row is
-    in or out forever, on any cluster, at any parallelism — and the
-    predicate is scan-level (no shuffle, no count pass per stratum).
-    Strata absent from ``fractions`` fall back to ``default_fraction``
-    (0.0 = drop, the explicit-mixture posture).
-    """
-    # the ONE canonical md5-prefix hash (functions/hashing.py) — an
-    # inline copy here could drift from the dedup/fingerprint operators
-    # and from the DuckDB oracle form
-    from etl_olho_vivo_spark.functions.hashing import spark_token_hash
-
-    bucket = F.expr(spark_token_hash(f"CAST({id_col} AS STRING)"))
-    space = float(16**8)
-    expr = F.lit(default_fraction)
-    for stratum, frac in fractions.items():
-        expr = F.when(F.col(strata_col) == stratum, F.lit(frac)).otherwise(
-            expr
-        )
-    return df.filter(bucket < expr * space)
-
-
 def chunk_docs(
     df: DataFrame,
     max_tokens: int,

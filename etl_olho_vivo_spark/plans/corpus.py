@@ -612,8 +612,8 @@ def run_corpus(
             # map-side md5 projection.  Near-dup leakage across splits
             # is already handled UPSTREAM by the dedup stages (each
             # cluster keeps one survivor); a pipeline that splits
-            # WITHOUT dropping near-dups should use
-            # split.leakage_safe_splits on the pair graph instead.
+            # WITHOUT dropping near-dups should key assign_splits on
+            # the connected-component label of the pair graph instead.
             kept = splitops.assign_splits(kept, splits, seed=split_seed)
             out_cols.append("split")
             for r in kept.groupBy("split").count().collect():

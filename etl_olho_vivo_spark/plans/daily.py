@@ -17,8 +17,10 @@ Scale notes:
   the scan + window;
 - at 100 TB persistence spills to disk (MEMORY_AND_DISK) rather than
   recomputing extra scans; the agg outputs are tiny next to the scan;
-- exactly two shuffles total (lag window, 9-key agg) regardless of sink
-  count;
+- three shuffles per run: the lag window once (its output is the
+  persisted frame) and the 9-key aggregate twice, because the
+  ``velocidades_agregadas`` and ``acessiveis`` sinks each run
+  ``speed._aggregate`` in their own write job;
 - row counts ride the write job itself via ``Observation``
   (CollectMetrics folds the count into the same action) — a 100 TB sink
   never pays a second full recompute just to report its size.

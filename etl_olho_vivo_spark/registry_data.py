@@ -792,11 +792,11 @@ def q_containment_stop_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Surrogate HOP-GRID windows for the audio containment oracle (round
-# 15, r14 verdict #3): audio_window_fingerprints extracts one
-# fingerprint per fixed-duration window on a hop grid with 50% overlap
-# (hop = window/2 default) and frame_idx = the window ORDINAL k, not a
-# sample position — the property the video surrogate (disjoint-ish
-# stride-2 3-grams indexed by position) does not exercise.  The text
+# 15, r14 verdict #3): one fingerprint per fixed-duration window on a
+# hop grid with 50% overlap (hop = window/2) and frame_idx = the
+# window ORDINAL k, not a sample position — the property the video
+# surrogate (disjoint-ish stride-2 3-grams indexed by position) does
+# not exercise.  The text
 # twin: window = 4 word-hashes starting at position k*2 (hop 2 = half
 # the window, so adjacent windows share 2 grams), fp = chained modular
 # fold, 64-bit assembly identical to the frame recipe.  Spark reads
@@ -848,11 +848,10 @@ FROM m JOIN n ON n.doc_id = m.doc_probe
 WHERE m.matched_frames * 1000000 >= 600000 * n.n_frames
 """,
     doc="Audio-shape sub-clip containment under a local oracle (round "
-    "15, r14 verdict #3): the HOP-GRID window extraction of "
-    "audio_window_fingerprints (multimodal.py — window ordinal k on a "
-    "hop grid, hop = window/2 → 50% overlap between adjacent windows, "
-    "trailing partial dropped) re-expressed as a deterministic text "
-    "surrogate DuckDB recomputes, probed through the SAME value-"
+    "15, r14 verdict #3): HOP-GRID window extraction (window ordinal "
+    "k on a hop grid, hop = window/2 → 50% overlap between adjacent "
+    "windows, trailing partial dropped) expressed as a deterministic "
+    "text surrogate DuckDB recomputes, probed through the SAME value-"
     "collapsed media_containment_pairs the video row pins — proving "
     "the containment query is genuinely media-agnostic at a SECOND "
     "window geometry (overlapping grid vs the video row's positional "
@@ -1526,10 +1525,8 @@ ORDER BY l2_exact, a.vec_id LIMIT 10
     "of vec_id 8..23 — seeds start past the centroids because the "
     "first n_cells residuals are identically zero), exact-integer "
     "re-rank of the 50-best pool.  The candidate scan touches only the "
-    "probed cells' codes (against the persisted index the scan PRUNES "
-    "to the probed cell partitions — io/ann_index.py "
-    "build/load/append/query_ivfpq_index), per-cell LUTs are bounded "
-    "driver arithmetic, and every stage is integer math, so the oracle "
+    "probed cells' codes, per-cell LUTs are bounded driver "
+    "arithmetic, and every stage is integer math, so the oracle "
     "matches hash-exactly.  Promoted to the driver window in round 10 "
     "(took ivf_cells' slot per the rotation policy): the composed "
     "serving stack is the flagship ANN path and belongs under the "

@@ -2,7 +2,8 @@
 
 One definition of "replicate a table N× with perturbed keys" shared by
 the 10× plan probe (tests/test_scale_probe.py), the starved-JVM memory
-probe (tests/test_memory_probe.py), and the bench's scaling tier
+probe (tests/test_memory_probe.py, whose fact-trio replica lives in
+tests/datagen.py on these helpers), and the bench's scaling tier
 (bench.py --scale) — the three must scale the same shape or their
 evidence diverges silently.
 
@@ -93,48 +94,3 @@ def replicate_embeddings(
         (F.col("vec_id") + F.col("rep") * F.lit(OFF)).alias("vec_id"),
         "embedding", "label",
     ).write.mode("overwrite").parquet(out)
-
-
-def replicate_tpch_facts(
-    spark: SparkSession, src_dir: str, out_dir: str, replicas: int
-) -> None:
-    """``replicas``× copies of the orders/lineitem/customer fact trio
-    with consistently perturbed join keys (orderkey/custkey shift
-    together, so per-order and per-customer join fan-outs are preserved
-    at every replica), plus verbatim copies of the remaining tables —
-    the input for fact-join scale/memory probes.
-    """
-    import shutil
-
-    from etl_olho_vivo_spark.sources.tables import pin_parquet_instant_confs
-
-    pin_parquet_instant_confs(spark)
-    rep = _rep_col(replicas)
-
-    o = spark.read.parquet(f"{src_dir}/orders.parquet")
-    _check_ids_below_off(o, "o_orderkey", "o_custkey")
-    o.select("*", rep).select(
-        (F.col("o_orderkey") + F.col("rep") * F.lit(OFF)).alias("o_orderkey"),
-        (F.col("o_custkey") + F.col("rep") * F.lit(OFF)).alias("o_custkey"),
-        *[c for c in o.columns if c not in ("o_orderkey", "o_custkey")],
-    ).write.mode("overwrite").parquet(f"{out_dir}/orders.parquet")
-
-    li = spark.read.parquet(f"{src_dir}/lineitem.parquet")
-    _check_ids_below_off(li, "l_orderkey")
-    li.select("*", rep).select(
-        (F.col("l_orderkey") + F.col("rep") * F.lit(OFF)).alias("l_orderkey"),
-        *[c for c in li.columns if c != "l_orderkey"],
-    ).write.mode("overwrite").parquet(f"{out_dir}/lineitem.parquet")
-
-    cu = spark.read.parquet(f"{src_dir}/customer.parquet")
-    _check_ids_below_off(cu, "c_custkey")
-    cu.select("*", rep).select(
-        (F.col("c_custkey") + F.col("rep") * F.lit(OFF)).alias("c_custkey"),
-        *[c for c in cu.columns if c != "c_custkey"],
-    ).write.mode("overwrite").parquet(f"{out_dir}/customer.parquet")
-
-    for t in (
-        "nation", "region", "part", "supplier",
-        "events", "documents", "embeddings",
-    ):
-        shutil.copy(f"{src_dir}/{t}.parquet", f"{out_dir}/{t}.parquet")

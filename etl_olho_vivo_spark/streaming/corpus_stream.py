@@ -1,4 +1,4 @@
-"""Continuous corpus ingestion — the streaming face of the dedup family.
+"""Streaming corpus ingestion — the streaming face of the dedup family.
 
 `plans/corpus.py` rebuilds a corpus from a full documents table;
 production LLM-data pipelines instead receive crawl batches continuously
@@ -282,7 +282,6 @@ def run_corpus_stream(
     checkpoint_dir: str,
     threshold: float = 0.5,
     text: str = "text",
-    available_now: bool = True,
     eval_grams_dir: str | None = None,
     eval_ngram: int = 5,
     gates: dict | None = None,
@@ -294,12 +293,14 @@ def run_corpus_stream(
     stats_dir: str | None = None,
     stats_dims: tuple[str, ...] = (),
 ):
-    """Start the continuous ingestion query over a streaming documents
-    frame (any readStream source with doc_id + text columns).
-    ``dedup_resolution`` (greedy|components — see ``admit_batch``) is
-    validated HERE at start-up, not inside the first foreachBatch;
-    so are the ``stats_dims`` (they must exist in the stream schema —
-    a typo'd dimension must not fail inside batch 50).
+    """Start the drain query over a streaming documents frame (any
+    readStream source with doc_id + text columns): one
+    ``Trigger.AvailableNow`` run that admits every file present at
+    start-up in micro-batches, then stops.  ``dedup_resolution``
+    (greedy|components — see ``admit_batch``) is validated HERE at
+    start-up, not inside the first foreachBatch; so are the
+    ``stats_dims`` (they must exist in the stream schema — a typo'd
+    dimension must not fail inside batch 50).
 
     The eval gram store is loaded, n-verified, and persisted ONCE here
     (benchmark-sized — it fits; the cache lives as long as the stream),
@@ -421,10 +422,9 @@ def run_corpus_stream(
             stats_dims=stats_dims,
         )
 
-    writer = (
+    return (
         docs_stream.writeStream.foreachBatch(_admit)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -396,13 +396,14 @@ def run_media_stream(
     stats_dir: str | None = None,
     frame_index_dir: str | None = None,
     frame_stride: int = 1,
-    available_now: bool = True,
 ):
-    """Start the continuous media-ingestion query over a streaming
-    frame with (doc_id, media) columns.  Config errors (unknown kind,
-    an unsatisfiable banding, a gate dial that cannot apply to the
-    kind, a frame index on a non-video stream) fail HERE at start-up,
-    not inside the first foreachBatch."""
+    """Start the media drain query over a streaming frame with
+    (doc_id, media) columns: one ``Trigger.AvailableNow`` run that
+    admits every file present at start-up in micro-batches, then
+    stops.  Config errors (unknown kind, an unsatisfiable banding, a
+    gate dial that cannot apply to the kind, a frame index on a
+    non-video stream) fail HERE at start-up, not inside the first
+    foreachBatch."""
     _hamming_validate(FP_BITS, max_hamming, n_bands)
     if kind not in MEDIA_KINDS:
         raise ValueError(
@@ -426,10 +427,9 @@ def run_media_stream(
             frame_index_dir=frame_index_dir, frame_stride=frame_stride,
         )
 
-    writer = (
+    return (
         media_stream.writeStream.foreachBatch(_admit)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -14,7 +14,10 @@ Streaming over the same raw JSON zone:
 - **30-min windows** — ``F.window`` over the event-time instant with a
   watermark: the declarative replacement for "the 6:30 job covers
   yesterday" (late pings beyond the watermark are dropped *explicitly*
-  rather than silently landing in the wrong daily file).
+  rather than silently landing in the wrong daily file).  The
+  ``streaming_interval_counts`` registry row (``registry_ingest.py``)
+  runs this aggregation in complete and watermarked append mode under
+  the DuckDB oracle.
 - **online lag** — the per-vehicle previous-ping state
   (``etl-olho-vivo-velocidades-medias.py:101-103``) becomes
   ``applyInPandasWithState`` keyed by ``prefixo_veiculo`` holding the last
@@ -29,8 +32,8 @@ the batch sort).  The PAIRING path itself carries no watermark — no
 event-time bound evicts or gates the per-vehicle state (NoTimeout); what
 bounds the damage from a stale replay is the downstream ≤600 s gap
 filter, which drops any pair whose members are far apart in event time.
-Watermarks apply to the windowed aggregation path
-(``stream_interval_counts``), where late data is actually dropped.
+Watermarks apply to windowed aggregations, where late data is actually
+dropped.
 
 API pin — ``applyInPandasWithState`` vs Spark 4 ``transformWithState``:
 this runtime (PySpark 4.1.2) ships both, and ``transformWithStateInPandas``
@@ -81,62 +84,6 @@ def stream_raw_posicoes(
     return flatten_posicoes(reader.json(raw_dir))
 
 
-def stream_dedup_exact(
-    stream: DataFrame,
-    keys: list[str],
-    ts: str = "event_time",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Exact streaming dedup for at-least-once sources — emit each key's
-    FIRST arrival, drop redelivery within the watermark horizon.
-
-    ``dropDuplicatesWithinWatermark`` is the bounded-state form: per-key
-    state is evicted once the watermark passes it, so state size tracks
-    the redelivery window, not the stream's lifetime.  A bare
-    ``dropDuplicates`` on a stream keeps every key forever — the state
-    store IS the corpus after a month of 100 TB/day ingestion, which is
-    why this wrapper never exposes it.  The watermark must cover the
-    source's maximum redelivery lag (e.g. a Kafka transaction timeout or
-    a file-landing retry horizon); duplicates arriving later than that
-    are re-admitted — downstream exact dedup (operators/dedup.py) is the
-    backstop, same layering as the corpus stream's near-dup store.
-    """
-    return stream.withWatermark(ts, watermark).dropDuplicatesWithinWatermark(
-        list(keys)
-    )
-
-
-def with_event_time(pos: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Attach the event-time instant (TZ-free epoch→timestamp) + watermark."""
-    return pos.withColumn(
-        "event_time", F.timestamp_seconds(F.col("timestamp"))
-    ).withWatermark("event_time", watermark)
-
-
-def stream_interval_counts(pos: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """30-min tumbling ping/vehicle counts — the streaming twin of F2+A1.
-
-    ``F.window`` has identical bucket semantics to the batch
-    ``floor(ts/1800)`` labels; the label columns are derived from the
-    window start so batch and stream emit byte-identical keys.
-    """
-    e = with_event_time(pos, watermark)
-    win = F.window("event_time", "30 minutes")
-    return (
-        e.groupBy(win.alias("w"), "codigo_linha")
-        .agg(
-            F.count(F.lit(1)).alias("n_pings"),
-            F.approx_count_distinct("prefixo_veiculo").alias("n_vehicles"),
-        )
-        .select(
-            F.unix_timestamp("w.start").alias("bucket_start"),
-            "codigo_linha",
-            "n_pings",
-            "n_vehicles",
-        )
-    )
-
-
 _PAIR_SCHEMA = T.StructType(
     [
         T.StructField("prefixo_veiculo", T.LongType()),
@@ -157,83 +104,6 @@ _STATE_SCHEMA = T.StructType(
         T.StructField("py", T.DoubleType()),
     ]
 )
-
-
-def stream_colocation_pairs(
-    pos: DataFrame,
-    radius_m: float = 500.0,
-    watermark: str = "1 hour",
-    bucket_s: int = 1800,
-) -> DataFrame:
-    """Streaming geo co-location — the repo's stream-STREAM join: close
-    ping-pair events (bucket, vehicle_a, vehicle_b, dist_m) as they
-    happen, via a watermarked SELF-join of the position stream on the
-    SAME grid the batch operator uses (``operators/colocate.py
-    grid_project`` — one definition of cells and buckets, so parity
-    with the batch rollup is by construction).
-
-    Mechanics: both branches carry the event-time watermark; the join
-    keys are (event-time window, cell_y, cell_x) — window EQUALITY is
-    one of the two state-cleanup conditions Spark's stream-stream
-    inner join accepts (the other being a time-range predicate), so
-    each side's join state is dropped once the watermark passes the
-    window, bounding state by (watermark span × ping rate).  The
-    probe branch explodes to its half-plane neighbor cells; the build
-    branch keeps home cells; the shared orientation filter plus the
-    least/greatest key reorder makes each qualifying ping pair appear
-    exactly once (the batch operator's exactly-once argument,
-    unchanged).  Append-mode safe: each matched pair is
-    emitted once, no aggregation state — the per-bucket
-    (n_close, min_dist) rollup is a BATCH query over the sink
-    (chaining the aggregation here would stack a second stateful
-    operator for no streaming benefit).
-
-    Late data: pings later than ``watermark`` are dropped by the join
-    state cleanup on BOTH sides — the standard inner-join watermark
-    contract; size the watermark to the feed's real disorder."""
-    e = with_event_time(pos, watermark)
-    from etl_olho_vivo_spark.operators.colocate import (
-        grid_project,
-        neighbor_offsets,
-        pair_distance,
-        pair_orientation_filter,
-    )
-
-    base = grid_project(e, radius_m, bucket_s=bucket_s,
-                        extra=("event_time",))
-    win = F.window("event_time", f"{bucket_s} seconds")
-    # half-plane probe explode + orientation filter + least/greatest
-    # key reorder — the batch operator's round-15 shape, one shared
-    # definition (see colocate.neighbor_offsets)
-    probe = base.select(
-        F.col("k").alias("ka"),
-        F.col("la").alias("la_a"), F.col("lo").alias("lo_a"),
-        "bucket", win.alias("w"),
-        F.explode(neighbor_offsets()).alias("o"),
-        "cy", "cx",
-    ).select(
-        "ka", "la_a", "lo_a", "bucket", "w",
-        (F.col("cy") + F.col("o.dy")).alias("cy"),
-        (F.col("cx") + F.col("o.dx")).alias("cx"),
-        ((F.col("o.dy") == 0) & (F.col("o.dx") == 0)).alias("same"),
-    )
-    build = base.select(
-        F.col("k").alias("kb"),
-        F.col("la").alias("la_b"), F.col("lo").alias("lo_b"),
-        win.alias("w"), "cy", "cx",
-    )
-    return (
-        probe.join(build, ["w", "cy", "cx"])
-        .filter(pair_orientation_filter())
-        .withColumn("dist_m", pair_distance())
-        .filter(F.col("dist_m") <= radius_m)
-        .select(
-            "bucket",
-            F.least("ka", "kb").alias("vehicle_a"),
-            F.greatest("ka", "kb").alias("vehicle_b"),
-            "dist_m",
-        )
-    )
 
 
 def stream_ping_pairs(

@@ -60,3 +60,14 @@ def cache_id(scan) -> int:
 
     builder = scan.relation().cacheBuilder()
     return SparkContext._jvm.System.identityHashCode(builder)
+
+
+def hash_shuffles(node) -> int:
+    """Hash-partitioning ``ShuffleExchangeExec`` nodes under ``node``."""
+    return sum(
+        1
+        for n in walk(node)
+        if node_name(n) == "ShuffleExchangeExec"
+        and n.outputPartitioning().getClass().getSimpleName()
+        == "HashPartitioning"
+    )

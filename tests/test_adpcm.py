@@ -15,6 +15,7 @@ import struct
 import pytest
 
 from etl_olho_vivo_spark.operators import multimodal
+from tests.media_pairs import media_near_dups
 
 STEP = (
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31,
@@ -215,5 +216,5 @@ def test_adpcm_near_dups_with_its_pcm_source(spark):
     ham = bin((fps[1]["afp"] ^ fps[2]["afp"]) & ((1 << 64) - 1)).count("1")
     assert ham <= 6, ham
     pairs = [(r["doc_a"], r["doc_b"]) for r in
-             multimodal.audio_near_dups(df, max_hamming=6).collect()]
+             media_near_dups(df, "audio", max_hamming=6).collect()]
     assert pairs == [(1, 2)]

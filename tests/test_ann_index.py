@@ -179,37 +179,6 @@ def test_compaction_crash_recovery_and_writer_guard(spark, emb, tmp_path):
     assert ann_index.load_ivf_index(spark, path).cells.count() == n0 + 50
 
 
-def test_streaming_ingest_into_index(spark, emb, tmp_path):
-    """run_embedding_stream drains a landing zone into the index via
-    per-batch idempotent appends; queries then see streamed vectors."""
-    import os
-
-    landing = tmp_path / "landing"
-    os.makedirs(landing)
-    path = str(tmp_path / "index")
-    base = emb.filter(F.col("vec_id") < 400)
-    ann_index.build_ivf_index(base, path, n_cells=8, use_kmeans=False)
-    emb.filter(F.col("vec_id") >= 400).coalesce(1).write.parquet(
-        str(landing / "b0")
-    )
-    schema = spark.read.parquet(str(landing / "b0")).schema
-    q = ann_index.run_embedding_stream(
-        spark.readStream.schema(schema).parquet(str(landing / "*")),
-        path,
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination()
-    idx = ann_index.load_ivf_index(spark, path)
-    assert idx.cells.count() == emb.count()
-    qvec = emb.filter(F.col("vec_id") == 450).collect()[0]["embedding"]
-    hits = ann_index.query_ivf_index(
-        idx, list(qvec), k=3, n_probe=8
-    ).collect()
-    # the streamed vector is servable (MIPS ranking — self need not be
-    # the top dot, but it must be in a full-probe top-3 of itself)
-    assert 450 in {h["vec_id"] for h in hits}
-
-
 def test_serving_scan_is_partition_pruned(spark, emb, built):
     """The 100 TB contract: a 2-probe query must read ONLY its probed
     cell partitions — the scan's PartitionFilters carry the cell_id IN
@@ -593,226 +562,6 @@ def test_dequantized_cells_roundtrip_is_lossless(spark, emb, tmp_path):
         .collect()
     }
     assert requant == stored
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ: the composed index (probe cells -> residual ADC -> exact re-rank)
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def pq_built(spark, emb, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("ivfpq") / "index")
-    # first-vectors seeding so the in-memory operator (same default
-    # centroids + seed-pinned residual codebooks) is an exact target
-    n = ann_index.build_ivfpq_index(emb, path, n_cells=8, use_kmeans=False)
-    assert n == emb.count()
-    return path
-
-
-def test_ivfpq_query_parity_with_inline_operator(spark, emb, pq_built):
-    """Serving a corpus vector through the persisted IVF-PQ index ranks
-    exactly like the inline ivfpq_topk over the same centroids and
-    codebooks.  The external-vector path cannot exclude the query's own
-    identity row, so the pool/k are widened by one and the identity row
-    (adc 0, l2 0) dropped before comparing."""
-    idx = ann_index.load_ivfpq_index(spark, pq_built)
-    qvec = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-    served = [
-        (r["vec_id"], r["cell_id"], r["adc_dist"], r["l2_exact"])
-        for r in ann_index.query_ivfpq_index(
-            idx, list(qvec), k=11, n_probe=2, rerank=51
-        ).collect()
-        if r["vec_id"] != 0
-    ][:10]
-    inline = [
-        (r["vec_id"], r["cell_id"], r["adc_dist"], r["l2_exact"])
-        for r in similarity.ivfpq_topk(
-            emb, query_vec_id=0, k=10, n_cells=8, n_probe=2, rerank=50
-        ).collect()
-    ]
-    assert served == inline
-
-
-def test_ivfpq_serving_scan_is_pruned_slim_and_shuffle_free(
-    spark, emb, pq_built
-):
-    """The 100 TB serving contract, all three clauses: (1) the scan
-    prunes to the probed cell partitions (PartitionFilters carry the
-    2-cell IN list); (2) the ADC stage reads the slim codes column,
-    never the qv bytes (ReadSchema of the codes scan excludes qv);
-    (3) zero corpus-side shuffle — the pool reduction is TakeOrdered
-    and the qv fetch is a broadcast join of the bounded pool."""
-    import re
-
-    idx = ann_index.load_ivfpq_index(spark, pq_built)
-    qvec = emb.filter(F.col("vec_id") == 3).collect()[0]["embedding"]
-    q = ann_index.query_ivfpq_index(idx, list(qvec), k=5, n_probe=2)
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    scans = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert scans, plan[:2000]
-    for scan in scans:
-        pf = scan.split("PartitionFilters", 1)[1][:300]
-        assert "cell_id" in pf, scan
-        in_list = re.search(r"cell_id[^ ]* IN \(([^)]*)\)", pf)
-        assert in_list and len(in_list.group(1).split(",")) == 2, pf
-    code_scans = [
-        ln for ln in scans
-        if "ReadSchema" in ln and "codes" in ln.split("ReadSchema", 1)[1]
-    ]
-    assert code_scans, scans
-    for scan in code_scans:
-        assert "qv" not in scan.split("ReadSchema", 1)[1], scan
-    assert "Exchange hashpartitioning" not in plan, plan[:3000]
-    assert "TakeOrderedAndProject" in plan
-
-
-@pytest.mark.sweep
-def test_ivfpq_lifecycle_append_compact_rebuild(spark, emb, tmp_path):
-    """Append encodes against the persisted codebooks and is servable;
-    compaction preserves the codes column; the occupancy rebuild routes
-    through build_ivfpq_index so the composed index SURVIVES a rebuild
-    (a plain-IVF rebuild would silently strip the ADC path)."""
-    path = str(tmp_path / "index")
-    base = emb.filter(F.col("vec_id") < 400)
-    ann_index.build_ivfpq_index(base, path, n_cells=8, use_kmeans=False)
-    batch = emb.filter(F.col("vec_id") >= 400)
-    assert ann_index.append_to_ivfpq_index(batch, path, 0) is True
-    # replay idempotence + watermark contract are inherited from the
-    # IVF append; spot-check the replay here
-    assert ann_index.append_to_ivfpq_index(batch, path, 0) is True
-    idx = ann_index.load_ivfpq_index(spark, path)
-    assert idx.cells.count() == emb.count()
-    v450 = emb.filter(F.col("vec_id") == 450).collect()[0]["embedding"]
-    got = ann_index.query_ivfpq_index(
-        idx, list(v450), k=3, n_probe=8, rerank=emb.count()
-    ).collect()
-    assert got[0]["vec_id"] == 450 and got[0]["l2_exact"] == 0
-    # compact folds batches and keeps codes
-    ann_index.compact_ivf_index(spark, path)
-    cells = spark.read.parquet(f"{path}/cells")
-    assert "codes" in cells.columns
-    assert cells.filter(F.col("codes").isNull()).count() == 0
-    assert set(
-        r["ingest_batch_id"]
-        for r in cells.select("ingest_batch_id").distinct().collect()
-    ) == {-1}
-    # rebuild (forced via a tiny skew threshold) keeps the composed form
-    out = ann_index.maybe_rebuild_ivf_index(spark, path, max_skew=1e-9)
-    assert out["rebuilt"] is True
-    idx2 = ann_index.load_ivfpq_index(spark, path)
-    assert "codes" in idx2.cells.columns
-    assert idx2.cells.count() == emb.count()
-    got2 = ann_index.query_ivfpq_index(
-        idx2, list(v450), k=3, n_probe=8, rerank=emb.count()
-    ).collect()
-    assert got2[0]["vec_id"] == 450 and got2[0]["l2_exact"] == 0
-
-
-@pytest.mark.sweep
-def test_ivfpq_recall_meets_ivf_floors_at_equal_probes(
-    spark, emb, tmp_path
-):
-    """The composition must not cost retrieval quality: recall@10 of the
-    served IVF-PQ stack clears the SAME floors the IVF-only index is
-    held to at every probe count (test_served_recall_floor_vs_brute_
-    force: 0.2/0.4/0.6/0.95).  Operating point: k_codes=64 residual
-    codewords, rerank=240 — the pool is the recall dial that repairs
-    ADC approximation error (measured: 0.29/0.52/0.72/0.98 on the
-    deterministic k-means build vs IVF-only 0.305/0.53/0.725/1.0)."""
-    import numpy as np
-
-    path = str(tmp_path / "index")
-    ann_index.build_ivfpq_index(
-        emb, path, n_cells=8, k_codes=64, use_kmeans=True
-    )
-    idx = ann_index.load_ivfpq_index(spark, path)
-    vecs = {
-        r["vec_id"]: np.asarray(r["embedding"], dtype=float)
-        for r in emb.select("vec_id", "embedding").collect()
-    }
-    ids = sorted(vecs)
-    qids = ids[:: max(1, len(ids) // 10)][:10]
-
-    def brute10(q):
-        sims = sorted(
-            ((float(vecs[i] @ vecs[q]), -i) for i in ids if i != q),
-            reverse=True,
-        )[:10]
-        return {-i for _, i in sims}
-
-    floors = {1: 0.2, 2: 0.4, 4: 0.6, 8: 0.95}
-    prev = 0.0
-    for probe, floor in floors.items():
-        recalls = []
-        for q in qids:
-            served = [
-                r["vec_id"]
-                for r in ann_index.query_ivfpq_index(
-                    idx, list(vecs[q]), k=11, n_probe=probe, rerank=240
-                ).collect()
-                if r["vec_id"] != q
-            ][:10]
-            recalls.append(len(set(served) & brute10(q)) / 10)
-        mean = sum(recalls) / len(recalls)
-        assert mean >= floor, (probe, mean)
-        assert mean >= prev - 1e-9, (probe, mean, prev)
-        prev = mean
-
-
-def test_ivfpq_validation(spark, emb, tmp_path, built, pq_built):
-    idx = ann_index.load_ivfpq_index(spark, pq_built)
-    with pytest.raises(ValueError, match="dim"):
-        ann_index.query_ivfpq_index(idx, [1.0, 2.0])
-    with pytest.raises(ValueError, match="rerank"):
-        ann_index.query_ivfpq_index(idx, [0.0] * 64, k=10, rerank=5)
-    # a plain IVF tree has no codes column — refuse, don't rank garbage
-    with pytest.raises(ValueError, match="codes|codebook"):
-        ann_index.load_ivfpq_index(spark, built)
-    with pytest.raises(ValueError, match="batch_id"):
-        ann_index.append_to_ivfpq_index(emb, pq_built, -1)
-
-
-@pytest.mark.sweep
-def test_index_type_is_unambiguous_across_lifecycle(spark, emb, tmp_path):
-    """Round-11 ADVICE guards: an IVF-PQ tree refuses codes-less appends
-    (NULL adc_dist sorts first under ascending orderBy and would crowd
-    real candidates out of the bounded rerank pool); the stream wrapper
-    dispatches by the tree's own type marker so streamed rows carry
-    codes; and a plain-IVF rebuild over a former IVF-PQ path removes
-    the stale codebook table so the next skew rebuild cannot silently
-    convert the index back to IVF-PQ."""
-    import os
-
-    path = str(tmp_path / "index")
-    base = emb.filter(F.col("vec_id") < 400)
-    ann_index.build_ivfpq_index(base, path, n_cells=8, use_kmeans=False)
-    batch = emb.filter(F.col("vec_id") >= 400)
-    with pytest.raises(ValueError, match="IVF-PQ"):
-        ann_index.append_to_ivf_index(batch, path, batch_id=0)
-    # the stream wrapper routes to the residual-encoding appender
-    landing = tmp_path / "landing"
-    os.makedirs(landing)
-    batch.coalesce(1).write.parquet(str(landing / "b0"))
-    schema = spark.read.parquet(str(landing / "b0")).schema
-    q = ann_index.run_embedding_stream(
-        spark.readStream.schema(schema).parquet(str(landing / "*")),
-        path,
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination()
-    cells = spark.read.parquet(f"{path}/cells")
-    assert cells.count() == emb.count()
-    assert cells.filter(F.col("codes").isNull()).count() == 0
-    # rebuilding the same path as PLAIN IVF clears the codebook table…
-    ann_index.build_ivf_index(base, path, n_cells=8, use_kmeans=False)
-    assert not os.path.exists(f"{path}/pq_codebooks")
-    with pytest.raises(ValueError, match="codebook"):
-        ann_index.load_ivfpq_index(spark, path)
-    # …so the occupancy rebuild stays plain instead of resurrecting PQ
-    out = ann_index.maybe_rebuild_ivf_index(spark, path, max_skew=1e-9)
-    assert out["rebuilt"] is True
-    assert "codes" not in spark.read.parquet(f"{path}/cells").columns
 
 
 @pytest.mark.sweep

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_olho_vivo_spark.operators import bpe
+from tests.references import _bpe_merges_reference, bpe_segment_expr
 
 # the canonical worked example (Sennrich et al. 2016, §3.2)
 SENNRICH = [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)]
@@ -75,7 +76,7 @@ def test_segment_expr_matches_reference_apply(spark):
     got = {
         r["doc_id"]: r["seg"]
         for r in df.select(
-            "doc_id", bpe.bpe_segment_expr(merges).alias("seg")
+            "doc_id", bpe_segment_expr(merges).alias("seg")
         ).collect()
     }
     for i, t in enumerate(texts):
@@ -84,7 +85,7 @@ def test_segment_expr_matches_reference_apply(spark):
         )
         assert got[i] == want, (t, got[i], want)
     with pytest.raises(ValueError, match="small merge lists"):
-        bpe.bpe_segment_expr([("a", "b")] * 513)
+        bpe_segment_expr([("a", "b")] * 513)
 
 
 def test_segment_expr_boundary_exact(spark):
@@ -108,7 +109,7 @@ def test_segment_expr_boundary_exact(spark):
     got = {
         r["doc_id"]: r["seg"]
         for r in df.select(
-            "doc_id", bpe.bpe_segment_expr(merges).alias("seg")
+            "doc_id", bpe_segment_expr(merges).alias("seg")
         ).collect()
     }
     for i, w in enumerate(words):
@@ -117,7 +118,7 @@ def test_segment_expr_boundary_exact(spark):
     dirty = spark.createDataFrame(
         [(0, "ba\x1fab\x1eb")], ["doc_id", "text"]
     )
-    seg = dirty.select(bpe.bpe_segment_expr(merges).alias("seg")).collect()
+    seg = dirty.select(bpe_segment_expr(merges).alias("seg")).collect()
     assert seg[0]["seg"] == " ".join(_py_apply(merges, "baabb"))
 
 
@@ -132,7 +133,7 @@ def test_end_to_end_histogram_to_segmentation(spark):
     h = bpe.word_histogram(docs, top_k=1000)
     merges = bpe.bpe_merges(h, n_merges=8)
     assert merges[0] == ("e", "s")
-    seg = docs.select(bpe.bpe_segment_expr(merges).alias("seg"))
+    seg = docs.select(bpe_segment_expr(merges).alias("seg"))
     plan = seg._jdf.queryExecution().executedPlan().toString()
     for bad in ("Exchange", "PythonUDF", "BatchEvalPython"):
         assert bad not in plan, plan[:2000]
@@ -170,7 +171,7 @@ def test_bpe_apply_parity_with_segment_expr(spark):
     want = {
         r["doc_id"]: r["seg"]
         for r in docs.select(
-            "doc_id", bpe.bpe_segment_expr(merges).alias("seg")
+            "doc_id", bpe_segment_expr(merges).alias("seg")
         ).collect()
     }
     # the expr path maps NULL text to NULL too
@@ -197,7 +198,7 @@ def test_bpe_apply_handles_production_sized_merge_list(spark):
     merges = real + pad
     assert len(merges) == 30_000
     with pytest.raises(ValueError, match="small merge lists"):
-        bpe.bpe_segment_expr(merges)
+        bpe_segment_expr(merges)
     docs = spark.createDataFrame(
         [(1, "newest low"), (2, "arcane")], ["doc_id", "text"]
     )
@@ -208,7 +209,7 @@ def test_bpe_apply_handles_production_sized_merge_list(spark):
     want_newest = {
         r["doc_id"]: r["seg"]
         for r in docs.select(
-            "doc_id", bpe.bpe_segment_expr(real).alias("seg")
+            "doc_id", bpe_segment_expr(real).alias("seg")
         ).collect()
     }
     assert got == want_newest  # the pad merges never fire
@@ -341,7 +342,7 @@ def test_fast_merges_match_reference_spec():
     import random
 
     rng = random.Random(2024)
-    assert bpe.bpe_merges(SENNRICH, 50) == bpe._bpe_merges_reference(
+    assert bpe.bpe_merges(SENNRICH, 50) == _bpe_merges_reference(
         SENNRICH, 50
     )
     for trial in range(25):
@@ -359,7 +360,7 @@ def test_fast_merges_match_reference_spec():
         ]
         n = rng.choice([1, 3, 10, 100])
         fast = bpe.bpe_merges(hist, n)
-        ref = bpe._bpe_merges_reference(hist, n)
+        ref = _bpe_merges_reference(hist, n)
         assert fast == ref, (trial, hist, n, fast, ref)
 
 

@@ -197,7 +197,7 @@ def test_corpus_bpe_tokenize_stage(spark, tmp_path, capsys):
     round-trip proves the two sidecars and the data agree)."""
     from pyspark.sql import functions as F
 
-    from etl_olho_vivo_spark.operators import bpe
+    from tests.references import bpe_segment_expr
 
     out = str(tmp_path / "corpus")
     assert main([
@@ -218,7 +218,7 @@ def test_corpus_bpe_tokenize_stage(spark, tmp_path, capsys):
     corpus = spark.read.parquet(out)
     assert corpus.filter(F.col("bpe_tokens").isNull()).count() == 0
     mismatches = corpus.withColumn(
-        "expected", bpe.bpe_segment_expr(merges)
+        "expected", bpe_segment_expr(merges)
     ).filter(F.col("bpe_tokens") != F.col("expected")).count()
     assert mismatches == 0
     # ids ↔ tokens round-trip under the persisted vocabulary: no id is

@@ -1,6 +1,6 @@
 """Eval-set decontamination (operators/decontam.py).
 
-Planted-leak semantics, the decontaminate() filter contract, edge inputs,
+Planted-leak semantics, the corpus gate's anti-join drop rule, edge inputs,
 and the 100 TB plan posture (eval gram set broadcast, corpus never
 shuffled for the probe join).
 """
@@ -56,13 +56,19 @@ def test_planted_leaks_flagged(spark, frames):
 
 
 def test_decontaminate_drops_flagged_keeps_rest(spark, frames):
+    """The corpus gate's rule (plans/corpus.py): anti-join the
+    training docs against the report's ids."""
     train, ev = frames
-    kept = decontam.decontaminate(train, ev)
+    rep = decontam.contamination_report(train, ev)
+    kept = train.join(rep.select("doc_id"), "doc_id", "left_anti")
     assert sorted(r["doc_id"] for r in kept.collect()) == [2, 4, 5]
     # rows pass through unchanged (schema and values)
     assert kept.columns == train.columns
-    # raising min_hits past doc 1's two shared grams keeps it
-    kept2 = decontam.decontaminate(train, ev, min_hits=3)
+    # a hit floor past doc 1's two shared grams keeps it
+    kept2 = train.join(
+        rep.filter(F.col("n_contaminated") >= 3).select("doc_id"),
+        "doc_id", "left_anti",
+    )
     assert sorted(r["doc_id"] for r in kept2.collect()) == [1, 2, 4, 5]
 
 
@@ -71,14 +77,11 @@ def test_edge_inputs(spark, frames):
     # empty eval set → nothing flagged, nothing dropped
     empty_ev = ev.filter(F.lit(False))
     assert decontam.contamination_report(train, empty_ev).count() == 0
-    assert decontam.decontaminate(train, empty_ev).count() == train.count()
     # empty training side → empty report
     empty_tr = train.filter(F.lit(False))
     assert decontam.contamination_report(empty_tr, ev).count() == 0
     with pytest.raises(ValueError, match="n must be"):
         decontam.with_ngram_hashes(train, n=0)
-    with pytest.raises(ValueError, match="min_hits"):
-        decontam.decontaminate(train, ev, min_hits=0)
 
 
 def test_gram_identity_and_bounds(spark):

@@ -16,6 +16,7 @@ import hashlib
 import pytest
 
 from etl_olho_vivo_spark.operators import multimodal
+from tests.media_pairs import media_near_dups
 
 
 # ---------------------------------------------------------------------------
@@ -444,7 +445,7 @@ def _wav16(chans, sr):
 def test_audio_fingerprint_container_invariance(spark):
     """The same PCM encoded as WAV and as FLAC fingerprints
     IDENTICALLY (the decode is bit-exact, the fingerprint is a pure
-    function of the samples), and audio_near_dups pairs the two rows
+    function of the samples), and the media near-dup path pairs the two rows
     at Hamming 0 — audio → fingerprint → dedup, end to end."""
     chans = _pcm(4096, seed=41, amp=12000)
     rows = [
@@ -465,7 +466,7 @@ def test_audio_fingerprint_container_invariance(spark):
     assert out[4]["afp"] is None
 
     pairs = [(r["doc_a"], r["doc_b"], r["hamming"])
-             for r in multimodal.audio_near_dups(df).collect()]
+             for r in media_near_dups(df, "audio").collect()]
     assert pairs == [(1, 2, 0)]
 
 
@@ -490,7 +491,7 @@ def test_audio_fingerprint_gain_invariance_and_discrimination(spark):
     diff = bin((fps[1] ^ fps[3]) & ((1 << 64) - 1)).count("1")
     assert diff > 10, diff
     pairs = {(r["doc_a"], r["doc_b"]) for r in
-             multimodal.audio_near_dups(df, max_hamming=6).collect()}
+             media_near_dups(df, "audio", max_hamming=6).collect()}
     assert pairs == {(1, 2)}
 
 
@@ -514,7 +515,7 @@ def test_audio_fingerprint_noise_robustness(spark):
     ham = bin((fps[1] ^ fps[2]) & ((1 << 64) - 1)).count("1")
     assert ham <= 6, ham
     pairs = [(r["doc_a"], r["doc_b"]) for r in
-             multimodal.audio_near_dups(df, max_hamming=6).collect()]
+             media_near_dups(df, "audio", max_hamming=6).collect()]
     assert pairs == [(1, 2)]
 
 

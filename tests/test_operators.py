@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from etl_olho_vivo_spark.operators import dedup, multimodal, similarity
 from etl_olho_vivo_spark.operators.asof import asof_join
+from tests.media_pairs import media_near_dups
 
 
 # ---------------------------------------------------------------------------
@@ -475,38 +476,6 @@ def test_chunk_docs_reconstruction_property(spark):
     prop()
 
 
-def test_stratified_sample_deterministic_quotas(spark):
-    from etl_olho_vivo_spark.operators.textops import stratified_sample
-
-    rows = [(i, "web" if i % 2 else "books") for i in range(2000)]
-    df = spark.createDataFrame(rows, ["doc_id", "source"])
-    out = stratified_sample(
-        df, {"web": 0.5, "books": 0.1}, strata_col="source", id_col="doc_id"
-    )
-    by_src = {
-        r["source"]: r["n"]
-        for r in out.groupBy("source").agg(F.count("*").alias("n")).collect()
-    }
-    # md5 is uniform: 1000 candidates per stratum, quota ±10%
-    assert 400 <= by_src["web"] <= 600
-    assert 60 <= by_src["books"] <= 160
-    # deterministic: the same rows survive a re-run
-    again = stratified_sample(
-        df, {"web": 0.5, "books": 0.1}, strata_col="source", id_col="doc_id"
-    )
-    assert sorted(r["doc_id"] for r in out.collect()) == sorted(
-        r["doc_id"] for r in again.collect()
-    )
-    # unknown strata drop by default (explicit mixture)
-    extra = spark.createDataFrame([(9999, "forum")], ["doc_id", "source"])
-    assert (
-        stratified_sample(
-            extra, {"web": 0.5}, strata_col="source", id_col="doc_id"
-        ).count()
-        == 0
-    )
-
-
 def test_redact_pii(spark):
     from etl_olho_vivo_spark.operators.textops import redact
 
@@ -606,42 +575,6 @@ def test_incremental_near_dup_against_store(spark, docs, tmp_path):
     got = {(r["doc_new"], r["doc_old"]) for r in hits.collect()}
     assert (100, 1) in got and (100, 4) in got
     assert all(dn != 101 for dn, _ in got)
-
-
-def test_resample_grid_ffill_and_gaps(spark):
-    from etl_olho_vivo_spark.operators.resample import resample
-
-    df = spark.createDataFrame(
-        [
-            ("A", 100, 1.0),
-            ("A", 130, 2.0),
-            ("A", 290, 3.0),
-            ("B", 65, 9.0),
-        ],
-        ["veh", "ts", "x"],
-    )
-    out = {
-        (r["veh"], r["ts"]): r["x"]
-        for r in resample(df, ["veh"], "ts", 60, ["x"]).collect()
-    }
-    # grid aligned down to step multiples, per key's own span
-    assert out == {
-        ("A", 60): None,     # before first observation
-        ("A", 120): 1.0,     # ffill from ts=100
-        ("A", 180): 2.0,     # ffill from ts=130
-        ("A", 240): 2.0,     # still ts=130 (110 stale)
-        ("B", 60): None,
-    }
-    # tolerance turns stale carries into visible gaps
-    tol = {
-        (r["veh"], r["ts"]): r["x"]
-        for r in resample(df, ["veh"], "ts", 60, ["x"], tolerance=100).collect()
-    }
-    assert tol[("A", 240)] is None
-    assert tol[("A", 180)] == 2.0
-
-    with pytest.raises(ValueError, match="step"):
-        resample(df, ["veh"], "ts", 0, ["x"])
 
 
 # ---------------------------------------------------------------------------
@@ -778,32 +711,6 @@ def test_decode_media_batch(media_df):
     assert out[1]["n_bytes"] == 80
     assert out[1]["checksum"] == sum(b"abcdefgh" * 10)
     assert out[3]["n_bytes"] == 0 and out[3]["checksum"] == 0
-
-
-def test_resize_media_truncates_and_pads(media_df):
-    out = {
-        r["doc_id"]: r
-        for r in multimodal.resize_media(media_df, width=4, height=4).collect()
-    }
-    assert len(out[1]["media"]) == 16           # truncated
-    assert bytes(out[2]["media"]) == b"xy" + b"\x00" * 14  # padded
-    assert out[1]["media_meta"]["target_w"] == 4
-    assert out[1]["media_meta"]["media_type"] == "image/raw"
-
-
-def test_sample_frames_fanout(media_df):
-    out = multimodal.sample_frames(
-        media_df, frame_size=8, stride=2
-    ).collect()
-    by_doc: dict[int, list] = {}
-    for r in out:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    # doc 1: 80 bytes → 10 frames → sampled idx 0,2,4,6,8
-    assert [r["frame_idx"] for r in sorted(by_doc[1], key=lambda r: r["frame_idx"])] == [0, 2, 4, 6, 8]
-    assert all(r["n_frames_total"] == 10 for r in by_doc[1])
-    assert bytes(by_doc[1][0]["frame"]) == b"abcdefgh"
-    # docs 2 (2 bytes) and 3 (0 bytes) yield no complete frame
-    assert 2 not in by_doc and 3 not in by_doc
 
 
 # ---------------------------------------------------------------------------
@@ -1060,54 +967,6 @@ LIMIT {k}
     ] == [tuple(r) for r in want]
 
 
-def test_hot_keys_superset_guarantee(spark):
-    """hot_keys returns every key above the support threshold (possibly
-    with false positives, never false negatives) — the property that
-    makes it safe to gate salting on."""
-    from etl_olho_vivo_spark.operators.skew import hot_keys
-
-    # 10_000 rows: key 1 holds 40%, key 2 holds 20%, the rest uniform
-    rows = (
-        [(1,)] * 4000 + [(2,)] * 2000
-        + [(100 + i % 400,) for i in range(4000)]
-    )
-    df = spark.createDataFrame(rows, "k long")
-    got = hot_keys(df, "k", support=0.1)
-    assert {1, 2} <= set(got)           # no false negatives above 10%
-    # candidate list bounded by ~1/support, not the key universe
-    assert len(got) <= 12, got
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        hot_keys(df, "k", support=1.5)
-
-
-def test_hot_keys_feeds_salted_agg(spark):
-    """The detect -> salt workflow end-to-end: salted aggregation over
-    the detected hot key equals the plain groupBy."""
-    from pyspark.sql import functions as F
-
-    from etl_olho_vivo_spark.operators.skew import hot_keys, salted_agg
-
-    rows = [(1, i) for i in range(5000)] + [
-        (k, i) for i, k in enumerate(range(2, 202))
-    ]
-    df = spark.createDataFrame(rows, "k long, v long")
-    assert 1 in hot_keys(df, "k", support=0.2)
-    salted = salted_agg(
-        df, ["k"],
-        {"n": ("sum", F.count(F.lit(1))), "s": ("sum", F.sum("v"))},
-        salt_source="v",
-    )
-    plain = df.groupBy("k").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")
-    )
-    assert sorted(map(tuple, salted.collect())) == sorted(
-        map(tuple, plain.collect())
-    )
-
-
 @pytest.mark.sweep
 def test_concurrent_queries_shared_session(spark):
     """Two cache-registering queries run CONCURRENTLY on the shared
@@ -1140,66 +999,6 @@ def test_concurrent_queries_shared_session(spark):
 
     for n in names:
         assert concurrent[n] == serial[n], n
-
-
-def test_hot_keys_null_key_and_support_floor(spark):
-    """NULL is itself a reportable hot key (returned last, non-nulls
-    stay sorted), and sub-floor supports fail at THIS contract instead
-    of mid-job inside Spark."""
-    from etl_olho_vivo_spark.operators.skew import hot_keys
-
-    rows = [(None,)] * 3000 + [(1,)] * 3000 + [
-        (100 + i % 200,) for i in range(4000)
-    ]
-    df = spark.createDataFrame(rows, "k long")
-    got = hot_keys(df, "k", support=0.2)
-    assert got[-1] is None and 1 in got[:-1]
-    assert got[:-1] == sorted(got[:-1])
-
-    import pytest
-
-    with pytest.raises(ValueError, match="1e-4"):
-        hot_keys(df, "k", support=1e-5)
-
-
-def test_hot_keys_rejects_non_atomic_columns(spark):
-    """freqItems on array/struct columns is unsupported and the collected
-    values would not be mutually orderable — fail at the contract."""
-    import pytest
-
-    from etl_olho_vivo_spark.operators.skew import hot_keys
-
-    df = spark.createDataFrame(
-        [([1, 2], (1, "a"))], "arr array<long>, st struct<x: long, y: string>"
-    )
-    with pytest.raises(TypeError, match="atomic"):
-        hot_keys(df, "arr", support=0.1)
-    with pytest.raises(TypeError, match="atomic"):
-        hot_keys(df, "st", support=0.1)
-    # the guard resolves names like the analyzer (case-insensitive):
-    # an uppercase spelling of an atomic column must still work
-    kdf = spark.createDataFrame([(1,)] * 20, "k long")
-    assert hot_keys(kdf, "K", support=0.4) == [1]
-
-
-def test_resample_grid_exact_at_int64_magnitude(spark):
-    """Grid alignment is exact integer math: at epoch-nanos magnitude a
-    double division would misplace the first tick near step multiples."""
-    from etl_olho_vivo_spark.operators.resample import resample
-
-    step = 60
-    # lo one tick below a multiple of 60, at 1e18 (not representable
-    # exactly as double to the nanosecond)
-    base = 10**18
-    lo = base - (base % step) + step - 1
-    rows = [(1, lo, 1.0), (1, lo + 2 * step, 2.0)]
-    df = spark.createDataFrame(rows, "k long, t long, v double")
-    got = sorted(
-        r["t"] for r in resample(df, ["k"], "t", step, ["v"]).collect()
-    )
-    expected_start = lo - (lo % step)
-    assert got[0] == expected_start
-    assert all((t - expected_start) % step == 0 for t in got)
 
 
 def test_asof_rejects_colliding_right_cols(spark):
@@ -1330,9 +1129,8 @@ def test_pack_chunks_rejects_nonpositive_budget(spark):
 
 
 def test_multimodal_null_media_no_crash(spark):
-    """NULL media (null text upstream) flows through decode/resize/
-    frame-sample as NULL features / NULL output / zero frames — one bad
-    document must not abort the whole Arrow job."""
+    """NULL media (null text upstream) flows through decode as NULL
+    features — one bad document must not abort the whole Arrow job."""
     from etl_olho_vivo_spark.operators import multimodal
 
     df = spark.createDataFrame(
@@ -1342,18 +1140,6 @@ def test_multimodal_null_media_no_crash(spark):
     dec = {r["doc_id"]: r["n_bytes"]
            for r in multimodal.decode_media(df).collect()}
     assert dec[1] == 60 and dec[2] is None
-    rez = {r["doc_id"]: r["media"]
-           for r in multimodal.resize_media(df, 4, 4).collect()}
-    assert rez[1] is not None and rez[2] is None
-    frames = multimodal.sample_frames(df, frame_size=8, stride=1).collect()
-    assert {r["doc_id"] for r in frames} == {1}
-
-    import pytest
-
-    with pytest.raises(ValueError, match="positive"):
-        multimodal.sample_frames(df, frame_size=0)
-    with pytest.raises(ValueError, match="positive"):
-        multimodal.resize_media(df, 0, 4)
 
 
 def test_profile_edge_cases(spark):
@@ -2926,8 +2712,8 @@ def test_image_near_dups_matches_brute_force(spark):
 
     got = sorted(
         (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in multimodal.image_near_dups(
-            df, max_hamming=7, n_bands=8
+        for r in media_near_dups(
+            df, "image", max_hamming=7, n_bands=8
         ).collect()
     )
     hashes = {
@@ -2963,45 +2749,13 @@ def test_image_near_dups_plan_is_merge_banded(spark):
     # strategy assertions below vacuous
     rows.append((8, bytearray(rows[0][1])))
     df = spark.createDataFrame(rows, "doc_id long, media binary")
-    out = multimodal.image_near_dups(df)
+    out = media_near_dups(df, "image")
     assert out.collect(), "expected the planted duplicate image to pair"
     plan = out._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert "SortMergeJoin" in final
     assert "BroadcastHashJoin" not in final
     assert "CartesianProduct" not in final
-
-
-def test_resize_media_real_raster_roundtrip(spark):
-    """Round-10 real resize: decodable rasters area-mean resample and
-    re-encode as P5, which the SAME parsers round-trip — dims, exact
-    block means, and downstream decode_media compatibility; opaque
-    media keep the pinned truncate/pad fallback."""
-    import numpy as np
-
-    rng = np.random.RandomState(3)
-    base = rng.randint(0, 255, size=(16, 16)).astype(np.float64)
-    payload = [bytes(base[r].astype(np.uint8)) for r in range(16)]
-    rows = [
-        (1, bytearray(_p5(16, 16, payload))),
-        (2, bytearray(b"some text that stays opaque")),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, media binary")
-    out = {
-        r["doc_id"]: r
-        for r in multimodal.resize_media(df, 4, 4).collect()
-    }
-    meta = out[1]["media_meta"]
-    assert meta["media_type"] == "image/x-portable-graymap"
-    parse = multimodal._media_parser(pixels=True)
-    n, _, kind, w, h, mean, gray = parse(bytes(out[1]["media"]))
-    assert (kind, w, h) == ("pnm", 4, 4)
-    want = np.clip(np.rint(
-        base.reshape(4, 4, 4, 4).mean(axis=(1, 3))
-    ), 0, 255)
-    assert np.array_equal(gray, want), (gray, want)
-    assert out[2]["media_meta"]["media_type"] == "image/raw"
-    assert len(out[2]["media"]) == 16
 
 
 def _make_avi(frames):
@@ -3017,52 +2771,6 @@ def _make_avi(frames):
     hdrl = chunk(b"LIST", b"hdrl" + chunk(b"avih", b"\x00" * 56))
     payload = b"AVI " + hdrl + movi
     return b"RIFF" + len(payload).to_bytes(4, "little") + payload
-
-
-def test_sample_frames_real_avi_mjpeg(spark):
-    """Round-10 real video path: MJPEG-in-AVI media demux into their
-    actual frame chunks — every stride-th frame is a complete JPEG the
-    decoder consumes (video → frames → decode, zero dependencies) —
-    while non-AVI media keep the pinned byte-slicing stub, and a WAV
-    (also RIFF) is NOT mistaken for video."""
-    import numpy as np
-
-    vals = [40, 128, 220]
-    frames = [
-        _make_jpeg(16, 16, [np.full((16, 16), float(v))], [(1, 1)])
-        for v in vals
-    ]
-    avi = _make_avi(frames)
-    rows = [
-        (1, bytearray(avi)),
-        (2, bytearray(b"plain text media, sliced not demuxed")),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, media binary")
-    out = multimodal.sample_frames(df, frame_size=4, stride=2).collect()
-
-    vid = sorted(
-        (r for r in out if r["doc_id"] == 1), key=lambda r: r["frame_idx"]
-    )
-    assert [(r["frame_idx"], r["n_frames_total"]) for r in vid] == [
-        (0, 3), (2, 3),
-    ]
-    parse = multimodal._media_parser()
-    means = []
-    for r in vid:
-        n, _, kind, w, h, mean = parse(bytes(r["frame"]))
-        assert (kind, w, h) == ("jpeg", 16, 16)
-        means.append(round(mean))
-    assert means == [40, 220]  # frames 0 and 2, source order preserved
-
-    stub = [r for r in out if r["doc_id"] == 2]
-    assert stub and all(len(bytes(r["frame"])) == 4 for r in stub)
-
-    # WAV is RIFF too — must take the stub path, not the demuxer
-    demux = multimodal._avi_demuxer()
-    wav = b"RIFF" + (36).to_bytes(4, "little") + b"WAVE" + b"\x00" * 36
-    assert demux(wav) is None
-    # truncated AVI degrades to None (stub), never a crash
-    assert demux(avi[: len(avi) - 10]) is None
 
 
 def _make_y4m(w, h, lumas, cs=b"C420jpeg", frame_params=b""):
@@ -3082,37 +2790,6 @@ def _make_y4m(w, h, lumas, cs=b"C420jpeg", frame_params=b""):
         out += b"FRAME" + frame_params + b"\n"
         out += bytes([v]) * (w * h) + bytes([128]) * chroma
     return out
-
-
-def test_sample_frames_real_y4m(spark):
-    """Round-11 uncompressed video path: YUV4MPEG2 media demux into
-    per-picture luma planes re-wrapped as P5 PGMs — every stride-th
-    frame decodes through the existing image pipeline — while
-    non-video media keep the byte-slicing stub."""
-    y4m = _make_y4m(8, 6, [40, 128, 220], frame_params=b" Xsome=param")
-    rows = [
-        (1, bytearray(y4m)),
-        (2, bytearray(b"plain text media, sliced not demuxed")),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, media binary")
-    out = multimodal.sample_frames(df, frame_size=4, stride=2).collect()
-
-    vid = sorted(
-        (r for r in out if r["doc_id"] == 1), key=lambda r: r["frame_idx"]
-    )
-    assert [(r["frame_idx"], r["n_frames_total"]) for r in vid] == [
-        (0, 3), (2, 3),
-    ]
-    parse = multimodal._media_parser()
-    means = []
-    for r in vid:
-        n, _, kind, w, h, mean = parse(bytes(r["frame"]))
-        assert (kind, w, h) == ("pnm", 8, 6)
-        means.append(round(mean))
-    assert means == [40, 220]  # frames 0 and 2, source order preserved
-
-    stub = [r for r in out if r["doc_id"] == 2]
-    assert stub and all(len(bytes(r["frame"])) == 4 for r in stub)
 
 
 def test_y4m_demuxer_colorspaces_and_degradations():
@@ -3179,90 +2856,11 @@ def test_image_near_dups_exact_mode_single_band(spark):
     df = spark.createDataFrame(rows, "doc_id long, media binary")
     got = [
         (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in multimodal.image_near_dups(
-            df, max_hamming=0, n_bands=1
+        for r in media_near_dups(
+            df, "image", max_hamming=0, n_bands=1
         ).collect()
     ]
     assert got == [(1, 2, 0)], got
-
-
-def test_audio_excerpt_containment(spark):
-    """Round 14: the audio sibling of sub-clip video containment.  An
-    excerpt cut ON the hop grid shares its source's windows sample-
-    exactly (fp hamming 0), so media_containment_pairs reports it at
-    frac 1.0, while a spectrally-distinct clip reports nothing — and
-    the whole-clip audio_fingerprint legitimately diverges on the
-    excerpt (it time-segments the WHOLE signal), which is exactly the
-    boundary the window relation exists to cross."""
-    import struct
-
-    import numpy as np
-
-    sr = 8000
-    rng = np.random.RandomState(7)
-    src = rng.randint(-20000, 20000, 10 * sr).astype("<i2")
-    other = np.random.RandomState(99).randint(
-        -20000, 20000, 3 * sr
-    ).astype("<i2")
-
-    def wav(samples):
-        return bytearray(_make_wav(1, 2, sr, samples.tobytes()))
-
-    rows = [
-        (1, wav(src)),                       # 10 s source
-        (2, wav(src[4 * sr:8 * sr])),        # 4 s excerpt, on-grid cut
-        (3, wav(other)),                     # distinct audio
-        (4, bytearray(b"not audio")),        # opaque
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, media binary")
-    frames = multimodal.audio_window_fingerprints(
-        df, window_s=1.0
-    )  # hop 0.5 s; 4 s cut = 8 hops -> window grids coincide
-    probe = frames.filter("doc_id IN (2, 3)")
-    index = frames.filter("doc_id = 1")
-    got = {
-        (r["doc_probe"], r["doc_index"]): r["frac"]
-        for r in multimodal.media_containment_pairs(
-            probe, index, min_frac=0.9
-        ).collect()
-    }
-    assert got == {(2, 1): 1.0}
-    # opaque rows emit no window rows at all
-    assert frames.filter("doc_id = 4").count() == 0
-    # the per-clip fingerprints diverge on the excerpt — containment
-    # is the window relation's job, not the whole-clip hash's
-    fps = {r["doc_id"]: r["afp"]
-           for r in multimodal.audio_fingerprint(df).collect()}
-    diff = bin((fps[1] ^ fps[2]) & ((1 << 64) - 1)).count("1")
-    assert diff > 6, diff
-
-
-def test_audio_window_fingerprints_grid_and_dials(spark):
-    """Window mechanics: ordinals on the hop grid, trailing partial
-    window dropped, hop dial changes row count, bad dials rejected."""
-    import numpy as np
-
-    sr = 8000
-    samples = np.random.RandomState(3).randint(
-        -10000, 10000, int(2.6 * sr)
-    ).astype("<i2")
-    df = spark.createDataFrame(
-        [(1, bytearray(_make_wav(1, 2, sr, samples.tobytes())))],
-        "doc_id long, media binary",
-    )
-    rows = multimodal.audio_window_fingerprints(df, window_s=1.0).collect()
-    # 2.6 s at win 1.0 / hop 0.5: starts 0.0-1.5 -> 4 full windows
-    assert [r["frame_idx"] for r in sorted(rows, key=lambda r: r["frame_idx"])] \
-        == [0, 1, 2, 3]
-    dense = multimodal.audio_window_fingerprints(
-        df, window_s=1.0, hop_s=0.25
-    ).collect()
-    assert len(dense) == 7  # starts 0.0-1.5 at 0.25 s
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="window_s"):
-        multimodal.audio_window_fingerprints(df, window_s=0)
-    with _pytest.raises(ValueError, match="hop_s"):
-        multimodal.audio_window_fingerprints(df, hop_s=-1)
 
 
 def test_spread_small_scan_memoizes_partition_probe(spark, monkeypatch):

@@ -153,7 +153,18 @@ def _pandas_oracle(rows):
 @pytest.fixture(scope="module")
 def engine_out(spark, fixture_rows):
     pos = spark.createDataFrame(fixture_rows, POSICOES_SCHEMA)
-    return speed.run_all(pos, tiebreakers=("py",))
+    return _datasets(pos)
+
+
+def _datasets(pos):
+    """The three derived datasets, built by the dataset functions
+    ``plans.daily.run_daily`` calls on one cleaned frame."""
+    cleaned = speed.cleaned_speeds(pos, tiebreakers=("py",))
+    return {
+        "lentidao": speed.lentidao(cleaned),
+        "velocidades_agregadas": speed.velocidades_agregadas(cleaned),
+        "acessiveis": speed.acessiveis(cleaned),
+    }
 
 
 def test_cleaned_pair_semantics(spark, fixture_rows):
@@ -250,7 +261,7 @@ def test_pipeline_matches_pandas_oracle_property(spark, rows):
     aggregated frame."""
     _, slow_o, agg_o = _pandas_oracle(rows)
     pos = spark.createDataFrame(rows, POSICOES_SCHEMA)
-    out = speed.run_all(pos, tiebreakers=("py",))
+    out = _datasets(pos)
 
     slow_e = out["lentidao"].toPandas()
     assert len(slow_e) == len(slow_o)

@@ -12,6 +12,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_olho_vivo_spark import registry
+from tests.plan_walk import (
+    cache_id,
+    cache_scans,
+    count_nodes,
+    executed_plan,
+    hash_shuffles,
+)
 
 SF = "/root/testdata/sf0.01"
 
@@ -22,8 +29,11 @@ def _load():
 
 
 def _plan(spark, name: str) -> str:
-    df = registry.REGISTRY[name].fn(spark, SF)
-    return df._jdf.queryExecution().executedPlan().toString()
+    return _physical(spark, name).toString()
+
+
+def _physical(spark, name: str):
+    return executed_plan(registry.REGISTRY[name].fn(spark, SF))
 
 
 def test_pricing_summary_filter_pushed_to_scan(spark):
@@ -50,10 +60,10 @@ def test_dimension_joins_broadcast(spark):
     broadcasting a fact is the plan that dies first at 100 TB, and a
     shuffled-hash build map of a fact side OOMs under memory pressure
     (starved-probe evidence, BASELINE.md round 6)."""
-    plan = _plan(spark, "revenue_by_nation")
-    assert plan.count("BroadcastHashJoin") == 2, plan[:2000]
-    assert "SortMergeJoin" in plan
-    assert "ShuffledHashJoin" not in plan
+    nodes = count_nodes(_physical(spark, "revenue_by_nation"))
+    assert nodes["BroadcastHashJoinExec"] == 2, nodes
+    assert nodes["SortMergeJoinExec"], nodes
+    assert not nodes["ShuffledHashJoinExec"], nodes
 
 
 def test_semi_join_is_semi(spark):
@@ -103,15 +113,14 @@ def test_flagship_shuffles_exactly_once(spark):
     distribution (the vehicle is one of the agg keys, and clustering by a
     subset key co-locates every superset-key group), so Catalyst elides
     the second exchange entirely."""
-    plan = _plan(spark, "velocidades_agregadas")
-    n_exchanges = plan.count("Exchange hashpartitioning")
+    n_exchanges = hash_shuffles(_physical(spark, "velocidades_agregadas"))
     assert n_exchanges == 1, f"expected 1 shuffle, plan has {n_exchanges}"
 
 
 def test_window_suite_shuffles_once(spark):
     """Two window specs share the o_custkey partitioning → one Exchange."""
-    plan = _plan(spark, "window_rank_suite")
-    assert plan.count("Exchange hashpartitioning") == 1, plan[:1500]
+    plan = _physical(spark, "window_rank_suite")
+    assert hash_shuffles(plan) == 1, plan.toString()[:1500]
 
 
 def test_salted_join_is_shuffle_join(spark):
@@ -184,9 +193,9 @@ def test_bucketed_order_rollup_query_has_no_exchange(spark):
 def test_doc_text_profile_is_shuffle_free(spark):
     """The merged per-document text profile is a pure per-row projection —
     one scan, zero exchanges (one pass over the corpus at any scale)."""
-    plan = _plan(spark, "doc_text_profile")
-    assert "Exchange" not in plan, plan[:1500]
-    assert plan.count("FileScan") == 1
+    plan = _physical(spark, "doc_text_profile")
+    assert "Exchange" not in plan.toString(), plan.toString()[:1500]
+    assert count_nodes(plan)["FileSourceScanExec"] == 1
 
 
 def test_scalar_surface_sample_is_scan_level(spark):
@@ -203,28 +212,12 @@ def test_groupby_extensions_single_cube_aggregation(spark):
     aggregation — one scan, one Expand, one partial-aggregated exchange;
     rollup/gsets materialize as an explode of mode tags over the tiny
     cube result, never a re-scan or self-union."""
-    plan = _plan(spark, "groupby_extensions")
-    assert plan.count("FileScan") == 1, plan[:2000]
-    assert plan.count("Expand") == 1
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Generate explode" in plan
-
-
-def test_resample_is_linear_no_range_join(spark):
-    """The grid fill must stay union+window — a range-predicate join
-    (grid.ts >= obs.ts) would explode to |grid|·|obs| per key."""
-    from etl_olho_vivo_spark.operators.resample import resample
-    from etl_olho_vivo_spark.sources.tables import read_table
-
-    e = read_table(spark, SF, "events").select(
-        "user_id", F.expr("unix_millis(ts) div 1000").alias("t"), "value"
-    )
-    out = resample(e, ["user_id"], "t", 1800, ["value"])
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "SortMergeJoin" not in plan  # no join at all: union + window
-    assert plan.count("Window") >= 1
+    physical = _physical(spark, "groupby_extensions")
+    nodes = count_nodes(physical)
+    assert nodes["FileSourceScanExec"] == 1, nodes
+    assert nodes["ExpandExec"] == 1, nodes
+    assert hash_shuffles(physical) == 1
+    assert "Generate explode" in physical.toString()
 
 
 def test_minhash_signature_store_is_cached(spark):
@@ -232,11 +225,8 @@ def test_minhash_signature_store_is_cached(spark):
     both verify sides); the signature store must be a persisted
     InMemoryRelation so the text scan + md5 + shingle compute runs ONCE,
     not once per consumer."""
-    df = registry.REGISTRY["minhash_near_dups"].fn(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # (each InMemoryTableScan textually reprints the cached relation's
-    # FileScan, so the FileScan string count is not the physical scan count)
-    assert plan.count("InMemoryTableScan") >= 3, plan[:1500]
+    plan = _physical(spark, "minhash_near_dups")
+    assert len(cache_scans(plan)) >= 3, plan.toString()[:1500]
 
 
 def test_lapsed_customers_pushes_date_and_stays_anti(spark):
@@ -296,8 +286,6 @@ def test_lm_scorer_joins_and_aggregates_only(spark, name):
     relations MAY broadcast (top-k-bounded by construction), but no
     cartesian product or Python may appear and the per-doc rollup must
     be a partial-aggregated hash aggregate."""
-    from tests.plan_walk import count_nodes, executed_plan
-
     df = registry.REGISTRY[name].fn(spark, SF)
     df.collect()
     # the final adaptive plan, cached build plans included
@@ -361,13 +349,6 @@ def test_trigram_counts_share_one_cached_windows_aggregate(spark):
     from etl_olho_vivo_spark.caching import CacheBag, release_session_caches
     from etl_olho_vivo_spark.operators import lm
     from etl_olho_vivo_spark.sources.tables import read_table
-
-    from tests.plan_walk import (
-        cache_id,
-        cache_scans,
-        count_nodes,
-        executed_plan,
-    )
 
     # an earlier registry run may have left ctx/ng cached in the session
     # bag; Spark's cache manager would then substitute those relations

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from etl_olho_vivo_spark.caching import CacheBag
 from etl_olho_vivo_spark.functions.hashing import MIX, P, duck_token_hash
 from etl_olho_vivo_spark.operators import quality
+from tests.references import brute_force_reference
 
 B = 64  # small on purpose: every bucket collides
 
@@ -76,7 +77,7 @@ def trained(spark):
 
 def test_train_matches_python_brute_force(spark, trained):
     pos, neg, model = trained
-    bias, weights = quality.brute_force_reference(
+    bias, weights = brute_force_reference(
         [t for _, t in pos], [t for _, t in neg],
         n_buckets=B, iters=6, lr=1.0, l2=1e-4,
         bucket_fn=lambda t: _feats(t, B),
@@ -131,7 +132,7 @@ def test_minibatch_training_matches_python_brute_force(spark):
     assert hostile["bias"] == model["bias"]
     assert hostile["weights"] == model["weights"]
     assert model["sample_frac"] == 0.5 and model["seed"] == 7
-    bias, weights = quality.brute_force_reference(
+    bias, weights = brute_force_reference(
         [t for _, t in pos], [t for _, t in neg],
         n_buckets=B, iters=5, lr=1.0, l2=1e-4,
         bucket_fn=lambda t: _feats(t, B),
@@ -175,7 +176,7 @@ def test_balanced_minibatch_matches_python_brute_force(spark):
     assert model["balance_classes"] is True
     # rate_pos = min(1, 0.5*36/(2*6)) = 1: the rare class saturates
     assert min(1.0, 0.5 * 36 / (2 * 6)) == 1.0
-    bias, weights = quality.brute_force_reference(
+    bias, weights = brute_force_reference(
         [t for _, t in pos], [t for _, t in neg],
         n_buckets=B, iters=5, lr=1.0, l2=1e-4,
         bucket_fn=lambda t: _feats(t, B),

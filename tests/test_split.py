@@ -65,25 +65,6 @@ def test_split_weight_validation():
         split._thresholds({"train": 0.99996, "val": 0.00004})
 
 
-def test_leakage_safe_splits_co_travel(spark, docs):
-    # chain 0-1, 1-2 (one component {0,1,2}) plus pair {100,101}
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (100, 101)], ["doc_a", "doc_b"]
-    )
-    out = split.leakage_safe_splits(docs, pairs, WEIGHTS)
-    rows = {r["doc_id"]: r["split"] for r in out.collect()}
-    assert len(rows) == 5000 and "component" not in out.columns
-    assert rows[0] == rows[1] == rows[2]
-    assert rows[100] == rows[101]
-    # singletons still split by their own id — identical to assign_splits
-    plain = {
-        r["doc_id"]: r["split"]
-        for r in split.assign_splits(docs, WEIGHTS).collect()
-    }
-    clustered = {0, 1, 2, 100, 101}
-    assert all(rows[k] == plain[k] for k in rows if k not in clustered)
-
-
 def test_cap_per_group_deterministic_unbiased(spark):
     df = spark.range(0, 3000).select(
         F.col("id").alias("doc_id"),

@@ -11,7 +11,6 @@ import pytest
 from etl_olho_vivo_spark.io.flatten import ingest_posicoes
 from etl_olho_vivo_spark.operators import speed
 from etl_olho_vivo_spark.streaming.pipeline import (
-    stream_interval_counts,
     stream_raw_posicoes,
     stream_speeds,
 )
@@ -93,19 +92,6 @@ def test_stream_flatten_matches_batch(spark, raw_dir):
     ]
 
 
-def test_stream_interval_counts(spark, raw_dir):
-    sdf = stream_interval_counts(stream_raw_posicoes(spark, raw_dir))
-    _run_to_memory(sdf, "win_stream", "complete")
-    rows = {
-        (r["bucket_start"], r["codigo_linha"]): r
-        for r in spark.table("win_stream").collect()
-    }
-    # all six pings land in the T0 bucket (T0 is bucket-aligned)
-    assert set(rows) == {(T0, 10), (T0, 11)}
-    for r in rows.values():
-        assert r["n_pings"] == 3 and r["n_vehicles"] == 1
-
-
 def test_watermark_drops_late_pings(spark, tmp_path):
     """Append mode + watermark across a checkpointed restart: once a
     window is finalized, a late ping for it is dropped EXPLICITLY (the
@@ -119,14 +105,29 @@ def test_watermark_drops_late_pings(spark, tmp_path):
     import json as _json
     import os
 
+    from pyspark.sql import functions as F
+
     d = tmp_path / "late_raw"
     d.mkdir()
     ck = str(tmp_path / "ck")
     out = str(tmp_path / "out")
 
     def run_once():
-        sdf = stream_interval_counts(
-            stream_raw_posicoes(spark, str(d)), watermark="1 hour"
+        # 30-min tumbling ping counts over the event-time instant
+        pos = stream_raw_posicoes(spark, str(d)).withColumn(
+            "event_time", F.timestamp_seconds(F.col("timestamp"))
+        ).withWatermark("event_time", "1 hour")
+        sdf = (
+            pos.groupBy(
+                F.window("event_time", "30 minutes").alias("w"),
+                "codigo_linha",
+            )
+            .agg(F.count(F.lit(1)).alias("n_pings"))
+            .select(
+                F.unix_timestamp("w.start").alias("bucket_start"),
+                "codigo_linha",
+                "n_pings",
+            )
         )
         q = (
             sdf.writeStream.format("parquet")
@@ -357,61 +358,6 @@ def test_three_slice_replay_drops_oldest_quarter(spark, tmp_path):
 
 
 @pytest.mark.sweep
-def test_stream_dedup_exact_drops_cross_batch_redelivery(spark, tmp_path):
-    """At-least-once redelivery: the same event_id arriving again in a
-    LATER micro-batch (within the watermark horizon) is dropped; the
-    first arrival's payload survives.  Uses one file per micro-batch
-    (maxFilesPerTrigger=1) so the redelivery genuinely crosses a batch
-    boundary and exercises the keyed state store, not an in-batch
-    distinct."""
-    import glob
-    import os
-    import shutil
-
-    from etl_olho_vivo_spark.streaming.pipeline import stream_dedup_exact
-
-    landing = tmp_path / "dedup_landing"
-    landing.mkdir()
-    schema = "event_id long, event_time timestamp, payload string"
-
-    def land(name, rows, mtime):
-        df = spark.createDataFrame(rows, schema).coalesce(1)
-        stage = str(tmp_path / f"stage_{name}")
-        df.write.mode("overwrite").parquet(stage)
-        (part,) = glob.glob(f"{stage}/part-*.parquet")
-        dest = str(landing / f"{name}.parquet")
-        shutil.move(part, dest)
-        shutil.rmtree(stage)
-        os.utime(dest, (mtime, mtime))
-
-    import datetime as dt
-
-    def ts(s):
-        return dt.datetime.fromtimestamp(T0 + s, dt.timezone.utc).replace(
-            tzinfo=None
-        )
-
-    # batch 0: two events; batch 1: redelivery of event 1 (different
-    # payload — proves FIRST arrival wins) + one fresh event
-    land("b0", [(1, ts(0), "first"), (2, ts(10), "x")], T0)
-    land("b1", [(1, ts(0), "redelivered"), (3, ts(20), "y")], T0 + 60)
-
-    sdf = stream_dedup_exact(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(landing)),
-        keys=["event_id"],
-        watermark="10 minutes",
-    )
-    _run_to_memory(sdf, "dedup_stream", "append")
-    rows = {
-        r["event_id"]: r["payload"]
-        for r in spark.table("dedup_stream").collect()
-    }
-    assert rows == {1: "first", 2: "x", 3: "y"}
-
-
-@pytest.mark.sweep
 def test_stream_sessionize_continues_across_batches(spark, tmp_path):
     """Session state survives micro-batch boundaries: a gap that spans
     two batches but stays within 1800 s must NOT open a new session,
@@ -604,67 +550,3 @@ def test_stream_sessionize_custom_tiebreaker_column(spark, tmp_path):
     assert got == {1: 1, 2: 1}, got
 
 
-def test_stream_colocation_matches_batch(spark, tmp_path):
-    """Stream-STREAM self-join parity (round 15): close ping pairs from
-    the watermarked streaming grid join, rolled up per bucket, equal
-    the batch colocation_pairs output over the same pings — INCLUDING
-    a pair whose two pings arrive in DIFFERENT micro-batches (file-per-
-    trigger), which only survives through the join's watermark-bounded
-    state.  A far vehicle and a distinct-bucket revisit pin the
-    negative space."""
-    from etl_olho_vivo_spark.operators.colocate import colocation_pairs
-    from etl_olho_vivo_spark.streaming.pipeline import (
-        stream_colocation_pairs,
-    )
-
-    d = tmp_path / "raw"
-    d.mkdir()
-    lat = -23.60
-    # ~300 m east at the equator scale used by the conservative grid;
-    # true haversine at this latitude ≈ 300 m * cos adjustments — both
-    # engines compute the same rounded value, the test just needs
-    # "within 500 m"
-    dlon_300 = 300.0 / (111320.0 * 0.9)
-    # file 0: vehicles 1 and 2 close together; vehicle 9 far away
-    (d / "data_0.json").write_text(json.dumps(_doc([
-        (1, 10, _iso(T0 + 10), lat, -46.60),
-        (2, 10, _iso(T0 + 20), lat, -46.60 + dlon_300),
-        (9, 11, _iso(T0 + 30), lat - 0.1, -46.20),
-    ])))
-    # file 1 (second micro-batch): vehicle 3 near vehicle 1, SAME
-    # bucket — the cross-batch pair; vehicle 1 again much later (a
-    # different bucket, pairs with nobody there)
-    (d / "data_1.json").write_text(json.dumps(_doc([
-        (3, 10, _iso(T0 + 40), lat + 1e-4, -46.60),
-        (1, 10, _iso(T0 + 7200), lat, -46.60),
-    ])))
-
-    from pyspark.sql import functions as F
-
-    sdf = stream_colocation_pairs(
-        stream_raw_posicoes(spark, str(d), max_files_per_trigger=1)
-    )
-    _run_to_memory(sdf, "coloc_stream", "append")
-    got = sorted(
-        tuple(r)
-        for r in spark.table("coloc_stream")
-        .groupBy("bucket", "vehicle_a", "vehicle_b")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_close"),
-            F.min("dist_m").alias("min_dist_m"),
-        )
-        .collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in colocation_pairs(
-            ingest_posicoes(spark, str(d))
-        ).collect()
-    )
-    assert got == want
-    # the cross-batch pair (1,3) IS present, and the far vehicle and
-    # the other-bucket revisit are not
-    pairs = {(a, b) for _, a, b, _, _ in got}
-    assert (1, 3) in pairs and (1, 2) in pairs and (2, 3) in pairs
-    assert all(9 not in p for p in pairs)
-    assert len(got) == 3

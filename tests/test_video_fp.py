@@ -1,7 +1,8 @@
 """Video-level perceptual near-dup (round 12): per-clip majority
 fingerprint over frame dHashes (operators/multimodal.py
-video_fingerprint / video_near_dups) — container invariance
-(MJPEG-in-AVI vs Y4M of the same pictures resolve to one survivor),
+video_fingerprint, paired by the media near-dup path) — container
+invariance (MJPEG-in-AVI vs Y4M of the same pictures resolve to one
+survivor),
 discrimination against distinct clips, and the CLI + streaming admit
 wiring for --kind video."""
 
@@ -15,6 +16,7 @@ import pytest
 from test_operators import _make_avi, _make_jpeg
 
 from etl_olho_vivo_spark.operators import multimodal
+from tests.media_pairs import media_near_dups
 
 SCHEMA = "doc_id long, media binary"
 
@@ -65,8 +67,8 @@ def test_vfp_majority_fold_pins():
 def test_video_fingerprint_container_invariance(spark):
     """The SAME pictures muxed as MJPEG-in-AVI and as Y4M fingerprint
     within re-encode distance (the JPEG leg re-quantizes pixels; the
-    majority fold absorbs the per-frame flips), video_near_dups pairs
-    them, and distinct clips stay far apart and unpaired.  Opaque
+    majority fold absorbs the per-frame flips), the media near-dup path
+    pairs them, and distinct clips stay far apart and unpaired.  Opaque
     media yield NULL vfp and never pair."""
     clip = _planes(7)
     other = _planes(99)
@@ -99,7 +101,7 @@ def test_video_fingerprint_container_invariance(spark):
     assert diff > 6, f"distinct clips measured only {diff} bits apart"
 
     pairs = [(r["doc_a"], r["doc_b"])
-             for r in multimodal.video_near_dups(df).collect()]
+             for r in media_near_dups(df, "video").collect()]
     assert pairs == [(1, 2)]
 
 
@@ -277,13 +279,13 @@ def test_video_excerpt_is_not_a_near_dup(spark):
     assert fps[3] == fp_b              # the excerpt IS its own majority
 
     pairs = [(r["doc_a"], r["doc_b"])
-             for r in multimodal.video_near_dups(df).collect()]
+             for r in media_near_dups(df, "video").collect()]
     assert pairs == [(1, 2)]           # trim pairs; excerpt does not
 
 
 def test_video_excerpt_is_contained(spark):
     """Round 14 (r13 verdict #1): the retrieval sibling of the excerpt
-    decision.  The tail excerpt that ``video_near_dups`` correctly
+    decision.  The tail excerpt that the media near-dup path correctly
     refuses to pair (test above) IS reported by the per-frame
     containment query — every excerpt frame appears verbatim in the
     source (Y4M is lossless → hamming 0), so frac = 1.0 — while a
@@ -310,7 +312,7 @@ def test_video_excerpt_is_contained(spark):
     assert got == {(3, 1): (4, 4, 1.0)}
     # the dedup boundary still holds: the excerpt is NOT a near-dup
     pairs = [(r["doc_a"], r["doc_b"])
-             for r in multimodal.video_near_dups(df).collect()]
+             for r in media_near_dups(df, "video").collect()]
     assert (1, 3) not in pairs and (3, 1) not in pairs
 
 
