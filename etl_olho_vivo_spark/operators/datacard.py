@@ -458,27 +458,6 @@ def _media_card_from_rows(rows, kind: str) -> dict:
     return card
 
 
-def media_datacard(
-    df: DataFrame, kind: str, media: str = "media", id_col: str = "doc_id"
-) -> dict:
-    """One-shot media card over an admitted media corpus: ONE Arrow
-    decode pass (the same ``media_fingerprints`` stage the admit loop
-    runs) feeding the bounded grouping-sets aggregation.  Driver state
-    is one row per (dim, key) — never the media bytes."""
-    from etl_olho_vivo_spark.streaming.media_stream import (
-        media_fingerprints,
-    )
-
-    fps = media_fingerprints(
-        df.select(
-            F.col(_bt(id_col)).alias("doc_id"),
-            F.col(_bt(media)).alias("media"),
-        ),
-        kind,
-    )
-    return _media_card_from_rows(media_stats(fps, kind).collect(), kind)
-
-
 def media_card_from_stats_store(
     spark: SparkSession,
     stats_dir: str,
@@ -491,7 +470,8 @@ def media_card_from_stats_store(
     the decode pass the admit loop already ran) — card emission costs
     ∝ batches and NEVER re-decodes media.  Pass ``corpus_dir`` to make
     mid-life enablement loud (same partition-set coverage check as the
-    text card; the backfill is ``media_datacard`` — one decode scan)."""
+    text card; the backfill is ``media_stats`` over the missing
+    batches' fingerprints — one decode scan)."""
     rows = (
         spark.read.parquet(stats_dir)
         .groupBy("dim", "key")
@@ -501,6 +481,6 @@ def media_card_from_stats_store(
     card = _media_card_from_rows(rows, kind)
     if corpus_dir is not None:
         _stamp_if_partial(
-            card, spark, stats_dir, corpus_dir, backfill="media_datacard"
+            card, spark, stats_dir, corpus_dir, backfill="media_stats"
         )
     return card

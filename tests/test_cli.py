@@ -553,6 +553,56 @@ def test_corpus_stream_subcommand(spark, tmp_path, capsys):
         r["ingest_batch_id"]
         for r in sig.select("ingest_batch_id").distinct().collect()
     ] == [-1]
+    # a start-up config error from run_corpus_stream exits 2, the same
+    # rule media-stream follows, not a traceback
+    with pytest.raises(SystemExit, match="stats_dims requires stats_dir"):
+        main([
+            "--cpus", "8", "corpus-stream", "--in", str(landing),
+            "--corpus", corpus, "--store", store,
+            "--checkpoint", str(tmp_path / "ckpt_dims"),
+            "--stats-dims", "lang",
+        ])
+
+
+def test_gate_flags_translate_once():
+    """corpus and corpus-stream parse the same gate flags into the same
+    keyword arguments, each one a parameter of both entry points."""
+    import inspect
+
+    from etl_olho_vivo_spark.__main__ import _build_parser, _gate_kwargs
+    from etl_olho_vivo_spark.plans.corpus import run_corpus
+    from etl_olho_vivo_spark.streaming.corpus_stream import (
+        run_corpus_stream,
+    )
+
+    gates = [
+        "--c4", "--gopher", "--quality-model", "q.json",
+        "--quality-min-score", "0.7", "--snapshot-filter", "bloom",
+        "--snapshot-overlap", "0.3", "--eval-grams", "grams",
+        "--eval-ngram", "7",
+    ]
+    parser = _build_parser()
+    batch = parser.parse_args(
+        ["corpus", "--sf-dir", "in", "--out", "out", *gates]
+    )
+    stream = parser.parse_args([
+        "corpus-stream", "--in", "in", "--corpus", "c", "--store", "s",
+        "--checkpoint", "k", *gates,
+    ])
+    kwargs = _gate_kwargs(batch)
+    assert kwargs == _gate_kwargs(stream) == {
+        "quality_model_path": "q.json",
+        "quality_min_score": 0.7,
+        "snapshot_filter_dir": "bloom",
+        "snapshot_overlap": 0.3,
+        "eval_grams_dir": "grams",
+        "eval_ngram": 7,
+    }
+    assert (batch.c4, batch.gopher) == (stream.c4, stream.gopher) == (
+        True, True,
+    )
+    for fn in (run_corpus, run_corpus_stream):
+        assert set(kwargs) <= set(inspect.signature(fn).parameters)
 
 
 def test_unknown_command_rejected():

@@ -116,16 +116,19 @@ def test_plan_merge_join_no_dedup_exchange(spark):
     in exactly THREE exchanges (two join sides + the pair rollup) —
     the exactly-once grid needs no de-duplicating exchange."""
     from etl_olho_vivo_spark import registry
+    from tests.plan_walk import count_nodes, executed_plan, hash_shuffles
 
     registry.queries()
     df = registry.REGISTRY["geo_pairs"].fn(
         spark, "/root/testdata/sf0.001"
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    node = executed_plan(df)
+    plan = node.toString()
     assert "SortMergeJoin" in plan
     assert "BroadcastHashJoin" not in plan
-    assert plan.count("Exchange hashpartitioning") == 3, plan[:2000]
-    assert plan.count("Generate") == 1  # one 9-cell explode, probe side
+    assert hash_shuffles(node) == 3, plan[:2000]
+    # one 9-cell explode, probe side
+    assert count_nodes(node)["GenerateExec"] == 1
 
 
 def test_null_coordinate_pings_never_pair(spark):

@@ -197,9 +197,15 @@ def test_diff_datacards_drift_report():
     assert shifts == sorted(shifts, reverse=True)
 
 
-def test_datacard_diff_cli_no_spark(tmp_path, capsys):
+def test_datacard_diff_cli_no_spark(tmp_path, capsys, monkeypatch):
     """datacard-diff dispatches BEFORE the SparkSession factory — it
     must work with no Spark job at all and write the full diff."""
+    import etl_olho_vivo_spark.session as session
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("datacard-diff started a SparkSession")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
     old = _mini_card({"en": (5, 50)}, {"web": (5, 50)}, 50, 5, {"3": 5})
     new = _mini_card({"en": (6, 80)}, {"web": (6, 80)}, 80, 6, {"3": 6})
     po, pn = tmp_path / "old.json", tmp_path / "new.json"

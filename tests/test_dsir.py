@@ -280,14 +280,17 @@ def test_plan_shape(spark):
     (the two 1-row total frames ride broadcast nested loops — bounded
     by construction)."""
     from etl_olho_vivo_spark import registry
+    from tests.plan_walk import count_nodes, executed_plan
 
     registry.queries()
     df = registry.REGISTRY["dsir_select"].fn(
         spark, "/root/testdata/sf0.01"
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    node = executed_plan(df)
+    plan = node.toString()
     assert "TakeOrderedAndProject" in plan
-    assert plan.count("BroadcastHashJoin") >= 2  # t_rel and r_rel
+    # t_rel and r_rel
+    assert count_nodes(node)["BroadcastHashJoinExec"] >= 2
     assert "CartesianProduct" not in plan
     for bad in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert bad not in plan

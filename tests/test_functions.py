@@ -133,9 +133,10 @@ def test_profile_table_single_pass(spark):
     # complex type: accounted, but no total order → null min/max
     assert prof["arr"]["n_nulls"] == 1
     assert prof["arr"]["min_str"] is None
+    from tests.plan_walk import count_nodes, executed_plan
+
     # ONE job, one scan: the profile plan reads the source exactly once
-    plan = profile_table(df)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Scan ExistingRDD") <= 1
+    assert count_nodes(executed_plan(profile_table(df)))["RDDScanExec"] <= 1
 
 
 def test_profile_table_on_driver_table(spark):

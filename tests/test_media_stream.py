@@ -13,6 +13,21 @@ import pytest
 SCHEMA = "doc_id long, media binary"
 
 
+def media_datacard(df, kind: str) -> dict:
+    """Reference card: one decode pass over the whole admitted corpus,
+    the card the incremental stats store must aggregate to."""
+    from etl_olho_vivo_spark.operators.datacard import (
+        _media_card_from_rows,
+        media_stats,
+    )
+    from etl_olho_vivo_spark.streaming.media_stream import (
+        media_fingerprints,
+    )
+
+    fps = media_fingerprints(df.select("doc_id", "media"), kind)
+    return _media_card_from_rows(media_stats(fps, kind).collect(), kind)
+
+
 def _p5(rows):
     return (b"P5\n%d %d\n255\n" % (len(rows[0]), len(rows))
             + b"".join(bytes(r) for r in rows))
@@ -408,7 +423,6 @@ def test_incremental_media_stats_store_matches_one_shot_card(spark, dirs):
     batch replaces its stats partition (idempotent)."""
     from etl_olho_vivo_spark.operators.datacard import (
         media_card_from_stats_store,
-        media_datacard,
     )
     from etl_olho_vivo_spark.streaming.media_stream import (
         admit_media_batch,
@@ -459,7 +473,7 @@ def test_incremental_media_stats_store_matches_one_shot_card(spark, dirs):
 @pytest.mark.sweep
 def test_media_stats_store_midlife_is_loud(spark, dirs):
     """stats_dir enabled only from batch 1: the card stamps
-    partial=true + the missing batch id + the media_datacard backfill
+    partial=true + the missing batch id + the media_stats backfill
     pointer (same coverage check as the text card)."""
     from etl_olho_vivo_spark.operators.datacard import (
         media_card_from_stats_store,
@@ -480,7 +494,7 @@ def test_media_stats_store_midlife_is_loud(spark, dirs):
     )
     assert card["partial"] is True
     assert card["missing_batch_ids"] == ["0"]
-    assert "media_datacard" in card["note"]
+    assert "media_stats" in card["note"]
     assert card["docs"] == 1  # undercount, but loudly stamped
 
 
@@ -492,7 +506,6 @@ def test_media_stream_cli_emits_datacard(spark, dirs, tmp_path, capsys):
     import json as _json
 
     from etl_olho_vivo_spark.__main__ import main
-    from etl_olho_vivo_spark.operators.datacard import media_datacard
 
     _write_batch(spark, dirs["stage"], "b0",
                  [(1, _img(5)), (2, _img(40)), (3, _img(5))])

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from etl_olho_vivo_spark.operators import dedup, multimodal, similarity
 from etl_olho_vivo_spark.operators.asof import asof_join
 from tests.media_pairs import media_near_dups
+from tests.plan_walk import count_nodes, executed_plan
 
 
 # ---------------------------------------------------------------------------
@@ -734,10 +735,6 @@ def test_connected_components_string_ids_multihop(spark):
         for r in connected_components(pairs).collect()
     }
     assert comp == {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}
-
-
-def _n_cached(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def _cached_ids(spark) -> set:
@@ -1592,7 +1589,10 @@ def test_pq_serving_path_and_plan(spark, embeddings, tmp_path):
     plan = served_df._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert "Exchange hashpartitioning" not in final, final[:2000]
-    assert final.count("TakeOrderedAndProject") >= 2, final[:2000]
+    # the frame has executed: the walk reads AQE's final plan
+    assert count_nodes(executed_plan(served_df))[
+        "TakeOrderedAndProjectExec"
+    ] >= 2, final[:2000]
 
 
 def test_pq_validation(spark, embeddings):
