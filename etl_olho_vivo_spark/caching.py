@@ -54,7 +54,8 @@ class CacheBag:
 
     ``add`` persists the frame (MEMORY_AND_DISK — spill, don't recompute)
     and tracks it; ``cut`` materializes it behind a lineage cut and
-    tracks the backing RDD; ``release`` unpersists everything tracked.
+    tracks the backing RDD; ``take`` moves another bag's entries in;
+    ``release`` unpersists everything tracked.
     Safe to release frames that were never materialized, and safe to
     call twice.
     """
@@ -88,6 +89,13 @@ class CacheBag:
         leaf = out._jdf.queryExecution().logical()
         self._rdds.append(leaf.rdd())
         return out
+
+    def take(self, other: "CacheBag") -> None:
+        """Move every entry of ``other`` into this bag; ``other`` ends
+        empty, so releasing it no longer touches them."""
+        self._frames += other._frames
+        self._rdds += other._rdds
+        other._frames, other._rdds = [], []
 
     def release(self) -> None:
         frames, self._frames = self._frames, []

@@ -3,12 +3,16 @@
 Scale design (the 100 TB story):
 - signatures (shingles → MinHash → band keys) are computed **per row with
   array higher-order functions** — no explode, no shuffle, pure map;
-- the only shuffles are (1) the LSH band self-join on ``(band, band_sig)``
-  — candidate generation touches just B small keys per doc, never the
-  O(n²) cross product — and (2) the final verify join, which is bounded by
-  the candidate count;
-- band keys are near-uniform (md5-derived), so the band join is skew-free;
-  a hot band (e.g. boilerplate) is exactly what AQE skew-split handles.
+- the only shuffles are (1) the LSH band self-join on ``(band, key)``,
+  one 64-bit key per band — candidate generation touches just B small
+  keys per doc, never the O(n²) cross product — and (2) the final verify
+  join, which is bounded by the candidate count;
+- band keys are near-uniform (``xxhash64`` of the band's MinHash values),
+  so the band join is skew-free; a hot band (e.g. boilerplate) is exactly
+  what AQE skew-split handles;
+- every pairing — MinHash and Hamming, batch self-join and batch against
+  store — goes through one band join, ``_band_join``, which owns the
+  join hint and the pair guard.
 
 MinHash-LSH follows the classic banding construction (Broder; Leskovec et
 al., "Mining of Massive Datasets" ch.3) — K hashes, B bands × r rows:
@@ -17,14 +21,10 @@ P(candidate) = 1 − (1 − J^r)^B.
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-if TYPE_CHECKING:
-    from etl_olho_vivo_spark.caching import CacheBag
-
+from etl_olho_vivo_spark.caching import SESSION_BAG, CacheBag
 from etl_olho_vivo_spark.functions.hashing import (
     P,
     minhash_perm_expr,
@@ -447,40 +447,92 @@ def minhash_signature(
 
 
 def lsh_bands(df: DataFrame, sig_col: str = "minhash") -> DataFrame:
-    """Explode the signature into slim (doc_id, band, band_sig) key rows.
+    """Explode the signature into slim (doc_id, band, key) rows: one
+    64-bit ``key`` per band, the ``xxhash64`` of the band's
+    ``ROWS_PER_BAND`` signature values.
 
-    Deliberately does NOT carry the shingle array: the band self-join
-    should shuffle ~40-byte key rows, not text-sized shingle payloads.
+    Deliberately does NOT carry the shingle array: the band join should
+    shuffle ~20-byte key rows, not text-sized shingle payloads.
+
+    Two different band slices can share a key.  Verification is exact
+    Jaccard, so a collision only adds a candidate, never a verified pair
+    below the threshold; the chance that any collision occurs is about
+    (band-key rows)²/2⁶⁴, under 10⁻⁶ for a million documents × 4 bands.
     """
     bands = (
         f"transform(sequence(0, {NUM_BANDS - 1}), b -> "
-        f"struct(b AS band, array_join(transform("
-        f"slice({sig_col}, b * {ROWS_PER_BAND} + 1, {ROWS_PER_BAND}), "
-        f"x -> CAST(x AS STRING)), '_') AS band_sig))"
+        f"struct(b AS band, xxhash64("
+        f"slice({sig_col}, b * {ROWS_PER_BAND} + 1, {ROWS_PER_BAND})) AS key))"
     )
-    return df.select(
-        "doc_id", F.explode(F.expr(bands)).alias("bk")
-    ).select("doc_id", "bk.band", "bk.band_sig")
+    return df.select("doc_id", F.inline(F.expr(bands)))
+
+
+def _band_join(left: DataFrame, right: DataFrame, *, self_join: bool) -> DataFrame:
+    """One row per (band, key) shared by a left and a right doc.
+
+    Both sides are band-key frames ``(doc_id, band, key[, payload])``
+    with a bigint ``key``.  The result is ``(doc_a[, payload_a], doc_b[,
+    payload_b])`` for a self-join, ``doc_new``/``doc_old`` otherwise.  A
+    pair sharing k bands appears k times; callers de-duplicate.
+
+    Self-join: both sides are the same corpus-sized relation, so
+    ``merge`` is pinned.  Unhinted, AQE's runtime size estimate can pick
+    a broadcast (a corpus-scaled broadcast is the plan that dies first
+    at scale), and shuffle_hash builds an in-memory map that cannot
+    spill; the starved-JVM probe showed both OOM at 30× density while
+    sort-merge spills and completes.  ``doc_a < doc_b`` drops
+    self-pairs and keeps one orientation.
+
+    Batch against store: unhinted.  A merge pin would shuffle and sort
+    the whole store on every batch; AQE's broadcast pick uses actual
+    runtime bytes, so a normal batch broadcasts its key rows and the
+    store is only scanned, while a corpus-sized catch-up batch falls
+    back to a spillable sort-merge join.  ``doc_new != doc_old``: ids
+    are globally unique, so an equal id is the batch's own earlier
+    write seen again after an at-least-once replay (possibly folded
+    into a compacted base that partition exclusion cannot see); it
+    would match itself and delete itself from the corpus.
+    """
+    a, b = ("doc_a", "doc_b") if self_join else ("doc_new", "doc_old")
+    lhs = left.withColumnsRenamed({"doc_id": a, "payload": "payload_a"})
+    rhs = right.withColumnsRenamed({"doc_id": b, "payload": "payload_b"})
+    if self_join:
+        lhs = lhs.hint("merge")
+    guard = F.col(a) < F.col(b) if self_join else F.col(a) != F.col(b)
+    return lhs.join(rhs, ["band", "key"]).filter(guard).drop("band", "key")
 
 
 def candidate_pairs(banded: DataFrame) -> DataFrame:
-    """Doc-id pairs sharing any (band, band_sig) key — the LSH candidates.
+    """Doc-id pairs sharing any (band, key) — the LSH candidates."""
+    return _band_join(banded, banded, self_join=True).dropDuplicates(
+        ["doc_a", "doc_b"]
+    )
 
-    merge (sort-merge) pinned: both sides are corpus-sized band-key
-    relations.  Without a hint AQE's runtime size estimate can pick a
-    broadcast join (corpus-scaled broadcast = the plan that dies first
-    at scale), and shuffle_hash builds a per-partition in-memory map
-    that cannot spill — the starved-JVM probe showed both OOM at 30×
-    density while the sort-merge plan spills and completes.
+
+def _jaccard_pairs(
+    pairs: DataFrame, left: DataFrame, right: DataFrame, threshold: float,
+    *, self_join: bool,
+) -> DataFrame:
+    """Verify candidate ``pairs`` (two id columns) by exact Jaccard:
+    join each id back to its ``sh`` in ``left`` / ``right`` (doc_id, sh,
+    ...) frames and keep ``inter/union >= threshold``.  Hints follow
+    ``_band_join``: merge for a self-join (a shuffled-hash build map of
+    corpus-scaled shingle arrays is the first thing to OOM), none
+    against a store, so AQE broadcasts the batch-scaled sides.
     """
-    a = banded.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
-    b = banded.select(F.col("doc_id").alias("doc_b"), "band", "band_sig")
+    a, b = pairs.columns
+    sh_a = left.select(F.col("doc_id").alias(a), F.col("sh").alias("sh_a"))
+    sh_b = right.select(F.col("doc_id").alias(b), F.col("sh").alias("sh_b"))
+    if self_join:
+        sh_a, sh_b = sh_a.hint("merge"), sh_b.hint("merge")
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
     return (
-        a.hint("merge")
-        .join(b, ["band", "band_sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
+        pairs.join(sh_a, a)
+        .join(sh_b, b)
+        .withColumn("jaccard", inter / union)
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
     )
 
 
@@ -519,23 +571,7 @@ def near_duplicates(
         if persist:
             sig = _persist(sig, caches)
     pairs = candidate_pairs(lsh_bands(sig))
-    sh_a = sig.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sh_b = sig.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    # verify joins pinned merge: `pairs` scales with candidates and the
-    # sh_* sides (shingle arrays) with the corpus — neither may be
-    # broadcast, and a shuffled-hash build map of shingle arrays is the
-    # first thing to OOM under memory pressure; SMJ spills instead
-    return (
-        pairs.hint("merge")
-        .join(sh_a, "doc_a")
-        .hint("merge")
-        .join(sh_b, "doc_b")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard_pairs(pairs, sig, sig, threshold, self_join=True)
 
 
 def _persist(df: DataFrame, caches) -> DataFrame:
@@ -549,8 +585,6 @@ def _persist(df: DataFrame, caches) -> DataFrame:
     released cache that is still referenced simply recomputes — never
     wrong rows, only a cold re-run.
     """
-    from etl_olho_vivo_spark.caching import SESSION_BAG
-
     return (caches if caches is not None else SESSION_BAG).add(df)
 
 
@@ -570,11 +604,7 @@ def connected_components(
     groupBy per round, both hash-shuffles on doc_id); rounds needed =
     graph diameter, and near-dup clusters are shallow (pairs chain
     through shared content), so convergence is typically 2-4 rounds.
-    Deterministic: min() over any orderable id type, no seeds.  Works
-    for string ids too: the fixpoint is detected by comparing each
-    node's new min-label against its old one inside the propagation
-    aggregate (an earlier sum()-based check was numeric-only and would
-    NULL out — declaring false convergence — on non-numeric ids).
+    Deterministic: min() over any orderable id type, no seeds.
     Raises if the graph hasn't converged after ``max_iter`` rounds
     rather than returning a silently-wrong clustering.
 
@@ -583,28 +613,26 @@ def connected_components(
     that is only *transitively* near another survivor, components does
     not.
 
-    Result lifecycle: the labels are materialized eagerly (so the
-    iteration caches can be released before returning); the FINAL
-    round's persisted frame is handed to ``caches`` (or the session
-    bag) directly — it is already materialized by that round's own
-    action, so no copy is made — and the caller unpersists
-    deterministically after consuming.  It stays a persist, not a
-    ``CacheBag.cut``: a cut would store a second copy of a frame that
-    is already resident, and the attached label-propagation plan lets
-    an evicted block re-derive instead of failing.
+    Result lifecycle: every round's labels are a ``CacheBag.cut``, so
+    round k's plan starts from one leaf instead of nesting the cached
+    build plans of rounds 1..k-1 (nested caches re-print that lineage
+    into every plan render and SQL event; at 10k documents the text
+    grew until ``explainString`` ran the driver out of memory).  Each
+    round releases the previous round's blocks once its own labels are
+    stored.  The final round's cut moves to ``caches`` (or the session
+    bag) — it is already materialized by that round's own action, so
+    no copy is made — and the caller releases it after consuming.
 
-    Per-round cost (round 16): ONE job.  The fixpoint check rides the
-    propagation aggregate itself — the old label is one tagged branch
-    of the union the groupBy already consumes, so ``min(comp)`` (the
-    new label) and ``min(comp) WHERE old`` (the old label; exactly one
-    old row per node) come out of the SAME partial-aggregating shuffle,
-    and ``changed`` is a scan-of-cache aggregate over the frame the
-    round materializes anyway.  Label-type agnostic (min/< work for
-    string ids; a sum()-based checksum would NULL out).  This is NOT
-    the round-9 experiment that measured worse: that one attached the
-    old label with an extra per-round JOIN, which defeated AQE's
-    post-shuffle coalescing — here no join is added, one whole
-    comparison job (broadcast + join + limit) is removed per round.
+    Per round: ONE action.  The fixpoint check rides the propagation
+    aggregate — the old label is one tagged branch of the union the
+    groupBy already consumes, so the new label ``min(comp)`` and the
+    old one ``min(comp) WHERE old`` come out of the same
+    partial-aggregating shuffle, and ``changed`` is an aggregate over
+    the labels the round stores anyway.  min and < work for string ids
+    too, where a sum()-based checksum would NULL out and declare false
+    convergence.  Comparing old and new labels with an extra per-round
+    join instead measured slower: it defeats AQE's post-shuffle
+    coalescing.
     """
     edges = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
     nodes = (
@@ -612,7 +640,8 @@ def connected_components(
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    labels = nodes.withColumn("comp", F.col("node")).persist()
+    held = CacheBag()  # the current round's labels
+    labels = held.cut(nodes.withColumn("comp", F.col("node")))
     both = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()
@@ -638,35 +667,32 @@ def connected_components(
                     ),
                 )
             )
-            new_labels = stepped.select(
+            step = CacheBag()
+            new_labels = step.cut(stepped.select(
                 "node", "comp",
                 # min-labels are monotone ↓: moved ⇔ strictly smaller
                 (F.col("comp") < F.col("__old_comp__")).alias("__chg__"),
-            ).persist()
-            # ONE action: the full-scan aggregate materializes the
-            # round's cache AND returns the fixpoint flag (None on an
-            # empty graph = trivially converged)
+            ))
+            # ONE action: the full-scan aggregate stores the round's
+            # labels AND returns the fixpoint flag (None on an empty
+            # graph = trivially converged)
             changed = bool(
                 new_labels.agg(F.max("__chg__")).collect()[0][0]
             )
+            held.release()
+            held, labels = step, new_labels
             if not changed:  # fixpoint
-                # hand the final round's frame (already materialized by
-                # the action above) to the bag — no second persist+copy;
-                # ``labels`` still names the PREVIOUS round's frame, so
-                # the finally block below releases exactly the
-                # iteration caches and never this result
-                return _persist(new_labels, caches).select(
+                (caches if caches is not None else SESSION_BAG).take(held)
+                return labels.select(
                     F.col("node").alias("doc_id"),
                     F.col("comp").alias("component"),
                 )
-            labels.unpersist()
-            labels = new_labels
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             "(graph diameter exceeds max_iter — raise it)"
         )
     finally:
-        labels.unpersist()
+        held.release()
         both.unpersist()
 
 
@@ -776,49 +802,10 @@ def incremental_near_duplicates(
         )
         if persist:
             new_sig = _persist(new_sig, caches)
-    new_bands = lsh_bands(new_sig).withColumnRenamed("doc_id", "doc_new")
-    old_bands = lsh_bands(store).withColumnRenamed("doc_id", "doc_old")
-    # deliberately UNHINTED — the one pair join whose sides are
-    # asymmetric: old_bands is CORPUS-sized but new_bands scales with
-    # the micro-batch.  A merge pin here would shuffle+sort the whole
-    # store on EVERY batch (cost ∝ corpus — the exact contract this
-    # function exists to avoid); letting AQE decide keeps cost ∝ batch:
-    # its broadcast picks use ACTUAL runtime bytes against the
-    # threshold (bounded by construction, unlike estimate-based static
-    # broadcasts), so a normal batch broadcasts its slim band keys and
-    # the store is only scanned, while a degenerate corpus-sized
-    # catch-up batch falls back to a spillable sort-merge join.
-    pairs = (
-        new_bands.join(old_bands, ["band", "band_sig"])
-        # identity guard: doc ids are globally unique, so doc_new ==
-        # doc_old can only mean the store holds the batch's OWN earlier
-        # write (at-least-once replay — possibly already folded into a
-        # compacted base partition, where partition-level exclusion
-        # cannot see it).  Without this a replayed doc self-matches at
-        # jaccard 1.0 and deletes itself from the corpus.
-        .filter(F.col("doc_new") != F.col("doc_old"))
-        .select("doc_new", "doc_old")
-        .dropDuplicates(["doc_new", "doc_old"])
-    )
-    sh_new = new_sig.select(
-        F.col("doc_id").alias("doc_new"), F.col("sh").alias("sh_a")
-    )
-    sh_old = store.select(
-        F.col("doc_id").alias("doc_old"), F.col("sh").alias("sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        # unhinted for the same reason as the band join above: pairs and
-        # sh_new are batch/candidate-scaled, sh_old is corpus-scaled —
-        # AQE's byte-bounded broadcast of the small sides keeps the
-        # store un-shuffled on the normal path
-        pairs.join(sh_new, "doc_new")
-        .join(sh_old, "doc_old")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_new", "doc_old", "jaccard")
-    )
+    pairs = _band_join(
+        lsh_bands(new_sig), lsh_bands(store), self_join=False
+    ).dropDuplicates(["doc_new", "doc_old"])
+    return _jaccard_pairs(pairs, new_sig, store, threshold, self_join=False)
 
 
 def simhash_near_dups(
@@ -883,30 +870,45 @@ def _hamming_validate(bits: int, max_hamming: int, n_bands: int) -> None:
         raise ValueError(f"bits={bits} not divisible by n_bands={n_bands}")
 
 
-def _hamming_band_keys(sims: DataFrame, bits: int, n_bands: int) -> DataFrame:
-    """(doc_id, __h__, band, seg) keys for a (doc_id, __h__) frame.
-    Segment extraction uses ``shiftrightunsigned`` so full-width 64-bit
-    hashes (stored as SIGNED longs, possibly negative) band correctly.
-
-    The full hash rides along (round 15): the verify payload is ONE
-    64-bit value, so carrying it through the band join costs 8 bytes
-    per key row and removes the two merge join-backs (plus their
-    sorts/exchanges) that used to re-attach hashes to candidate pairs
-    — the §8 "shuffle a few bytes of metadata" trade, measured as the
-    dominant cost of the pairing stage."""
+def _hamming_band_keys(
+    hashes: DataFrame, id_col: str, hash_col: str, bits: int, n_bands: int
+) -> DataFrame:
+    """(doc_id, band, key, payload) rows: the key is the band's segment
+    (``shiftrightunsigned``, so full-width 64-bit hashes stored as
+    SIGNED longs band correctly), the payload the full hash.  Carrying
+    the hash costs 8 bytes per key row and lets the band join's output
+    verify in place: no join-backs (each a sort and exchange, measured
+    as the pairing stage's dominant cost) re-attach hashes to pairs."""
     w = bits // n_bands
     # full-width segment (n_bands=1, bits=64): the mask 2^64-1 does not
     # fit a BIGINT literal (Spark parses it as DECIMAL and `&` rejects
     # it) — but as a SIGNED 64-bit value all-ones IS -1, and x & -1 = x
     mask = (2 ** w - 1) if w < 64 else -1
     seg = (
-        f"transform(sequence(0, {n_bands - 1}), b -> "
-        f"struct(b AS band, shiftrightunsigned(__h__, b * {w}) "
-        f"& {mask} AS seg))"
+        f"transform(sequence(0, {n_bands - 1}), b -> struct(b AS band, "
+        f"CAST(shiftrightunsigned(payload, b * {w}) & {mask} AS BIGINT) AS key))"
     )
-    return sims.select(
-        "doc_id", "__h__", F.explode(F.expr(seg)).alias("bk")
-    ).select("doc_id", "__h__", "bk.band", "bk.seg")
+    return hashes.select(
+        F.col(id_col).alias("doc_id"), F.col(hash_col).alias("payload")
+    ).select("doc_id", F.inline(F.expr(seg)), "payload")
+
+
+def _hamming_pairs(
+    left: DataFrame, right: DataFrame, max_hamming: int,
+    *, self_join: bool, dedup_pairs: bool = True,
+) -> DataFrame:
+    """Pairs of two Hamming band-key frames within ``max_hamming``:
+    ``_band_join``, ``bit_count(a XOR b)`` on the carried hashes, then
+    the pair de-dup over VERIFIED pairs, a subset of the candidates (a
+    pair agreeing on k segments emerges k times)."""
+    hamming = F.bit_count(F.col("payload_a").bitwiseXOR(F.col("payload_b")))
+    out = (
+        _band_join(left, right, self_join=self_join)
+        .withColumn("hamming", hamming)
+        .filter(F.col("hamming") <= max_hamming)
+        .drop("payload_a", "payload_b")
+    )
+    return out.dropDuplicates(out.columns[:2]) if dedup_pairs else out
 
 
 def hamming_near_dups(
@@ -923,40 +925,10 @@ def hamming_near_dups(
     fingerprint): split the hash into ``n_bands`` contiguous segments,
     equi-join on (band, segment) — any pair within Hamming ≤
     n_bands − 1 agrees on at least one segment — then verify exactly
-    with ``bit_count(a XOR b)``.  Returns (doc_a, doc_b, hamming).
-
-    Plan shape (round 15): the band keys CARRY the 64-bit hash, so the
-    band join's output is verifiable in place — bit_count is one codegen
-    instruction — and the pair de-dup (a pair agreeing on k segments
-    emerges k times) runs AFTER the Hamming filter, over the verified
-    pairs (a subset of the candidates), instead of before two hash
-    join-backs.  vs the round-14 shape this removes two sort-merge
-    joins and their exchanges (7 exchanges → 3 for the simhash row)
-    and shrinks the de-dup exchange from candidate volume to verified
-    volume, for +8 bytes per band-key row."""
+    with ``bit_count(a XOR b)``.  Returns (doc_a, doc_b, hamming)."""
     _hamming_validate(bits, max_hamming, n_bands)
-    sims = hashes.select(
-        F.col(id_col).alias("doc_id"), F.col(hash_col).alias("__h__")
-    )
-    banded = _hamming_band_keys(sims, bits, n_bands)
-    a = banded.select(
-        F.col("doc_id").alias("doc_a"), F.col("__h__").alias("ha"),
-        "band", "seg",
-    )
-    b = banded.select(
-        F.col("doc_id").alias("doc_b"), F.col("__h__").alias("hb"),
-        "band", "seg",
-    )
-    hamming = F.bit_count(F.expr("ha ^ hb"))
-    return (
-        a.hint("merge")
-        .join(b, ["band", "seg"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    keys = _hamming_band_keys(hashes, id_col, hash_col, bits, n_bands)
+    return _hamming_pairs(keys, keys, max_hamming, self_join=True)
 
 
 def hamming_near_dups_incremental(
@@ -972,65 +944,26 @@ def hamming_near_dups_incremental(
 ) -> DataFrame:
     """Hamming near-dup pairs between a NEW batch of fingerprints and a
     persisted fingerprint store — the pigeonhole sibling of
-    ``incremental_near_duplicates``.  Both frames carry (id_col,
-    hash_col); only slim 64-bit rows are involved (the caller already
-    paid the decode).  Returns (doc_new, doc_old, hamming ≤
-    max_hamming); resolve drops on the caller's policy (typically:
-    drop doc_new — the stored row was admitted first).
+    ``incremental_near_duplicates``, with the same unhinted band join
+    and ``doc_new != doc_old`` replay guard (``_band_join``).  Both
+    frames carry (id_col, hash_col); only slim 64-bit rows are involved
+    (the caller already paid the decode).  Returns (doc_new, doc_old,
+    hamming ≤ max_hamming); resolve drops on the caller's policy
+    (typically: drop doc_new — the stored row was admitted first).
 
-    Scale shape: the band join is deliberately UNHINTED for the same
-    reason as the MinHash incremental pairing — the store side is
-    CORPUS-sized but the batch side scales with the micro-batch, so
-    AQE's byte-bounded runtime broadcast of the batch band keys keeps
-    cost ∝ batch, while a degenerate corpus-sized catch-up batch falls
-    back to a spillable sort-merge join.  The ``doc_new != doc_old``
-    identity guard keeps an at-least-once replay (own earlier write
-    already folded into a compacted store base) from matching itself.
-
-    ``dedup_pairs=False`` (round 14) skips the (doc_new, doc_old)
-    dropDuplicates — a whole extra exchange+aggregate — when the
-    CALLER already de-duplicates downstream at its own granularity: a
-    pair agreeing on k bands emerges k times, each copy verifies to
-    the same hamming, and ``media_containment_pairs``'s rollup
-    collapses them at the (probe doc, probe frame, index doc) triple
-    anyway.  Admit loops keep the default: their consumers treat each
-    pair row as one near-dup fact.
-
-    Plan shape (round 15, same as ``hamming_near_dups``): the band
-    keys carry the hash, the band join's output verifies in place, and
-    the optional pair de-dup runs over VERIFIED pairs — the two
-    join-backs that re-attached hashes to candidates are gone (they
-    re-shuffled the corpus-sized store per micro-batch when AQE
-    declined the broadcast)."""
+    ``dedup_pairs=False`` skips the (doc_new, doc_old) de-dup — an
+    exchange and aggregate — for a caller that de-duplicates at its own
+    granularity anyway (``media_containment_pairs``'s rollup); a pair
+    agreeing on k bands then appears k times.  Admit loops keep the
+    default: they treat each pair row as one near-dup fact."""
     _hamming_validate(bits, max_hamming, n_bands)
-    new_sims = new_hashes.select(
-        F.col(id_col).alias("doc_id"), F.col(hash_col).alias("__h__")
+    new, old = (
+        _hamming_band_keys(df, id_col, hash_col, bits, n_bands)
+        for df in (new_hashes, store)
     )
-    old_sims = store.select(
-        F.col(id_col).alias("doc_id"), F.col(hash_col).alias("__h__")
+    return _hamming_pairs(
+        new, old, max_hamming, self_join=False, dedup_pairs=dedup_pairs
     )
-    new_b = _hamming_band_keys(new_sims, bits, n_bands).select(
-        F.col("doc_id").alias("doc_new"), F.col("__h__").alias("ha"),
-        "band", "seg",
-    )
-    old_b = _hamming_band_keys(old_sims, bits, n_bands).select(
-        F.col("doc_id").alias("doc_old"), F.col("__h__").alias("hb"),
-        "band", "seg",
-    )
-    out = (
-        # unhinted: new_b is batch-scaled, old_b corpus-scaled — AQE's
-        # byte-bounded runtime broadcast ships the batch band keys,
-        # while a degenerate corpus-sized catch-up batch falls back to
-        # a spillable sort-merge join
-        new_b.join(old_b, ["band", "seg"])
-        .filter(F.col("doc_new") != F.col("doc_old"))
-        .withColumn("hamming", F.bit_count(F.expr("ha ^ hb")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_new", "doc_old", "hamming")
-    )
-    if dedup_pairs:
-        out = out.dropDuplicates(["doc_new", "doc_old"])
-    return out
 
 
 def simhash_expr(col: str, bits: int) -> str:

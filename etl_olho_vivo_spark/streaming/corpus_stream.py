@@ -18,7 +18,7 @@ Streaming `foreachBatch` loop:
 Scale + semantics notes:
 - the signature store is the ONLY state that grows with the corpus, and
   it is ~1% of corpus bytes; each batch touches it through a banded
-  equi-join on slim (band, band_sig) keys — the corpus text itself is
+  equi-join on slim (band, 64-bit key) rows — the corpus text itself is
   never re-read;
 - every store here is a batch-partitioned append store
   (``io/append_store.py`` carries the layout, the replay idempotence

@@ -345,45 +345,63 @@ def test_media_gates_dimension_floor_drops_undecodable(spark, dirs):
 
 
 @pytest.mark.sweep
-def test_incremental_pairing_broadcasts_batch_not_store(spark, tmp_path):
-    """The 100 TB contract of the unhinted batch-vs-store join: with a
-    store 2000x the batch, AQE must pick broadcast joins (the slim
-    batch side ships) — a SortMergeJoin in the final plan would mean
-    the corpus-sized store gets shuffled+sorted EVERY micro-batch."""
+@pytest.mark.parametrize("family", ["hamming", "minhash"])
+def test_incremental_pairing_broadcasts_batch_not_store(spark, tmp_path, family):
+    """The 100 TB contract of the unhinted batch-vs-store join, for both
+    pairing families: with a store 2000x the batch, AQE must pick
+    broadcast joins (the slim batch side ships) — a SortMergeJoin in
+    the final plan would mean the corpus-sized store gets
+    shuffled+sorted EVERY micro-batch."""
     from pyspark.sql import functions as F
 
     from etl_olho_vivo_spark.operators.dedup import (
         hamming_near_dups_incremental,
+        incremental_near_duplicates,
     )
+    from tests.plan_walk import count_nodes, executed_plan
 
-    store_path = str(tmp_path / "fpstore")
-    spark.range(20_000).select(
-        (F.col("id") + 1_000_000).alias("doc_id"),
-        # xxhash64 spreads ids over the full 64-bit space — realistic
-        # fingerprint entropy so banding produces few collisions
-        F.xxhash64("id").alias("fp"),
-    ).write.parquet(store_path)
+    # xxhash64 spreads seeds over the full 64-bit space — realistic
+    # fingerprint / MinHash entropy so banding produces few collisions
+    if family == "hamming":
+        cols = {"fp": "xxhash64(seed)"}
+    else:
+        cols = {
+            "sh": "transform(sequence(0, 3), k -> xxhash64(seed, k))",
+            "minhash": "transform(sequence(0, 7), k -> xxhash64(seed, k, 1))",
+        }
+
+    def frame(ids, seed):
+        return ids.select(
+            F.col("doc_id"), seed.alias("seed")
+        ).select("doc_id", *[F.expr(e).alias(c) for c, e in cols.items()])
+
+    store_path = str(tmp_path / "store")
+    store_ids = spark.range(20_000).select(
+        (F.col("id") + 1_000_000).alias("doc_id"), "id"
+    )
+    frame(store_ids, F.col("id")).write.parquet(store_path)
     store = spark.read.parquet(store_path)
-    # one batch fp copied verbatim from a store row: the single-join
-    # plan (round 15 — hash carried through the band join, no verify
-    # join-backs) must produce at least one surviving pair, or AQE's
-    # empty-relation propagation replaces the whole join with
-    # EmptyRelation and the strategy assertion below becomes vacuous
-    batch = spark.range(10).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") == 0, F.xxhash64(F.lit(7).cast("long")))
-        .otherwise(F.xxhash64("id", "id")).alias("fp"),
+    # one batch row copied verbatim from a store row: the pairing must
+    # produce at least one surviving pair, or AQE's empty-relation
+    # propagation replaces the whole join with EmptyRelation and the
+    # strategy assertion below becomes vacuous
+    batch_ids = spark.range(10).select(F.col("id").alias("doc_id"), "id")
+    batch = frame(
+        batch_ids,
+        F.when(F.col("id") == 0, F.lit(7).cast("long"))
+        .otherwise(F.col("id") + 100_000),
     )
-    out = hamming_near_dups_incremental(
-        batch, store, hash_col="fp", bits=64, max_hamming=6, n_bands=8
-    )
+    if family == "hamming":
+        out = hamming_near_dups_incremental(
+            batch, store, hash_col="fp", bits=64, max_hamming=6, n_bands=8
+        )
+    else:
+        out = incremental_near_duplicates(store=store, new_sig=batch)
     rows = out.collect()  # finalize the adaptive plan
-    assert rows, "expected the planted exact-fp pair to survive"
-    final = out._jdf.queryExecution().executedPlan().toString().split(
-        "== Initial Plan =="
-    )[0]
-    assert "BroadcastHashJoin" in final, final
-    assert "SortMergeJoin" not in final, final
+    assert rows, "expected the planted exact copy to survive"
+    counts = count_nodes(executed_plan(out))
+    assert counts["BroadcastHashJoinExec"] >= 1, counts
+    assert counts["SortMergeJoinExec"] == 0, counts
 
 
 @pytest.mark.sweep

@@ -508,6 +508,28 @@ def test_connected_components_chains_and_islands(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
+def test_connected_components_plan_does_not_grow_with_rounds(spark):
+    """Each round's labels start from one leaf: a 12-node chain (11
+    propagating rounds) yields the same result plan as a 3-node chain.
+    Nesting every round's cache under the next grew the plan text per
+    round until ``explainString`` ran the driver out of memory at 10k
+    documents."""
+    from etl_olho_vivo_spark.caching import CacheBag
+    from etl_olho_vivo_spark.operators.dedup import connected_components
+
+    plans = []
+    with CacheBag() as bag:
+        for n in (3, 12):
+            pairs = spark.createDataFrame(
+                [(i, i + 1) for i in range(1, n)], ["doc_a", "doc_b"]
+            )
+            comps = connected_components(pairs, caches=bag)
+            comp = {r["doc_id"]: r["component"] for r in comps.collect()}
+            assert comp == {i: 1 for i in range(1, n + 1)}
+            plans.append(count_nodes(executed_plan(comps), into_cache=True))
+    assert plans[0] == plans[1], plans
+
+
 def test_connected_components_vs_edge_greedy(spark):
     """Pairs (2,3) and (1,3): edge-greedy drops only doc 3 (the doc_b of
     both pairs), keeping 1 AND 2 even though they are transitively near;

@@ -7,10 +7,11 @@ Roots are the product entries, taken whole: ``__main__.py`` (the CLI),
 statement of the package (an import runs them).  A def is reached when
 a reached body names it as an ``ast.Name`` or ``ast.Attribute``: a bare
 name resolves to the module's own def or to what the module imported
-under that name, ``mod.attr`` resolves through an imported module, and
-an attribute on anything else (an object, a parameter) matches every
-top-level def of that name.  Names inside strings and docstrings are not
-references.  Reaching a class reaches its whole body.
+under that name, and ``mod.attr`` resolves through an imported module.
+An attribute on anything else (an object, a parameter) reaches nothing,
+so a field such as ``args.<name>`` cannot keep a dead def ``<name>``
+alive.  Names inside strings and docstrings are not references.
+Reaching a class reaches its whole body.
 """
 
 from __future__ import annotations
@@ -97,11 +98,6 @@ def _load() -> tuple[dict[str, _Module], list[_Module]]:
 def unreached() -> list[str]:
     """``module:name`` of every top-level def or class no root reaches."""
     package, roots = _load()
-    by_name: dict[str, list[tuple[str, str]]] = {}
-    for mod in package.values():
-        for name in mod.defs:
-            by_name.setdefault(name, []).append((mod.name, name))
-
     reached: set[tuple[str, str]] = set()
     work: list[tuple[_Module, list[ast.AST]]] = []
 
@@ -152,13 +148,9 @@ def unreached() -> list[str]:
                             reach(key)
                 elif isinstance(node, ast.Attribute):
                     base = module_of(mod, node.value)
-                    keys = (
-                        member(base, node.attr)
-                        if base is not None
-                        else by_name.get(node.attr, [])
-                    )
-                    for key in keys:
-                        reach(key)
+                    if base is not None:
+                        for key in member(base, node.attr):
+                            reach(key)
 
     for mod in roots:
         work.append((mod, mod.tree.body))

@@ -51,8 +51,19 @@ from tests.datagen import (
     replicate_embeddings,
     replicate_events,
 )
+from tests.plan_walk import (
+    cache_scans,
+    count_nodes,
+    executed_plan,
+    hash_shuffles,
+    node_name,
+    walk,
+)
 
 REPLICAS = 10
+#: class-name parts of the nodes that run Python UDFs (BatchEvalPython,
+#: ArrowEvalPython, MapInPandas, FlatMapGroupsInPandas, ...)
+_PYTHON = ("Python", "Pandas")
 
 
 @pytest.fixture(scope="module")
@@ -74,61 +85,72 @@ def scale10_dir(spark, tmp_path_factory):
     return d10
 
 
-def _final_plan(spark, name: str, sf_dir: str) -> tuple[str, int]:
-    """Execute the registered query and return (final adaptive plan, rows)."""
+def _final_plan(spark, name: str, sf_dir: str) -> tuple[object, int]:
+    """Execute the registered query and return (executed plan, rows).
+    Once executed, the plan walk sees AQE's final adaptive plan."""
     df = registry.REGISTRY[name].fn(spark, sf_dir)
     n = len(df.collect())
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     release_session_caches()
     return plan, n
 
 
+def _named(plan, part: str) -> int:
+    """Nodes under ``plan`` whose class name contains ``part``."""
+    return sum(v for name, v in count_nodes(plan).items() if part in name)
+
+
+def _shuffle_origins(plan) -> set[str]:
+    """Why each shuffle under ``plan`` exists (``REPARTITION_BY_NUM`` for
+    a user-numbered repartition, ``ENSURE_REQUIREMENTS`` for a planner
+    exchange)."""
+    return {
+        str(n.shuffleOrigin())
+        for n in walk(plan)
+        if node_name(n) == "ShuffleExchangeExec"
+    }
+
+
 @pytest.mark.slow
 def test_flagship_still_one_shuffle_at_10x(spark, scale10_dir):
-    plan, n = _final_plan(spark, "velocidades_agregadas", scale10_dir)
+    final, n = _final_plan(spark, "velocidades_agregadas", scale10_dir)
     assert n > 0
-    # AdaptiveSparkPlan prints Final Plan + Initial Plan sections once
-    # finalized; count shuffles in the final section only
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("Exchange hashpartitioning") == 1, final[:2000]
+    assert hash_shuffles(final) == 1, count_nodes(final)
 
 
 @pytest.mark.slow
 def test_ngram_pins_hold_at_10x(spark, scale10_dir):
-    plan, n = _final_plan(spark, "ngram_jaccard_pairs", scale10_dir)
+    final, n = _final_plan(spark, "ngram_jaccard_pairs", scale10_dir)
     assert n > 0
-    final = plan.split("== Initial Plan ==")[0]
     # corpus never broadcast, pair join spillable (merge pin)
-    assert "SortMergeJoin" in final, final[:2000]
-    assert "BroadcastHashJoin" not in final
+    assert _named(final, "SortMergeJoin") >= 1, count_nodes(final)
+    assert _named(final, "BroadcastHashJoin") == 0
     # the parallelism pin survives AQE (user-numbered repartition)
-    assert "REPARTITION_BY_NUM" in final
+    assert "REPARTITION_BY_NUM" in _shuffle_origins(final)
 
 
 @pytest.mark.slow
 def test_editdist_pins_hold_at_10x(spark, scale10_dir):
-    plan, n = _final_plan(spark, "doc_editdist_near_dup", scale10_dir)
+    final, n = _final_plan(spark, "doc_editdist_near_dup", scale10_dir)
     assert n > 0
-    final = plan.split("== Initial Plan ==")[0]
     # round-10 shape: exact-dup collapse + banded DP over distinct
     # representatives + member expansion — every corpus-scaled join
     # stays merge-pinned (AQE exchange/subplan reuse may fold some of
     # the seven logical joins, hence >= 3, but none may broadcast)
-    assert final.count("SortMergeJoin") >= 3, final[:2000]
-    assert "BroadcastHashJoin" not in final
+    assert _named(final, "SortMergeJoin") >= 3, count_nodes(final)
+    assert _named(final, "BroadcastHashJoin") == 0
     # the DP stage's block-key exchange stays pinned: each of its
     # output partitions does O(block²) DP work, so AQE's byte-based
     # coalescing would serialize a compute-bound stage.  (The collapse
     # and expansion exchanges are byte-bound and MAY coalesce — only
     # the pinned repartition must survive.)
-    assert "REPARTITION_BY_NUM" in final
+    assert "REPARTITION_BY_NUM" in _shuffle_origins(final)
 
 
 @pytest.mark.slow
 def test_minhash_shares_one_signature_pass_at_10x(spark, scale10_dir):
-    plan, n = _final_plan(spark, "minhash_near_dups", scale10_dir)
+    final, n = _final_plan(spark, "minhash_near_dups", scale10_dir)
     assert n > 0
-    final = plan.split("== Initial Plan ==")[0]
     # pair enumeration must never degrade to nested-loop.  NOTE: plain
     # BroadcastHashJoin is allowed HERE — this registry query includes
     # the batch-vs-store incremental kind, whose batch-scaled sides are
@@ -136,12 +158,12 @@ def test_minhash_shares_one_signature_pass_at_10x(spark, scale10_dir):
     # keep per-batch cost ∝ batch (the store is scanned, not shuffled);
     # the SELF-join path's no-broadcast invariant is pinned by
     # test_self_near_dup_never_broadcast_at_10x below
-    assert "CartesianProduct" not in final
-    assert "BroadcastNestedLoopJoin" not in final
+    assert _named(final, "CartesianProduct") == 0
+    assert _named(final, "BroadcastNestedLoopJoin") == 0
     # the persisted signature store still feeds every consumer (text
     # scan + md5 + shingle compute runs once, not once per consumer)
-    assert "TableCacheQueryStage" in final, final[:2000]
-    assert plan.count("InMemoryTableScan") >= 3, plan[:2000]
+    assert _named(final, "TableCacheQueryStage") >= 1, count_nodes(final)
+    assert len(cache_scans(final)) >= 3, count_nodes(final)
 
 
 @pytest.mark.slow
@@ -158,11 +180,10 @@ def test_self_near_dup_never_broadcast_at_10x(spark, scale10_dir):
     df = dedup.near_duplicates(docs, threshold=0.5, persist=False)
     n = len(df.collect())
     assert n > 0
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "BroadcastHashJoin" not in final, final[:2000]
-    assert "SortMergeJoin" in final
-    assert "CartesianProduct" not in final
+    final = executed_plan(df)
+    assert _named(final, "BroadcastHashJoin") == 0, count_nodes(final)
+    assert _named(final, "SortMergeJoin") >= 1
+    assert _named(final, "CartesianProduct") == 0
 
 
 @pytest.mark.slow
@@ -204,24 +225,21 @@ def test_embedding_cell_dial_bounds_pair_density(spark, scale10_dir):
 
 @pytest.mark.slow
 def test_embedding_pairs_blocked_join_at_10x(spark, scale10_dir):
-    plan, n = _final_plan(spark, "embedding_near_dup_pairs", scale10_dir)
+    final, n = _final_plan(spark, "embedding_near_dup_pairs", scale10_dir)
     assert n > 0
-    final = plan.split("== Initial Plan ==")[0]
     # pair enumeration is a shuffled SORT-MERGE equi join on cell_id —
     # nested-loop appears ONLY in the bounded 16-row centroid broadcast
     # of ivf_assign; the corpus-sized assignment sides are never
     # broadcast, and the join must stay spillable (merge pinned after
     # the starved probe showed broadcast AND hash builds OOM at 30×
     # density while SMJ spills and completes)
-    assert "CartesianProduct" not in final
-    assert "SortMergeJoin" in final
-    assert "BroadcastHashJoin" not in final
-    # one persisted assignment pass feeds both self-join sides; in the
-    # final adaptive section a cache read prints as TableCacheQueryStage
-    # (reused stages are not reprinted), so count consumers on the full
-    # plan string instead
-    assert "TableCacheQueryStage" in final, final[:2000]
-    assert plan.count("InMemoryTableScan") >= 2, plan[:2000]
+    assert _named(final, "CartesianProduct") == 0
+    assert _named(final, "SortMergeJoin") >= 1, count_nodes(final)
+    assert _named(final, "BroadcastHashJoin") == 0
+    # one persisted assignment pass feeds both self-join sides (AQE
+    # wraps each cache read in a TableCacheQueryStage)
+    assert _named(final, "TableCacheQueryStage") >= 1, count_nodes(final)
+    assert len(cache_scans(final)) >= 2, count_nodes(final)
 
 
 @pytest.mark.slow
@@ -238,15 +256,14 @@ def test_embedding_pairs_plan_pins_hold_with_dial_on(spark, scale10_dir):
 
     df = embedding_near_dup_frame(spark, scale10_dir, n_cells=160)
     n = len(df.collect())
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = executed_plan(df)
     release_session_caches()
     assert n > 0
-    final = plan.split("== Initial Plan ==")[0]
-    assert "CartesianProduct" not in final
-    assert "SortMergeJoin" in final
-    assert "BroadcastHashJoin" not in final
-    assert "TableCacheQueryStage" in final, final[:2000]
-    assert plan.count("InMemoryTableScan") >= 2, plan[:2000]
+    assert _named(final, "CartesianProduct") == 0
+    assert _named(final, "SortMergeJoin") >= 1, count_nodes(final)
+    assert _named(final, "BroadcastHashJoin") == 0
+    assert _named(final, "TableCacheQueryStage") >= 1, count_nodes(final)
+    assert len(cache_scans(final)) >= 2, count_nodes(final)
 
 
 @pytest.mark.slow
@@ -257,15 +274,14 @@ def test_trigram_lm_pins_hold_at_10x(spark, scale10_dir):
     read through the cache — no cartesian, no Python, no nested-loop,
     and the base aggregate feeding ctx AND ng as InMemoryTableScan
     consumers."""
-    plan, n = _final_plan(spark, "doc_trigram_cross_entropy", scale10_dir)
+    final, n = _final_plan(spark, "doc_trigram_cross_entropy", scale10_dir)
     assert n > 0
-    final = plan.split("== Initial Plan ==")[0]
     for bad in ("CartesianProduct", "BroadcastNestedLoopJoin",
-                "PythonUDF", "BatchEvalPython", "Window"):
-        assert bad not in final, final[:2000]
-    assert "HashAggregate" in final
+                *_PYTHON, "Window"):
+        assert _named(final, bad) == 0, count_nodes(final)
+    assert _named(final, "HashAggregate") >= 1
     # the cached single-scan base feeds both derived count relations
-    assert plan.count("InMemoryTableScan") >= 2, plan[:2000]
+    assert len(cache_scans(final)) >= 2, count_nodes(final)
 
 
 @pytest.mark.slow
@@ -278,15 +294,13 @@ def test_stupid_backoff_pins_hold_at_10x(spark, scale10_dir):
     rollup.  If a future change let a model relation grow past the
     broadcast pick, the corpus would shuffle 2(order-1) times — this
     is the probe that would catch it."""
-    plan, n = _final_plan(spark, "doc_stupid_backoff", scale10_dir)
+    final, n = _final_plan(spark, "doc_stupid_backoff", scale10_dir)
     assert n > 0
-    final = plan.split("== Initial Plan ==")[0]
     for bad in ("CartesianProduct", "BroadcastNestedLoopJoin",
-                "SortMergeJoin", "ShuffledHashJoin", "PythonUDF",
-                "BatchEvalPython", "Window"):
-        assert bad not in final, final[:2000]
-    assert final.count("BroadcastHashJoin") >= 5, final[:2000]
-    assert "HashAggregate" in final
+                "SortMergeJoin", "ShuffledHashJoin", *_PYTHON, "Window"):
+        assert _named(final, bad) == 0, count_nodes(final)
+    assert _named(final, "BroadcastHashJoin") >= 5, count_nodes(final)
+    assert _named(final, "HashAggregate") >= 1
 
 
 @pytest.mark.slow
@@ -354,14 +368,12 @@ def test_bloom_overlap_pins_hold_at_10x(spark, scale10_dir):
     df = registry.REGISTRY["bloom_gram_overlap"].fn(spark, scale10_dir)
     n = len(df.collect())
     assert n > 0
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = executed_plan(df)
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     release_session_caches()
-    final = plan.split("== Initial Plan ==")[0]
-    for bad in ("CartesianProduct", "BroadcastNestedLoopJoin",
-                "PythonUDF", "BatchEvalPython"):
-        assert bad not in final, final[:2000]
-    assert plan.count("InMemoryTableScan") >= 2, plan[:2000]
+    for bad in ("CartesianProduct", "BroadcastNestedLoopJoin", *_PYTHON):
+        assert _named(final, bad) == 0, count_nodes(final)
+    assert len(cache_scans(final)) >= 2, count_nodes(final)
     # the inlining-hazard guard: every Generate must explode a bare
     # cached ATTRIBUTE (sh#N), never an inlined shingle expression —
     # CollapseProject under a Generate would substitute the token-hash
@@ -391,14 +403,15 @@ def test_cluster_keep_best_pins_hold_at_10x(spark, scale10_dir):
     df = registry.REGISTRY["dedup_cluster_keep_best"].fn(spark, scale10_dir)
     rows = df.collect()
     assert rows
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = executed_plan(df)
     release_session_caches()
-    final = plan.split("== Initial Plan ==")[0]
     for bad in ("Window", "CartesianProduct", "BroadcastNestedLoopJoin",
-                "PythonUDF", "BatchEvalPython"):
-        assert bad not in final, final[:2000]
-    assert "HashAggregate" in final
-    assert plan.count("InMemoryTableScan") >= 2, plan[:2000]
+                *_PYTHON):
+        assert _named(final, bad) == 0, count_nodes(final)
+    # partial + final aggregate for the argmax; max over a struct buffer
+    # plans as SortAggregate, not HashAggregate
+    assert _named(final, "Aggregate") >= 2, count_nodes(final)
+    assert len(cache_scans(final)) >= 2, count_nodes(final)
     kept_per_comp = Counter(r["component"] for r in rows if r["kept"])
     comps = {r["component"] for r in rows}
     assert set(kept_per_comp) == comps  # every component keeps one
@@ -413,12 +426,10 @@ def test_kneser_ney_pins_hold_at_10x(spark, scale10_dir):
     happen at TRAIN time, never per scored window.  At 10× the final
     plan must keep every model join broadcast and the corpus side free
     of exchanges before the per-doc rollup."""
-    plan, n = _final_plan(spark, "doc_kneser_ney", scale10_dir)
+    final, n = _final_plan(spark, "doc_kneser_ney", scale10_dir)
     assert n > 0
-    final = plan.split("== Initial Plan ==")[0]
     for bad in ("CartesianProduct", "BroadcastNestedLoopJoin",
-                "SortMergeJoin", "ShuffledHashJoin", "PythonUDF",
-                "BatchEvalPython", "Window"):
-        assert bad not in final, final[:2000]
-    assert final.count("BroadcastHashJoin") >= 5, final[:2000]
-    assert "HashAggregate" in final
+                "SortMergeJoin", "ShuffledHashJoin", *_PYTHON, "Window"):
+        assert _named(final, bad) == 0, count_nodes(final)
+    assert _named(final, "BroadcastHashJoin") >= 5, count_nodes(final)
+    assert _named(final, "HashAggregate") >= 1
