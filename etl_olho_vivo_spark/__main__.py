@@ -1583,9 +1583,10 @@ def _media_dedup(spark, args) -> dict:
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from etl_olho_vivo_spark.caching import CacheBag
     from etl_olho_vivo_spark.operators.dedup import (
-        connected_components,
         hamming_near_dups,
+        resolve_drops,
     )
     from etl_olho_vivo_spark.streaming.media_stream import (
         apply_media_gates,
@@ -1604,54 +1605,51 @@ def _media_dedup(spark, args) -> dict:
         raise SystemExit(str(e))
     df = spark.read.parquet(args.in_dir)
     media = _media_frame(df, args, "--in table")
-    # one Arrow decode pass shared by gates, banding, and both
-    # verify sides (round 12: the CLI now runs the SAME
-    # fingerprint+gate path as the streaming admit loop)
-    fps = media_fingerprints(media, args.kind).persist()
-    admitted = apply_media_gates(fps, args.kind, gates)
     counts = {}
-    if gates:
-        # slim persisted frame: two bounded counts of telemetry
-        counts["gated_out"] = fps.count() - admitted.count()
-    pairs = hamming_near_dups(
-        admitted.filter(F.col("fp").isNotNull()),
-        hash_col="fp", bits=64,
-        max_hamming=args.max_hamming, n_bands=args.n_bands,
-    )
-    # the pair relation is reused (written + clustered): persist so
-    # the banding fan-in runs once; count rides the write via
-    # Observation — one action per sink, never a recompute
-    pairs = pairs.persist()
-    obs = Observation("media_pairs")
-    pairs.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-        "overwrite"
-    ).parquet(args.pairs_out)
-    counts["pairs"] = obs.get["rows"]
-    if args.survivors_out:
-        labels = connected_components(pairs)
-        losers = labels.filter(
-            F.col("doc_id") != F.col("component")
-        ).select(F.col("doc_id").alias(args.id_col))
-        sobs = Observation("media_survivors")
-        # gated-out rows are not survivors either (they never
-        # entered the corpus candidate set)
-        survivors = df
+    with CacheBag() as bag:
+        # one Arrow decode pass shared by gates, banding, and both
+        # verify sides: the same fingerprint+gate path as the
+        # streaming admit loop
+        fps = bag.add(media_fingerprints(media, args.kind))
+        admitted = apply_media_gates(fps, args.kind, gates)
         if gates:
-            survivors = survivors.join(
-                admitted.select(F.col("doc_id").alias(args.id_col)),
-                args.id_col, "left_semi",
+            # slim persisted frame: two bounded counts of telemetry
+            counts["gated_out"] = fps.count() - admitted.count()
+        # the pair relation is reused (written + clustered): persist so
+        # the banding fan-in runs once; count rides the write via
+        # Observation — one action per sink, never a recompute
+        pairs = bag.add(hamming_near_dups(
+            admitted.filter(F.col("fp").isNotNull()),
+            hash_col="fp", bits=64,
+            max_hamming=args.max_hamming, n_bands=args.n_bands,
+        ))
+        obs = Observation("media_pairs")
+        pairs.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(args.pairs_out)
+        counts["pairs"] = obs.get["rows"]
+        if args.survivors_out:
+            losers = resolve_drops(pairs, "components", caches=bag).select(
+                F.col("doc_id").alias(args.id_col)
             )
-        # losers scales with the corpus' duplicate fraction —
-        # merge-pinned like every symmetric corpus-scaled join
-        # (the round-7 starved-driver lesson)
-        survivors = survivors.join(losers.hint("merge"), args.id_col,
-                                   "left_anti")
-        survivors.observe(
-            sobs, F.count(F.lit(1)).alias("rows")
-        ).write.mode("overwrite").parquet(args.survivors_out)
-        counts["survivors"] = sobs.get["rows"]
-    pairs.unpersist()
-    fps.unpersist()
+            sobs = Observation("media_survivors")
+            # gated-out rows are not survivors either (they never
+            # entered the corpus candidate set)
+            survivors = df
+            if gates:
+                survivors = survivors.join(
+                    admitted.select(F.col("doc_id").alias(args.id_col)),
+                    args.id_col, "left_semi",
+                )
+            # losers scales with the corpus' duplicate fraction —
+            # merge-pinned like every symmetric corpus-scaled join (a
+            # broadcast of it runs a small JVM heap out of memory)
+            survivors = survivors.join(losers.hint("merge"), args.id_col,
+                                       "left_anti")
+            survivors.observe(
+                sobs, F.count(F.lit(1)).alias("rows")
+            ).write.mode("overwrite").parquet(args.survivors_out)
+            counts["survivors"] = sobs.get["rows"]
     return {"command": "media-dedup", "kind": args.kind, **counts}
 
 

@@ -598,54 +598,51 @@ def connected_components(
     """Connected components over near-dup pairs → (doc_id, component).
 
     The component label is the MIN doc_id reachable through the pair
-    graph — the canonical "cluster survivor" convention.  Iterative
-    hash-min label propagation: each round pushes every node's current
-    label across its edges and keeps the minimum (one join + one
-    groupBy per round, both hash-shuffles on doc_id); rounds needed =
-    graph diameter, and near-dup clusters are shallow (pairs chain
-    through shared content), so convergence is typically 2-4 rounds.
-    Deterministic: min() over any orderable id type, no seeds.
-    Raises if the graph hasn't converged after ``max_iter`` rounds
-    rather than returning a silently-wrong clustering.
+    graph.  Iterative hash-min label propagation: each round pushes
+    every node's current label across its edges and keeps the minimum
+    (one join + one groupBy per round, both hash-shuffles on doc_id);
+    rounds needed = graph diameter, and near-dup clusters are shallow,
+    so convergence is typically 2-4 rounds.  Deterministic: min() over
+    any orderable id type.  Raises after ``max_iter`` rounds without a
+    fixpoint rather than return a silently-wrong clustering.
 
-    This is the exact resolution whose cheap approximation is the corpus
-    pipeline's edge-greedy drop (plans/corpus.py): greedy keeps a doc
-    that is only *transitively* near another survivor, components does
-    not.
+    Edges: one pass over ``pairs`` inlines each row in both orientations
+    into a persisted symmetric edge frame, which the node set and every
+    round read, so an expensive pair plan (MinHash verify joins) runs
+    once.  One bounded probe of that frame settles the empty graph (most
+    streaming micro-batches): no round runs, and the empty result is a
+    ``limit(0)``, which reads nothing, so it outlives the edge cache.
 
     Result lifecycle: every round's labels are a ``CacheBag.cut``, so
     round k's plan starts from one leaf instead of nesting the cached
-    build plans of rounds 1..k-1 (nested caches re-print that lineage
-    into every plan render and SQL event; at 10k documents the text
+    build plans of rounds 1..k-1 (at 10k documents the nested text
     grew until ``explainString`` ran the driver out of memory).  Each
-    round releases the previous round's blocks once its own labels are
-    stored.  The final round's cut moves to ``caches`` (or the session
-    bag) — it is already materialized by that round's own action, so
-    no copy is made — and the caller releases it after consuming.
+    round releases the previous round's blocks once its own are stored;
+    the final cut moves to ``caches`` (or the session bag), and the
+    caller releases it after consuming.
 
-    Per round: ONE action.  The fixpoint check rides the propagation
-    aggregate — the old label is one tagged branch of the union the
-    groupBy already consumes, so the new label ``min(comp)`` and the
-    old one ``min(comp) WHERE old`` come out of the same
-    partial-aggregating shuffle, and ``changed`` is an aggregate over
-    the labels the round stores anyway.  min and < work for string ids
-    too, where a sum()-based checksum would NULL out and declare false
-    convergence.  Comparing old and new labels with an extra per-round
-    join instead measured slower: it defeats AQE's post-shuffle
-    coalescing.
+    Per round: ONE action.  The old label is one tagged branch of the
+    union the groupBy already consumes, so the new label ``min(comp)``
+    and the old one ``min(comp) WHERE old`` come out of the same
+    partial-aggregating shuffle, and the fixpoint flag is an aggregate
+    over the labels the round stores anyway.  min and < work for string
+    ids too, where a sum()-based checksum would NULL out.  An extra
+    per-round join of old and new labels measured slower: it defeats
+    AQE's post-shuffle coalescing.
     """
-    edges = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    both = pairs.select(F.inline(F.array(
+        F.struct(F.col(a).alias("src"), F.col(b).alias("dst")),
+        F.struct(F.col(b).alias("src"), F.col(a).alias("dst")),
+    ))).persist()
     held = CacheBag()  # the current round's labels
-    labels = held.cut(nodes.withColumn("comp", F.col("node")))
-    both = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
     try:
+        if both.limit(1).count() == 0:
+            return both.select(
+                F.col("src").alias("doc_id"), F.col("dst").alias("component")
+            ).limit(0)
+        # symmetric edges: every node is some edge's src
+        nodes = both.select(F.col("src").alias("node")).distinct()
+        labels = held.cut(nodes.withColumn("comp", F.col("node")))
         for _ in range(max_iter):
             msgs = both.join(
                 labels, both.src == labels.node
@@ -674,8 +671,7 @@ def connected_components(
                 (F.col("comp") < F.col("__old_comp__")).alias("__chg__"),
             ))
             # ONE action: the full-scan aggregate stores the round's
-            # labels AND returns the fixpoint flag (None on an empty
-            # graph = trivially converged)
+            # labels AND returns the fixpoint flag
             changed = bool(
                 new_labels.agg(F.max("__chg__")).collect()[0][0]
             )
@@ -712,9 +708,8 @@ def keep_best_per_component(
     duplicates to drop.
 
     Returns (id_col, component, quality_col, kept) for every node of
-    the pair graph.  Docs with no near-dup pair are not emitted — they
-    are trivially kept and a caller filters them through unchanged
-    (left-anti join on this result's ``kept = false`` rows).  Ids must
+    the pair graph; docs in no pair are not emitted (they are kept,
+    ``resolve_drops``' keep_best convention).  Ids must
     be numeric (the smallest-id tiebreak rides the ``-id`` component of
     one max(struct) aggregate); string-keyed corpora map ids through a
     dense numeric surrogate first, which they need for the MinHash
@@ -731,14 +726,7 @@ def keep_best_per_component(
     (cardinality = number of clusters, hot only if one cluster
     dominates — which AQE skew-split handles since the probe side
     carries slim rows).
-
-    The greedy edge-drop in plans/corpus.py is the cheap approximation
-    of this operator; this one is exact and quality-aware.
     """
-    # the pair relation is consumed twice inside connected_components
-    # (node extraction + the symmetric edge frame) — persist it so an
-    # expensive pair pipeline (MinHash verify joins) runs once
-    pairs = _persist(pairs.select(a, b), caches)
     comps = connected_components(pairs, a=a, b=b, caches=caches)
     # labeled feeds BOTH the per-component argmax and the final kept
     # join — persisted, or each side re-runs the comps-quality join
@@ -764,6 +752,56 @@ def keep_best_per_component(
         quality_col,
         (F.col(id_col) == F.col("kept_id")).alias("kept"),
     )
+
+
+RESOLUTIONS = ("greedy", "components", "keep_best")
+
+
+def resolve_drops(
+    pairs: DataFrame,
+    resolution: str,
+    *,
+    caches: "CacheBag | None",
+    quality: DataFrame | None = None,
+) -> DataFrame:
+    """The doc ids a near-dup pair graph drops → (doc_id).
+
+    ``pairs`` is (doc_a, doc_b, ...) with ``doc_a < doc_b``, as every
+    pairing in this module emits; a doc in no pair is never dropped.
+    ``resolution`` is one of ``RESOLUTIONS``:
+
+    - ``"greedy"``: every pair drops its larger id, ``doc_b`` — one
+      distinct, no iteration.  It can keep a doc that is only
+      *transitively* near a survivor: pairs (2,3) and (1,3) drop 3 and
+      keep both 1 and 2.
+    - ``"components"``: each :func:`connected_components` cluster keeps
+      its min id.  Exact, and a superset of greedy's drops: a pair's
+      ``doc_b`` shares a cluster with the smaller ``doc_a``, so it is
+      never the cluster's min.
+    - ``"keep_best"``: each cluster keeps its highest-quality doc, ties
+      to the smallest id (:func:`keep_best_per_component`): as many
+      drops as components, not always the same ones.  It needs
+      ``quality``, a (doc_id, score) frame.
+
+    The clustering resolutions keep their caches in ``caches`` (the
+    session bag when None) until the caller releases it.
+    """
+    if resolution not in RESOLUTIONS:
+        raise ValueError(
+            f"dedup_resolution must be {'|'.join(RESOLUTIONS)}, "
+            f"got {resolution!r}"
+        )
+    if resolution == "greedy":
+        return pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+    if resolution == "components":
+        labels = connected_components(pairs, caches=caches)
+        return labels.filter(
+            F.col("doc_id") != F.col("component")
+        ).select("doc_id")
+    resolved = keep_best_per_component(
+        pairs, quality, quality_col=quality.columns[1], caches=caches
+    )
+    return resolved.filter(~F.col("kept")).select("doc_id")
 
 
 def incremental_near_duplicates(

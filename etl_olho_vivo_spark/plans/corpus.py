@@ -28,16 +28,10 @@ Scale notes (the 100 TB story):
   (``operators/dedup.py``): candidate generation shuffles slim band-key
   rows, verification is bounded by the candidate count, and the drop
   list is an anti-join — the corpus itself is never self-joined;
-- pair→drop resolution defaults to edge-greedy (every verified pair
-  drops its larger doc_id): one join, no iteration, but a doc that is
-  only *transitively* near a survivor can slip through.
-  ``dedup_resolution="components"`` swaps in the exact clustering
-  (``dedup.connected_components`` hash-min label propagation, one
-  join+groupBy per round, diameter rounds) and keeps each cluster's min
-  doc_id — its drop set is always a superset of greedy's.
-  ``dedup_resolution="keep_best"`` keeps each cluster's highest-
-  quality_score doc instead (``dedup.keep_best_per_component``) — same
-  drop-set size as components, quality-aware survivor choice;
+- pair→drop resolution is ``dedup.resolve_drops``: edge-greedy by
+  default (one distinct, no iteration), or ``dedup_resolution=
+  "components"`` / ``"keep_best"`` for the exact clustering; its
+  docstring states the three conventions;
 - inter-snapshot dedup (``snapshot_filter_dir``): docs whose 3-gram
   overlap with a previous crawl's persisted Bloom filter reaches the
   threshold are dropped BEFORE within-corpus dedup — the prior crawl is
@@ -257,11 +251,11 @@ def run_corpus(
         raise ValueError(
             f"snapshot_overlap must be in (0, 1], got {snapshot_overlap}"
         )
-    if dedup_resolution not in ("greedy", "components", "keep_best"):
-        # validated HERE too: the resolution stage runs after the band
+    if dedup_resolution not in dedup.RESOLUTIONS:
+        # validated up front: the resolution stage runs after the band
         # join has already shuffled the corpus
         raise ValueError(
-            f"dedup_resolution must be greedy|components|keep_best, "
+            f"dedup_resolution must be {'|'.join(dedup.RESOLUTIONS)}, "
             f"got {dedup_resolution!r}"
         )
     d = read_table(spark, sf_dir, "documents")
@@ -336,42 +330,15 @@ def run_corpus(
         kept = kept.join(survivors, ["fp_md5", "doc_id"], "left_semi")
         stats["exact_dedup"] = kept.count()
 
-        # near-dup removal; two resolutions of the pair graph:
-        # - greedy: every verified pair drops its larger doc_id (single
-        #   join, no iteration; can keep transitively-near docs)
-        # - components: connected-components clustering, keep each
-        #   cluster's min doc_id (exact; drops a superset of greedy)
-        pairs = dedup.near_duplicates(
-            kept.select("doc_id", "text"),
-            threshold=jaccard_threshold,
-            caches=sig_caches,
+        # near-dup removal under the chosen pair→drop convention
+        drops = dedup.resolve_drops(
+            dedup.near_duplicates(
+                kept.select("doc_id", "text"),
+                threshold=jaccard_threshold, caches=sig_caches,
+            ),
+            dedup_resolution, caches=drop_caches,
+            quality=kept.select("doc_id", "quality_score"),
         )
-        if dedup_resolution == "components":
-            comp = dedup.connected_components(pairs, caches=drop_caches)
-            drops = comp.filter(
-                F.col("doc_id") != F.col("component")
-            ).select("doc_id")
-        elif dedup_resolution == "keep_best":
-            # quality-aware resolution (SemDeDup/FineWeb): same exact
-            # clustering, but each cluster keeps its highest-
-            # quality_score doc (ties to smallest doc_id) instead of
-            # blindly the min id — the drop SET SIZE matches
-            # components (one survivor per cluster), the survivor
-            # choice differs
-            resolved = dedup.keep_best_per_component(
-                pairs,
-                kept.select("doc_id", "quality_score"),
-                quality_col="quality_score",
-                caches=drop_caches,
-            )
-            drops = resolved.filter(~F.col("kept")).select("doc_id")
-        elif dedup_resolution == "greedy":
-            drops = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-        else:
-            raise ValueError(
-                f"dedup_resolution must be greedy|components|keep_best, "
-                f"got {dedup_resolution!r}"
-            )
         # eagerly materialize the (small) drop list so the LSH band +
         # verify joins never re-execute, then release the signature
         # store near_duplicates cached for them.  drop_caches lives
@@ -722,7 +689,7 @@ def run_corpus(
         prof.unpersist()
         # idempotent: sig_caches is normally already empty here, but an
         # exception between near_duplicates and the explicit release
-        # (e.g. the dedup_resolution ValueError) must not leak it
+        # must not leak it
         sig_caches.release()
         drop_caches.release()
         stage_caches.release()

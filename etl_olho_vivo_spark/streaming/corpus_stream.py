@@ -42,6 +42,24 @@ from etl_olho_vivo_spark.io import append_store
 from etl_olho_vivo_spark.operators import dedup
 
 
+def _check_stream_resolution(dedup_resolution: str) -> None:
+    """Reject ``keep_best`` and unknown names.  The stream's cross-batch
+    contract is admitted-first-wins (a store doc beats a batch doc,
+    whatever its quality), so keep-best could only hold within one
+    micro-batch — a silent divergence from the batch pipeline, where
+    ``dedup_resolution="keep_best"`` re-dedups offline instead."""
+    if dedup_resolution == "keep_best":
+        detail = (
+            "keep_best is batch-only: the stream's admitted-first "
+            "contract overrides quality across batches"
+        )
+    elif dedup_resolution in dedup.RESOLUTIONS:
+        return
+    else:
+        detail = f"got {dedup_resolution!r}"
+    raise ValueError(f"dedup_resolution must be greedy|components ({detail})")
+
+
 def admit_batch(
     spark: SparkSession,
     batch: DataFrame,
@@ -98,36 +116,16 @@ def admit_batch(
     first).  Idempotent per ``batch_id``: each replay overwrites the
     batch's own partition directory, even when it admits zero docs.
 
-    ``dedup_resolution`` picks the in-batch pair→drop convention and
-    mirrors the batch pipeline's dial (round 13, unifying the
-    conventions the way round 12 unified the media loop):
-
-    - ``"greedy"`` (default — the batch pipeline's default too): every
-      verified pair drops its larger doc_id; one join, no iteration.
-    - ``"components"``: connected-components clustering keeping each
-      cluster's min doc_id — the exact convention
-      ``media_stream.admit_media_batch`` uses, with the same empty-pair
-      fast path (most micro-batches have no in-batch pair; one bounded
-      probe skips the resolution's driver round-trips, exactly —
-      components of an empty graph are empty).
-    - ``"keep_best"`` is REJECTED: the stream's cross-batch contract is
-      admitted-first-wins (a store doc always beats a batch doc,
-      whatever its quality), so a quality-aware survivor choice could
-      only ever apply within one micro-batch — claiming keep-best
-      semantics while delivering them per-batch would be the silent
-      divergence this dial exists to remove.  Re-dedup offline with
-      ``dedup_resolution="keep_best"`` in the batch pipeline instead.
-
-    Matching resolutions => matching survivor sets: for identical
-    input presented as one batch to this loop (no store, no gates) and
-    to ``plans.corpus``'s near-dup stage, greedy==greedy and
-    components==components produce identical survivors
-    (tests/test_corpus_stream.py pins both).  Across MULTIPLE
-    micro-batches the stream is still order-dependent by design —
-    first-seen wins and signatures of dropped docs never enter the
-    store, so a chain A~B~C (A≁C) split across batches keeps C where
-    the global batch clustering drops it.  That residual divergence is
-    inherent to single-pass ingestion, not a convention mismatch.
+    ``dedup_resolution`` picks the in-batch pair→drop convention, the
+    batch pipeline's dial: ``"greedy"`` (the default, as there) or
+    ``"components"`` (``dedup.resolve_drops`` states both).
+    ``"keep_best"`` is rejected: across batches the admitted-first
+    contract overrides quality (``_check_stream_resolution``).  One
+    batch with no store and no gates admits exactly the batch
+    pipeline's survivors under the same resolution.  Across batches
+    the stream is order-dependent by design: first-seen wins, so a
+    chain A~B~C (A≁C) split across batches keeps C where the batch
+    clustering drops it.
 
     ``eval_grams_dir`` additionally decontaminates each batch against a
     persisted eval gram store (``decontam.write_eval_gram_store``):
@@ -154,16 +152,7 @@ def admit_batch(
 
     # the replay succeeds after append_store.compact recovers the swap
     assert_no_pending_swap(spark, store_dir)
-    if dedup_resolution not in ("greedy", "components"):
-        detail = (
-            "keep_best is batch-only: the stream's admitted-first "
-            "contract overrides quality across batches"
-            if dedup_resolution == "keep_best"
-            else f"got {dedup_resolution!r}"
-        )
-        raise ValueError(
-            f"dedup_resolution must be greedy|components ({detail})"
-        )
+    _check_stream_resolution(dedup_resolution)
     if gates:
         from etl_olho_vivo_spark.plans.corpus import gate_documents
 
@@ -204,22 +193,10 @@ def admit_batch(
                 "doc_id", "sh", "minhash"
             )
         )
-        pairs = dedup.near_duplicates(sig=sig, threshold=threshold)
-        if dedup_resolution == "components":
-            # the media loop's convention and fast path, verbatim
-            # (media_stream.admit_media_batch): persist the pair frame
-            # (emptiness probe + iterative resolution both consume it),
-            # skip the propagation when the batch has no pair at all
-            pairs = bag.add(pairs)
-            if pairs.limit(1).count() == 0:
-                drops = spark.createDataFrame([], "doc_id long")
-            else:
-                labels = dedup.connected_components(pairs, caches=bag)
-                drops = labels.filter(
-                    F.col("doc_id") != F.col("component")
-                ).select("doc_id")
-        else:  # greedy: every verified pair drops its larger doc_id
-            drops = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+        drops = dedup.resolve_drops(
+            dedup.near_duplicates(sig=sig, threshold=threshold),
+            dedup_resolution, caches=bag,
+        )
         surv_sig = sig.join(drops, "doc_id", "left_anti")
 
         store = append_store.read_store(
@@ -313,17 +290,7 @@ def run_corpus_stream(
     """
     spark = docs_stream.sparkSession
 
-    if dedup_resolution not in ("greedy", "components"):
-        # same message as admit_batch — fail before the stream starts
-        detail = (
-            "keep_best is batch-only: the stream's admitted-first "
-            "contract overrides quality across batches"
-            if dedup_resolution == "keep_best"
-            else f"got {dedup_resolution!r}"
-        )
-        raise ValueError(
-            f"dedup_resolution must be greedy|components ({detail})"
-        )
+    _check_stream_resolution(dedup_resolution)  # before the stream starts
 
     if stats_dims and stats_dir is None:
         raise ValueError("stats_dims requires stats_dir")

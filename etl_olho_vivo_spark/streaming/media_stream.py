@@ -17,16 +17,12 @@ Per micro-batch (``admit_media_batch``):
                            pairing, the corpus, or the store, exactly
                            like the text loop's pre-signature gates
     3. in-batch near-dup — pigeonhole Hamming self-join over the batch
-                           fingerprints; pairs resolved through
-                           connected components keeping the min-id per
-                           component — the SAME survivor convention as
-                           the ``media-dedup`` CLI, so batch and stream
-                           admit identical survivor sets for identical
-                           input (round 12, per ADVICE; round 13 gave
-                           the TEXT corpus loop the same choice as a
-                           ``dedup_resolution`` dial mirroring the
-                           batch pipeline's — see
-                           ``corpus_stream.admit_batch``).  The
+                           fingerprints, resolved by
+                           ``dedup.resolve_drops(..., "components")``
+                           (keep the min id per component) — the SAME
+                           survivor convention as the ``media-dedup``
+                           CLI, so batch and stream admit identical
+                           survivor sets for identical input.  The
                            pair graph is batch-sized, so the iterative
                            resolution costs a few batch-local rounds
     4. store near-dup    — ``hamming_near_dups_incremental`` vs the
@@ -61,6 +57,7 @@ from etl_olho_vivo_spark.operators.dedup import (
     _hamming_validate,
     hamming_near_dups,
     hamming_near_dups_incremental,
+    resolve_drops,
 )
 
 FP_BITS = 64
@@ -211,7 +208,6 @@ def admit_media_batch(
     per-partition overwrite."""
     from etl_olho_vivo_spark.caching import CacheBag
     from etl_olho_vivo_spark.io.fsutil import assert_no_pending_swap
-    from etl_olho_vivo_spark.operators.dedup import connected_components
 
     _hamming_validate(FP_BITS, max_hamming, n_bands)
     if frame_index_dir is not None and kind != "video":
@@ -224,35 +220,23 @@ def admit_media_batch(
     # one decode pass, four consumers (gates, self-join, store join,
     # store append) — persist the slim fingerprint frame, never the
     # media; the gates ride the same frame, so they cost no decode
-    fps = media_fingerprints(
-        batch.select("doc_id", "media"), kind
-    ).persist()
-    bag = CacheBag()
-    try:
+    with CacheBag() as bag:
+        fps = bag.add(
+            media_fingerprints(batch.select("doc_id", "media"), kind)
+        )
         admitted = apply_media_gates(fps, kind, gates)
         printable = admitted.filter(F.col("fp").isNotNull())
 
-        # in-batch: resolve the pair graph through connected components
-        # (keep the min id per component) — the exact convention the
-        # media-dedup CLI uses, so a corpus admitted through the stream
-        # and one deduped in batch agree on the survivor set.  The
-        # graph is batch-sized; the pair frame is persisted (`bag`)
-        # because the emptiness probe below and the iterative
-        # resolution both consume it.  MOST micro-batches carry no
-        # in-batch near-dup pair at all, so one bounded action skips
-        # the resolution's several driver round-trips on that path —
-        # the skip is exact (components of an empty graph are empty)
-        in_pairs = bag.add(hamming_near_dups(
-            printable, hash_col="fp", bits=FP_BITS,
-            max_hamming=max_hamming, n_bands=n_bands,
-        ))
-        if in_pairs.limit(1).count() == 0:
-            losers = spark.createDataFrame([], "doc_id long")
-        else:
-            labels = connected_components(in_pairs, caches=bag)
-            losers = labels.filter(
-                F.col("doc_id") != F.col("component")
-            ).select("doc_id")
+        # in-batch: components keep the min id per component — the
+        # media-dedup CLI's convention, so a corpus admitted through
+        # the stream and one deduped in batch agree on the survivors
+        losers = resolve_drops(
+            hamming_near_dups(
+                printable, hash_col="fp", bits=FP_BITS,
+                max_hamming=max_hamming, n_bands=n_bands,
+            ),
+            "components", caches=bag,
+        )
 
         surv_fps = printable.select("doc_id", "fp").join(
             losers.dropDuplicates(["doc_id"]), "doc_id", "left_anti"
@@ -314,9 +298,6 @@ def admit_media_batch(
             append_store.write_batch(
                 media_stats(admitted_fps, kind), stats_dir, batch_id
             )
-    finally:
-        fps.unpersist()
-        bag.release()
 
 
 def media_store_stats(spark: SparkSession, store_dir: str) -> dict:

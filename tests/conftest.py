@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from etl_olho_vivo_spark.session import get_spark
@@ -13,5 +15,8 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="etl-olho-vivo-tests", cpus=8)
+    s = get_spark(
+        app_name="etl-olho-vivo-tests",
+        cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"),
+    )
     yield s

@@ -1,4 +1,4 @@
-"""Structural walks over a DataFrame's physical plan.
+"""Structural walks over a DataFrame's physical or logical plan.
 
 Tests pin plan shape by operator class, not by substrings of explain
 text: a cached relation reprints its own build plan, so a substring
@@ -7,6 +7,8 @@ count sees every nested cache layer again.  The walk follows
 plan — the final one once the frame has executed) and into query
 stages, and descends into a cached relation's build plan
 (``InMemoryTableScanExec.relation().cachedPlan()``) only when asked.
+A logical plan (``optimized_plan``) walks the same way, and
+``expressions`` walks the expression trees a plan node holds.
 """
 
 from __future__ import annotations
@@ -18,8 +20,16 @@ def executed_plan(df):
     return df._jdf.queryExecution().executedPlan()
 
 
+def optimized_plan(df):
+    return df._jdf.queryExecution().optimizedPlan()
+
+
 def node_name(node) -> str:
     return node.getClass().getSimpleName()
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
 
 
 def _children(node, into_cache: bool) -> list:
@@ -28,8 +38,7 @@ def _children(node, into_cache: bool) -> list:
         return [node.executedPlan()]
     if name.endswith("QueryStageExec"):
         return [node.plan()]
-    kids = node.children()
-    out = [kids.apply(i) for i in range(kids.size())]
+    out = _seq(node.children())
     if into_cache and name == "InMemoryTableScanExec":
         out.append(node.relation().cachedPlan())
     return out
@@ -45,6 +54,16 @@ def walk(node, into_cache: bool = False):
 def count_nodes(node, into_cache: bool = False) -> Counter:
     """Node class names under ``node`` -> occurrences."""
     return Counter(node_name(n) for n in walk(node, into_cache))
+
+
+def expressions(node):
+    """Every expression in ``node``'s own expression trees, depth
+    first (not those of its child plans)."""
+    stack = list(_seq(node.expressions()))
+    while stack:
+        expr = stack.pop()
+        yield expr
+        stack.extend(_seq(expr.children()))
 
 
 def cache_scans(node) -> list:

@@ -8,6 +8,7 @@ import json
 import pytest
 
 from etl_olho_vivo_spark.__main__ import main
+from etl_olho_vivo_spark.caching import SESSION_BAG
 
 
 @pytest.mark.sweep
@@ -1076,10 +1077,16 @@ def test_media_dedup_subcommand_image(spark, tmp_path, capsys):
     )
     pairs_out = str(tmp_path / "pairs")
     surv_out = str(tmp_path / "survivors")
+    jmap = spark.sparkContext._jsc.getPersistentRDDs
+    held, bagged = jmap().size(), len(SESSION_BAG)
     assert main(["--cpus", "8", "media-dedup", "--in", src,
                  "--kind", "image", "--pairs-out", pairs_out,
                  "--survivors-out", surv_out,
                  "--max-hamming", "0", "--n-bands", "1"]) == 0
+    # every cache the run made (fingerprints, pairs, component labels)
+    # is released before it returns
+    assert len(SESSION_BAG) == bagged
+    assert jmap().size() == held
     stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert stats == {"command": "media-dedup", "kind": "image",
                      "pairs": 1, "survivors": 4}

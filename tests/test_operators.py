@@ -508,6 +508,47 @@ def test_connected_components_chains_and_islands(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
+@pytest.mark.parametrize("n_pairs,max_jobs", [(0, 7), (3, 20)])
+def test_components_resolution_job_cost(spark, n_pairs, max_jobs):
+    """The components resolution of a 40-doc MinHash batch, pairing
+    included, counted in Spark jobs.  The bounds hold only while the
+    pair plan runs once, into one persisted symmetric edge frame that
+    the node set and every round read, and an empty graph stops at
+    that frame's probe without a propagation round."""
+    import random
+
+    from etl_olho_vivo_spark.caching import CacheBag
+
+    rng = random.Random(0)
+    texts = [
+        " ".join(f"w{rng.randrange(2000)}" for _ in range(30))
+        for _ in range(40)
+    ]
+    for i in range(n_pairs):
+        texts[20 + i] = texts[i]
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    sc = spark.sparkContext
+    group = f"components-job-cost-{n_pairs}"
+    with CacheBag() as bag:
+        sig = bag.add(
+            dedup.minhash_signature(df).select("doc_id", "sh", "minhash")
+        )
+        sig.count()
+        sc.setJobGroup(group, "components resolution")
+        try:
+            drops = dedup.resolve_drops(
+                dedup.near_duplicates(sig=sig), "components", caches=bag
+            )
+            got = sorted(r["doc_id"] for r in drops.collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == list(range(20, 20 + n_pairs))
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= max_jobs, jobs
+
+
 def test_connected_components_plan_does_not_grow_with_rounds(spark):
     """Each round's labels start from one leaf: a 12-node chain (11
     propagating rounds) yields the same result plan as a 3-node chain.
